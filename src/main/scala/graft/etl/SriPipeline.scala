@@ -118,7 +118,10 @@ object SriPipeline {
     * pruning. Marca is a dim attribute (functionally dependent on
     * ID_Vehiculo), broadcast-joined in for the sort key only and dropped
     * before writing: rows, values, and schema are untouched (left join
-    * on the dim's unique surrogate key — no fan-out).
+    * on the dim's unique surrogate key — no fan-out). The file count is
+    * therefore sized from the fact's own statistics (exact, from the
+    * surrogate-key pass), never from the joined frame, whose estimate
+    * without CBO is the product of both sides' sizes.
     */
   private[etl] def layoutFact(fact: DataFrame, dimVehiculo: DataFrame): DataFrame = {
     import org.apache.spark.sql.functions.{broadcast, col}
@@ -129,9 +132,9 @@ object SriPipeline {
           broadcast(dimVehiculo.select(col("ID_Vehiculo"), col("Marca").as("__marca"))),
           Seq("ID_Vehiculo"), "left")
       else fact.withColumn("__marca", org.apache.spark.sql.functions.lit(null).cast("string"))
+    val numFiles = graft.operators.Layout.fileCount(fact, targetFileBytes = 128L << 20)
     graft.operators.Layout
-      .clusterBySize(keyed, Seq("Anio", "__marca"), targetFileBytes = 128L << 20,
-        tiebreakCol = Some("ID_Registro"))
+      .clusterBy(keyed, Seq("Anio", "__marca"), numFiles, tiebreakCol = Some("ID_Registro"))
       .drop("__marca")
       .select(fact.columns.map(col): _*)
   }

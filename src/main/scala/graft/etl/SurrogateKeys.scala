@@ -3,6 +3,10 @@ package graft.etl
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
+import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.expressions.{BoundReference, JoinedRow, SpecificInternalRow, UnsafeProjection, UnsafeRow}
+import org.apache.spark.sql.graftbridge.RowsBridge
+import org.apache.spark.sql.types.LongType
 
 /** Dense sequential surrogate keys (1..n) — the reference's
   * `range(1, len(df)+1)` (ref dags/sri_vehiculos_etl_dag.py:70,161,245,534).
@@ -24,15 +28,6 @@ object SurrogateKeys {
     df.withColumn(idName, row_number().over(w).cast("long"))
   }
 
-  /** Scale path: dense ids over an arbitrarily large table without a global
-    * single-partition sort. Three steps:
-    *   1. range-repartition + intra-partition sort on the key (a true total
-    *      order across partitions, each partition sorted locally);
-    *   2. count rows per partition (one tiny job), prefix-sum on the driver
-    *      (numPartitions values — trivially small);
-    *   3. mapPartitions adds offset + local index.
-    * Cost: one extra pass over the data; no 2 GB single-partition ceiling.
-    */
   /** Incremental allocation for a warehouse dim that loads in rounds: keys
     * already in `existing` KEEP their ids (re-keying would break every fact
     * FK already written), and only natural keys new in `incoming` get fresh
@@ -61,24 +56,56 @@ object SurrogateKeys {
       .unionByName(keyed.select(keyCols :+ col(idName): _*))
   }
 
+  /** Scale path: dense ids over an arbitrarily large table without a global
+    * single-partition sort. Three steps, all on Catalyst's `InternalRow`s
+    * (no conversion to and from external `Row`s):
+    *   1. range-repartition + intra-partition sort on the key (a true total
+    *      order across partitions, each partition sorted locally);
+    *   2. count rows and their bytes per partition (one tiny job),
+    *      prefix-sum the counts on the driver (numPartitions values —
+    *      trivially small);
+    *   3. mapPartitions joins each row with offset + local index through
+    *      an `UnsafeProjection`; the second pass reuses step 1's shuffle.
+    * The result is a `LogicalRDD` carrying the EXACT row count and size
+    * from step 2, so size-driven planning downstream (broadcast choices,
+    * [[graft.operators.Layout.fileCount]]) sees the table's real size
+    * rather than `spark.sql.defaultSizeInBytes`.
+    * Cost: one extra pass over the data; no 2 GB single-partition ceiling.
+    */
   def withScalableId(df: DataFrame, idName: String, order: Seq[Column], numPartitions: Int = 0): DataFrame = {
     val parts = if (numPartitions > 0) numPartitions
                 else df.sparkSession.sessionState.conf.numShufflePartitions
     val sorted = df.repartitionByRange(parts, order: _*).sortWithinPartitions(order: _*)
     val schema = sorted.schema
-    val rdd = sorted.rdd
-    val counts = rdd.mapPartitionsWithIndex { case (i, it) => Iterator((i, it.size.toLong)) }
-      .collect().sortBy(_._1).map(_._2)
+    val n = schema.length
+    // one RDD for both passes, so the id pass reads the shuffle files the
+    // count pass wrote instead of shuffling again
+    val rows = sorted.queryExecution.toRdd
+    // a sort emits UnsafeRows; the id adds one 8-byte slot and, every 64
+    // fields, one null-bitset word
+    val idBytes = 8L + UnsafeRow.calculateBitSetWidthInBytes(n + 1) -
+      UnsafeRow.calculateBitSetWidthInBytes(n)
+    val (counts, sizes) = rows.mapPartitions { it =>
+      var rowsIn, bytes = 0L
+      it.foreach { r => rowsIn += 1; bytes += r.asInstanceOf[UnsafeRow].getSizeInBytes + idBytes }
+      Iterator((rowsIn, bytes))
+    }.collect().unzip
     val offsets = counts.scanLeft(1L)(_ + _) // ids start at 1
-    val withId = rdd.mapPartitionsWithIndex { case (i, it) =>
-      var n = offsets(i)
-      it.map { row =>
-        val r = org.apache.spark.sql.Row.fromSeq(row.toSeq :+ n)
-        n += 1
-        r
+    val outFields = schema.fields.toSeq.zipWithIndex.map { case (f, i) =>
+      BoundReference(i, f.dataType, f.nullable)
+    } :+ BoundReference(n, LongType, nullable = false)
+    val withId = rows.mapPartitionsWithIndex[InternalRow] { (i, it) =>
+      val project = UnsafeProjection.create(outFields)
+      val id = new SpecificInternalRow(Seq(LongType))
+      val joined = new JoinedRow
+      var next = offsets(i)
+      it.map { r =>
+        id.setLong(0, next)
+        next += 1
+        project(joined(r, id))
       }
     }
-    df.sparkSession.createDataFrame(withId,
-      schema.add(idName, org.apache.spark.sql.types.LongType, nullable = false))
+    RowsBridge.fromInternalRows(df.sparkSession, schema.add(idName, LongType, nullable = false),
+      withId, rowCount = counts.sum, sizeInBytes = sizes.sum)
   }
 }

@@ -48,11 +48,32 @@ object Layout {
     * parallelism upstream (it removes the exchange), while compaction
     * must keep reading wide and only narrow at the write.
     */
-  def compactBySize(df: DataFrame, targetFileBytes: Long): DataFrame = {
+  def compactBySize(df: DataFrame, targetFileBytes: Long): DataFrame =
+    df.repartition(fileCount(df, targetFileBytes))
+
+  /** Output file count for ~`targetFileBytes` files: ceil(plan bytes /
+    * target) from Catalyst's plan-time size statistic, at least 1. The
+    * statistic is the true size for file sources and for
+    * [[graft.etl.SurrogateKeys.withScalableId]] output (projections over
+    * them scale it by row width). On other transform plans it can be
+    * garbage-large: an RDD-backed relation without statistics reads as
+    * `spark.sql.defaultSizeInBytes`, and without CBO join size estimates
+    * MULTIPLY (a 92k-row fact plan estimating petabytes once drove a
+    * 10^6-reducer range shuffle writing 10^5 files). The count is
+    * therefore CLAMPED to max(64, 8 × shuffle partitions) as a backstop:
+    * at local test scale that is a handful of files, on a 1000-executor
+    * cluster (shuffle.partitions in the thousands) it still allows tens
+    * of thousands of files, and a caller wanting more makes that an
+    * explicit act by raising shuffle partitions. A caller that knows a
+    * better size source than the frame it lays out (a join that only adds
+    * a sort key) sizes from that source rather than lean on the clamp.
+    */
+  def fileCount(df: DataFrame, targetFileBytes: Long): Int = {
     require(targetFileBytes > 0, s"targetFileBytes must be > 0, got $targetFileBytes")
     val planBytes = df.queryExecution.optimizedPlan.stats.sizeInBytes
-    val numFiles = (planBytes + targetFileBytes - 1) / targetFileBytes
-    df.repartition(numFiles.min(BigInt(1 << 20)).max(BigInt(1)).toInt)
+    val cap = math.max(64, df.sparkSession.sessionState.conf.numShufflePartitions * 8)
+    ((planBytes + targetFileBytes - 1) / targetFileBytes)
+      .min(BigInt(cap)).max(BigInt(1)).toInt
   }
 
   /** BigQuery-style SORTED clustering for a (possibly partitioned)
@@ -64,29 +85,17 @@ object Layout {
     * realization of BigQuery `clustering_fields` (lexicographic block
     * sort), as distinct from [[zOrderBy]] (interleaved-bit layout for
     * independent per-column pruning). File count targets
-    * ~`targetFileBytes` from Catalyst's plan-time size statistic, as in
-    * [[compactBySize]].
+    * ~`targetFileBytes` via [[fileCount]], as in [[compactBySize]].
     */
   def clusterBySize(df: DataFrame, clusterCols: Seq[String],
                     targetFileBytes: Long,
-                    tiebreakCol: Option[String] = None): DataFrame = {
+                    tiebreakCol: Option[String] = None): DataFrame =
+    clusterBy(df, clusterCols, fileCount(df, targetFileBytes), tiebreakCol)
+
+  /** [[clusterBySize]]'s layout into exactly `numFiles` range partitions. */
+  def clusterBy(df: DataFrame, clusterCols: Seq[String], numFiles: Int,
+                tiebreakCol: Option[String] = None): DataFrame = {
     require(clusterCols.nonEmpty, "clusterCols must be non-empty")
-    require(targetFileBytes > 0, s"targetFileBytes must be > 0, got $targetFileBytes")
-    // Unlike compactBySize (file-source relations, where sizeInBytes is
-    // the true on-disk total), this runs on arbitrary transform plans —
-    // and without CBO, join size estimates MULTIPLY, so the stat can be
-    // garbage-large (a 92k-row fact plan estimating petabytes drove a
-    // 10^6-reducer range shuffle writing 10^5 files). The size-based
-    // count is therefore CLAMPED to 8× the configured shuffle
-    // parallelism: at local test scale that is a handful of files, on a
-    // 1000-executor cluster (shuffle.partitions in the thousands) it
-    // still allows tens of thousands of files, and a caller wanting
-    // more makes that an explicit act by raising shuffle partitions.
-    val planBytes = df.queryExecution.optimizedPlan.stats.sizeInBytes
-    val cap = math.max(64,
-      df.sparkSession.sessionState.conf.numShufflePartitions * 8)
-    val numFiles = ((planBytes + targetFileBytes - 1) / targetFileBytes)
-      .min(BigInt(cap)).max(BigInt(1)).toInt
     // The tiebreak is LOAD-BEARING at scale: a range partitioner can
     // never split EQUAL keys, so low-cardinality cluster columns (one
     // year, a handful of brands) would land each whole (year, brand)

@@ -122,6 +122,41 @@ class SriPipelineSpec extends SparkTestBase {
     assert(dash.length === 10)
   }
 
+  test("hermetic: a year-partitioned fact is one file per Anio with dense ID_Registro") {
+    // In-memory raw frame, no sample CSV: 300 source rows whose dates
+    // PARSE (the probed 'FECHA PROCESO' header) across 2021-2023. A fact
+    // this small must be written as one file per year; a layout sized from
+    // a statistic-less or join-shaped plan hits the 64-file backstop at
+    // any size.
+    val rows = (0 until 300).map { i =>
+      val date = s"${1 + i % 12}/${1 + i % 28}/${2021 + i % 3}"
+      org.apache.spark.sql.Row(
+        (i % 3).toLong, 1000L + i, Seq("COMPRA LOCAL", "IMPORTACION")(i % 2),
+        Seq("TOYOTA", "KIA", "CHEVROLET", "HYUNDAI")(i % 4), s"M${i % 9}", "JAPON",
+        2015.0 + i % 8, "AUTOMOVIL", "SEDAN", "LIVIANO", 10000.0 + i, date,
+        Seq("PARTICULAR", "PUBLICO")(i / 2 % 2), 1600.0, "GASOLINA", date,
+        10701.0 + i % 5 * 100, "BLANCO", if (i % 5 == 0) null else "NEGRO",
+        Seq("NATURAL", "JURIDICA")(i / 3 % 2))
+    }
+    val raw = spark.createDataFrame(java.util.Arrays.asList(rows: _*), Schemas.csvSchema)
+      .withColumnRenamed("FECHA PROCESO (DD/MM/AA)", "FECHA PROCESO")
+    val outH = java.nio.file.Files.createTempDirectory("graft-wh-hermetic").toString
+    val wh = ParquetWarehouse(spark, outH,
+      partitionCols = Map("fact_registro_vehiculos" -> Seq("Anio")))
+    val res = SriPipeline.runRaw(spark, raw, wh,
+      clock = java.time.LocalDate.of(2026, 1, 15), minRecords = 1L)
+    val yearDirs = new java.io.File(s"$outH/fact_registro_vehiculos").listFiles()
+      .filter(_.getName.startsWith("Anio="))
+    assert(yearDirs.map(_.getName).sorted.toSeq === Seq("Anio=2021", "Anio=2022", "Anio=2023"))
+    yearDirs.foreach { d =>
+      val files = d.listFiles().map(_.getName).filter(_.endsWith(".parquet"))
+      assert(files.length === 1, s"${d.getName} holds ${files.length} parquet files")
+    }
+    val ids = res.fact.select("ID_Registro").collect().map(_.getLong(0)).sorted
+    assert(ids.length > 300, "the J3 fan-out multiplies source rows")
+    assert(ids.toSeq === (1L to ids.length.toLong))
+  }
+
   test("year-partitioned fact: a year-filtered metrics query SKIPS files at read time") {
     // The CSV read names columns POSITIONALLY (explicit schema), so a
     // CSV-sourced run always takes the clock date fallback (one Anio

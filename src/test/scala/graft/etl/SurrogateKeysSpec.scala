@@ -55,4 +55,33 @@ class SurrogateKeysSpec extends SparkTestBase {
       .map(r => r.getAs[String]("v") -> r.getAs[Long]("id")).toMap
     assert(out === Map("a" -> 1L, "b" -> 2L, "c" -> 3L))
   }
+
+  test("scalable id output carries the exact row count and a finite size") {
+    // a relation without statistics reads as spark.sql.defaultSizeInBytes,
+    // which sends every size-driven layout downstream to its clamp
+    val df = spark.range(0, 1234).select(col("id"), (col("id") % 7).as("k"))
+    val stats = SurrogateKeys.withScalableId(df, "sid", Seq(col("k"), col("id")), numPartitions = 3)
+      .queryExecution.optimizedPlan.stats
+    assert(stats.rowCount === Some(BigInt(1234)))
+    assert(stats.sizeInBytes > 0 &&
+      stats.sizeInBytes < spark.sessionState.conf.defaultSizeInBytes,
+      s"sizeInBytes=${stats.sizeInBytes}")
+  }
+
+  test("string (with nulls), double, date and long columns round-trip through the id pass") {
+    val rows = (0 until 500).map { i =>
+      (i.toLong,
+       if (i % 5 == 0) null else s"s${i % 37}",
+       if (i % 11 == 0) null else "ÁÑ-" * (i % 4),
+       i * 0.25 - 3.0,
+       java.sql.Date.valueOf(java.time.LocalDate.of(2020, 1, 1).plusDays(i % 400L)))
+    }
+    val df = rows.toDF("l", "s", "u", "d", "dt")
+    val out = SurrogateKeys.withScalableId(df, "sid", Seq(col("s"), col("l")), numPartitions = 4)
+    assert(out.schema === df.schema.add("sid", "long", nullable = false))
+    def key(r: org.apache.spark.sql.Row) = r.getLong(0)
+    assert(out.drop("sid").collect().sortBy(key).toSeq === df.collect().sortBy(key).toSeq)
+    val ids = out.select("sid").collect().map(_.getLong(0)).sorted
+    assert(ids.toSeq === (1L to 500L))
+  }
 }

@@ -44,6 +44,20 @@ class LayoutSpec extends SparkTestBase {
     assert(Layout.compactBySize(li, target).count() === li.count())
   }
 
+  test("compactBySize clamps a statistic-less plan to the shared backstop") {
+    // an RDD-backed relation without statistics reads as
+    // spark.sql.defaultSizeInBytes: unclamped, a 1 KB target asks for
+    // millions of partitions
+    val rdd = spark.sparkContext.parallelize(Seq(org.apache.spark.sql.Row(1L)))
+    val df = spark.createDataFrame(rdd, new org.apache.spark.sql.types.StructType().add("x", "long"))
+    val cap = math.max(64, spark.sessionState.conf.numShufflePartitions * 8)
+    assert(Layout.fileCount(df, 1024L) === cap)
+    val parts = Layout.compactBySize(df, 1024L).queryExecution.optimizedPlan.collectFirst {
+      case r: org.apache.spark.sql.catalyst.plans.logical.Repartition => r.numPartitions
+    }
+    assert(parts === Some(cap))
+  }
+
   test("clusterBySize: files within a partitioned write carry disjoint cluster ranges") {
     // fact-shaped table: 4 years × skewed marcas; cluster on (anio, marca),
     // then write partitioned by anio — every file inside a year directory
