@@ -3,8 +3,8 @@ package graft
 import org.apache.spark.sql.SparkSession
 
 /** Benchmark main: times every SparkEntry query on SPARK_GRAFT_SF_DIR.
-  * Writes the FULL record {"metric":...,"queries":{...},"spread":{...},
-  * "recheck":{...}} to BENCH_local.json (override: SPARK_GRAFT_BENCH_OUT)
+  * Writes the FULL record {"metric":...,"queries":{...},"spread":{...},...}
+  * to BENCH_local.json (override: SPARK_GRAFT_BENCH_OUT)
   * plus a per-core-count snapshot BENCH_local_c$cpus.json (so a second
   * scaling run cannot overwrite the first sweep's detail), and prints ONE
   * compact JSON line (metric/value/unit/queries/sf) as the LAST stdout
@@ -20,34 +20,18 @@ import org.apache.spark.sql.SparkSession
   * additionally pays JIT + codegen + file-listing costs a warm cluster
   * would not — the median absorbs that too.
   *
-  * Self-annotation of contention noise: every round a handful of
-  * unchanged queries drift ~+0.3s from same-JVM contention (115 queries
-  * share one heap; JIT/GC state when a query's turn comes is luck), and
-  * adjudicating those costs reviewer time each round. If a baseline
-  * record exists (`BENCH_BASELINE.json` in the cwd, the previous round's
-  * local bench; override with SPARK_GRAFT_BASELINE), any query whose
-  * median regressed >25% AND >0.2s vs baseline is re-run in ISOLATION
-  * after the sweep (post-GC, nothing interleaved) and reported under
-  * "recheck" with a MECHANICAL verdict — "contention" iff
-  * isolated_min <= baseline * 1.05, else "regression" — so adjudication
-  * is a numeric rule, never a per-round judgment call (rounds 9 and 10
-  * both flagged the free-text margin; this pins it).
-  * The primary queries/spread/total numbers stay untouched measurements.
+  * SPARK_GRAFT_ONLY + SPARK_GRAFT_RUNS time a subset of queries at a chosen
+  * run count (the per-query probe); per-layer attribution of a pipeline run
+  * comes from the repository benchmark's traced round
+  * (`graftbench/run.py --trace 1`).
   *
-  * r14 additions:
-  *   - "regression" pre-verdicts are SELF-ADJUDICATED to a "final" of
-  *     "drift" or "code" by re-running the flagged queries from the
-  *     pinned baseline jar in a child JVM ([[BaselineJar]]) — the manual
-  *     worktree bisect of rounds 11-13, automated.
   * r15 addition — the WALL-CLOCK BUDGET (`SPARK_GRAFT_BENCH_BUDGET_SEC`,
   * default 600): the r14 driver bench timed out (rc 124) because sweep
   * wall time grows with the registry. The sweep now degrades per-query
   * run counts (nRuns→…→1) when its remaining-work projection would
-  * overrun 80% of the budget, stops isolation rechecks past 92%, and
-  * launches the child-JVM adjudication only if its cost estimate fits —
-  * recording every decision under "budget"/"runs_used" so a degraded
-  * number is never mistaken for a full median. Local full-fidelity
-  * sweeps set the budget high (e.g. 36000).
+  * overrun 80% of the budget — recording every decision under
+  * "budget"/"runs_used" so a degraded number is never mistaken for a full
+  * median. Local full-fidelity sweeps set the budget high (e.g. 36000).
   * r16 addition — the HEADLINE/ROTATION split ([[BenchHeadline]]): the
   * budget preserved the signal but degraded 201/202 queries to single
   * runs; now a pinned headline subset always runs first at full run
@@ -123,14 +107,11 @@ object Bench {
     require(nRuns >= 1, s"SPARK_GRAFT_RUNS must be >= 1, got $nRuns")
     // Wall-clock budget (VERDICT r14 item 1): the r14 driver bench timed
     // out (rc 124) — sweep wall time grows linearly with the registry
-    // (198 queries × 3 runs + rechecks + adjudication child JVMs no
-    // longer fit the driver's window), and it gets worse every round
-    // queries are added. The budget makes the sweep SELF-LIMITING instead
-    // of hoping the window is big enough: per-query run counts degrade
-    // nRuns→…→1 when the remaining-work projection overruns the sweep's
-    // 80% share, the post-sweep isolation rechecks stop past 92% of
-    // budget, and the child-JVM adjudication only launches if its
-    // estimated cost still fits. Every decision is RECORDED ("budget"
+    // (198 queries × 3 runs no longer fit the driver's window), and it
+    // gets worse every round queries are added. The budget makes the sweep
+    // SELF-LIMITING instead of hoping the window is big enough: per-query
+    // run counts degrade nRuns→…→1 when the remaining-work projection
+    // overruns the sweep's 80% share. Every decision is RECORDED ("budget"
     // object + "runs_used" per degraded query) so a 1-run number is never
     // mistaken for a 3-run median. Default 600 s in-JVM leaves JVM +
     // session startup headroom under the driver's observed >=14-minute
@@ -257,158 +238,17 @@ object Bench {
       System.err.println(
         s"[window-census] UNAUDITED partition-less window warning(s) from: " +
           unaudited.mkString(", ") + " — audit in WindowAudits or fix the plan")
-    val baselinePath = sys.env.getOrElse("SPARK_GRAFT_BASELINE", "BENCH_BASELINE.json")
-    // an unreadable/empty baseline (e.g. SPARK_GRAFT_BASELINE=/dev/null to
-    // disable the recheck) must mean "no baseline", not a crash AFTER the
-    // whole sweep already ran
-    val baseline: Map[String, Double] =
-      if (java.nio.file.Files.exists(java.nio.file.Paths.get(baselinePath))) {
-        import org.json4s._
-        scala.util.Try {
-          org.json4s.jackson.JsonMethods.parse(
-              java.nio.file.Files.readString(java.nio.file.Paths.get(baselinePath))) \ "queries" match {
-            case JObject(fields) => fields.collect {
-              case (k, JDouble(v)) => k -> v
-              case (k, JInt(v)) => k -> v.toDouble
-            }.toMap
-            case _ => Map.empty[String, Double]
-          }
-        }.getOrElse(Map.empty)
-      } else Map.empty
-    // Two recheck triggers: (a) median regressed >25% and >0.2s vs the
-    // baseline record; (b) the query has NO baseline entry (first round it
-    // exists) and its own in-sweep spread is suspicious (median > 2× min
-    // and >1s) — a newcomer measured only under full-sweep contention
-    // would otherwise enter the record inflated and unannotated (q117 in
-    // round 7: 39s sweep median, 7.6s isolated). A baseline-absent query
-    // is judged against its own isolated re-run instead of a baseline.
-    val suspects = results.filter { case (name, med, (mn, _), _, _, _) =>
-      med >= 0 && (baseline.get(name) match {
-        case Some(b) => b > 0 && med > b * 1.25 && med - b > 0.2
-        case None    => mn > 0 && med > mn * 2 && med - mn > 1.0
-      })
-    }
-    var isoSkipped = 0
-    val isoChecked = suspects.map { case (name, med, _, _, _, _) =>
-      val b0 = baseline.getOrElse(name, -1.0)
-      // budget gate: isolation re-runs past 92% of budget would push the
-      // process into the driver's kill window — record the skip instead
-      if (wallElapsed() > budgetSec * 0.92) {
-        isoSkipped += 1
-        (name, b0, med, -1.0, "budget_skipped")
-      } else {
-      System.gc()
-      val iso = (1 to nRuns).map { _ =>
-        val t = try time(sink(selected(name)(spark, sfDir))) catch { case _: Throwable => -1.0 }
-        spark.catalog.clearCache() // between runs, same as the sweep loop
-        t
-      }.filter(_ >= 0)
-      val isoMin = if (iso.isEmpty) -1.0 else iso.min
-      val b = b0
-      // the codified rule: an isolated re-run that lands within 5% of
-      // baseline PLUS a 0.05s absolute epsilon proves the sweep number
-      // was contention; anything above is an honest regression to chase.
-      // The absolute term matters for sub-second queries: with the
-      // documented ±10-20% hourly host drift, a pure-relative rule would
-      // demand millisecond-exact isolation and mislabel drift as
-      // regression (ADVICE r11).
-      val verdict =
-        if (b > 0) { if (isoMin >= 0 && isoMin <= b * 1.05 + 0.05) "contention" else "regression" }
-        else { if (isoMin >= 0 && isoMin <= med / 2) "contention" else "unconfirmed" }
-      (name, b, med, isoMin, verdict)
-      }
-    }
-    // Self-adjudication (r13 verdict item 8): a "regression" pre-verdict
-    // only proves the number is elevated vs the RECORD — it cannot say
-    // whether the HOST moved or the CODE did (rounds 11-13 each burned a
-    // task hand-bisecting exactly this). One child-JVM Bench sweep of the
-    // flagged queries from the pinned baseline jar answers it in-process:
-    // same host, same hour, old binary. `final` carries the adjudicated
-    // verdict; `verdict` stays the mechanical pre-verdict for continuity.
-    val regressed = isoChecked.collect { case (n, _, _, _, "regression") => n }
-    // budget gate for the 4 child-JVM launches (2 reps × 2 sides): each
-    // pays ~25 s JVM+session startup plus the flagged queries' run time;
-    // if the estimate no longer fits, skip and RECORD it — a "regression"
-    // final without adjudication is then explicitly unadjudicated-by-
-    // budget, not a code verdict
-    val regressedMedSum =
-      isoChecked.collect { case (n, _, med, _, "regression") if med > 0 => med }.sum
-    val adjEstimate = 4 * (25.0 + regressedMedSum * nRuns)
-    val adjFits = wallElapsed() + adjEstimate <= budgetSec
-    val adjStatus =
-      if (regressed.isEmpty) "none"
-      else if (adjFits) "run"
-      else { System.err.println(
-        s"[bench-budget] skipping child-JVM adjudication of ${regressed.size} " +
-          f"regression pre-verdict(s): elapsed ${wallElapsed()}%.0f s + estimate " +
-          f"$adjEstimate%.0f s exceeds budget $budgetSec%.0f s"); "budget_skipped" }
-    // SYMMETRIC adjudication (r14 lesson): the parent JVM at the end of a
-    // full sweep is a polluted measurement environment (code cache, GC,
-    // plan caches) — comparing its HEAD numbers against a PRISTINE child
-    // running the pinned jar mislabeled 12 drift queries `code` in the
-    // r14 final sweep (all 12 re-adjudicated to drift by the fresh-child
-    // interleave). Both sides therefore run through the SAME child-JVM
-    // path: HEAD from its own code location, the baseline from the jar.
-    // Two INTERLEAVED reps per side (head, jar / jar, head), minima merged
-    // per query: a single child launch per side still eats this host's
-    // minute-scale load envelope (adjacent fresh children differ 20-50%
-    // on sub-second queries); interleaving puts both binaries in the
-    // same minutes, the tools.Adjudicate discipline.
-    val (jarMinima, headChildMinima): (Map[String, Double], Map[String, Double]) =
-      if (adjStatus != "run") (Map.empty, Map.empty)
-      else BaselineJar.resolve() match {
-        case Some(jar) =>
-          def minMerge(a: Map[String, Double], b: Map[String, Double]) =
-            (a.keySet ++ b.keySet).map { k =>
-              k -> math.min(a.getOrElse(k, Double.MaxValue), b.getOrElse(k, Double.MaxValue))
-            }.toMap
-          val headLoc = BaselineJar.ownCodeLocation
-          var headM = Map.empty[String, Double]
-          var jarM = Map.empty[String, Double]
-          // ALTERNATE which side launches first per rep: the child that
-          // runs right after the parent's sweep (or after another child's
-          // teardown) eats that teardown's residual load; with a fixed
-          // head-first order that tax lands on HEAD every rep and minima
-          // can't wash it out (observed as a uniform ~15-25% head-child
-          // overhead across unrelated queries in the r14 final sweeps —
-          // every instance re-adjudicated to drift by tools.Adjudicate)
-          (1 to 2).foreach { rep =>
-            val sides: Seq[() => Unit] = Seq(
-              () => headLoc.foreach { loc =>
-                headM = minMerge(headM, BaselineJar.benchMinima(loc, sfDir, regressed, nRuns, cpus))
-              },
-              () => { jarM = minMerge(jarM, BaselineJar.benchMinima(jar, sfDir, regressed, nRuns, cpus)) })
-            (if (rep % 2 == 1) sides else sides.reverse).foreach(_.apply())
-          }
-          (jarM, headM)
-        case None => (Map.empty, Map.empty)
-      }
-    val recheck = isoChecked.map { case (name, b, med, isoMin, verdict) =>
-      val (jarField, finalV) = verdict match {
-        case "regression" => jarMinima.get(name) match {
-          case Some(c) =>
-            val headMin = headChildMinima.get(name)
-            val headField = headMin.map(h => s""","head_child_min":$h""").getOrElse("")
-            (s""","baseline_jar_min":$c$headField""",
-              BaselineJar.adjudicate(headMin.getOrElse(isoMin), c))
-          case None => ("", "regression") // no jar / old registry lacks it
-        }
-        case v => ("", v)
-      }
-      "\"" + name +
-        s"""":{"baseline":$b,"med":$med,"isolated_min":$isoMin,"verdict":"$verdict"$jarField,"final":"$finalV"}"""
-    }.mkString("{", ",", "}")
     // Two output surfaces (round-7 driver artifact lesson: BENCH_r07.json
     // captured only a truncated text tail of stdout, so `parsed` came back
-    // null). The FULL record — spread + recheck, ~20KB at 125 queries —
+    // null). The FULL record — spread + telemetry, ~20KB at 125 queries —
     // goes to a file; stdout gets ONE compact JSON line (the driver's
     // documented contract shape: metric/value/unit/queries/sf) printed
     // LAST, after the session is released, so no Spark shutdown logging
     // can interleave into or follow the parseable line.
     val budgetJson =
-      s"""{"budget_sec":$budgetSec,"sweep_wall_sec":$sweepWall,"wall_sec":${wallElapsed()},"degraded_queries":${degraded.size},"skipped_queries":${degraded.count(_._2 == 0)},"iso_skipped":$isoSkipped,"adjudication":"$adjStatus","headline_n":${headQ.size},"headline_degraded":${headlineDegraded.size},"rotation_offset":$rotationOffset}"""
+      s"""{"budget_sec":$budgetSec,"sweep_wall_sec":$sweepWall,"wall_sec":${wallElapsed()},"degraded_queries":${degraded.size},"skipped_queries":${degraded.count(_._2 == 0)},"headline_n":${headQ.size},"headline_degraded":${headlineDegraded.size},"rotation_offset":$rotationOffset}"""
     val full =
-      s"""{"metric":"total","value":$total,"unit":"sec","queries":$qs,"spread":$spread,"runs":$nRuns,"runs_used":$runsUsedJson,"skipped":$skippedJson,"budget":$budgetJson,"recheck":$recheck,"window_warns":$winJson,"telemetry":$telemetryJson,"window_unaudited":$unauditedJson,"sf":"$sfDir"}"""
+      s"""{"metric":"total","value":$total,"unit":"sec","queries":$qs,"spread":$spread,"runs":$nRuns,"runs_used":$runsUsedJson,"skipped":$skippedJson,"budget":$budgetJson,"window_warns":$winJson,"telemetry":$telemetryJson,"window_unaudited":$unauditedJson,"sf":"$sfDir"}"""
     val outPath = sys.env.getOrElse("SPARK_GRAFT_BENCH_OUT", "BENCH_local.json")
     java.nio.file.Files.writeString(java.nio.file.Paths.get(outPath), full + "\n")
     // cpu-stamped snapshot of the same record (VERDICT r16 item 1): the
@@ -420,38 +260,43 @@ object Bench {
       s"_c$cpus.json"
     java.nio.file.Files.writeString(java.nio.file.Paths.get(stampedPath), full + "\n")
     Sessions.release(spark, owned)
-    // Per-query map restored to the LAST stdout line under a hard size cap
-    // (VERDICT r16 item 1). History: the driver parses this line from a
-    // 2000-char stdout TAIL — the r7 AND r8 records both came back
-    // `parsed: null` because the full queries map (~5.4KB at 209 queries)
-    // head-truncated the line out of that tail; r9 dropped the map
-    // entirely, which blinded PERF's per-query and scaling comparisons
-    // ever since. Neither extreme works, so fill `queries` greedily under
-    // a budget that keeps the WHOLE line safely inside the tail (1800
-    // chars, leaving headroom for sbt's ~75-char epilogue line),
-    // prioritizing (a) the pinned BenchHeadline set — stable across
-    // rounds, so the cross-round and cross-core-count common set is
-    // maximized — then (b) the slowest remaining queries, where a
-    // regression hides the most seconds. `queries_elided` counts entries
-    // that did not fit; the FULL map is always in the detail files above.
-    val lineBudget = sys.env.get("SPARK_GRAFT_BENCH_LINE_BUDGET")
-      .map(_.toInt).getOrElse(1800)
+    println(stdoutLine(results.map { case (k, med, _, _, _, _) => k -> med }, total, nRuns,
+      degraded.size, headlineDegraded.size, budgetSec, unaudited.size, sfDir, outPath))
+  }
+
+  /** Hard cap on the last stdout line's length, in chars. */
+  val LineCap = 1800
+
+  /** The LAST stdout line: the per-query map under the [[LineCap]] size cap
+    * (VERDICT r16 item 1). History: the driver parses this line from a
+    * 2000-char stdout TAIL — the r7 AND r8 records both came back
+    * `parsed: null` because the full queries map (~5.4KB at 209 queries)
+    * head-truncated the line out of that tail; r9 dropped the map
+    * entirely, which blinded PERF's per-query and scaling comparisons
+    * ever since. Neither extreme works, so fill `queries` greedily under
+    * a budget that keeps the WHOLE line safely inside the tail (1800
+    * chars, leaving headroom for sbt's ~75-char epilogue line),
+    * prioritizing (a) the pinned BenchHeadline set — stable across
+    * rounds, so the cross-round and cross-core-count common set is
+    * maximized — then (b) the slowest remaining queries, where a
+    * regression hides the most seconds. `queries_elided` counts entries
+    * that did not fit; the FULL map is always in the detail files.
+    */
+  def stdoutLine(medians: Seq[(String, Double)], total: Double, runs: Int, degraded: Int,
+      headlineDegraded: Int, budgetSec: Double, unaudited: Int, sfDir: String,
+      detail: String): String = {
     def fmtMs(v: Double): String =
       if (v < 0) "-1"
       else BigDecimal(v).setScale(3, BigDecimal.RoundingMode.HALF_UP).toString
-    val medByName = results.map { case (k, med, _, _, _, _) => k -> med }
     val prioritized =
-      medByName.filter(kv => BenchHeadline.names.contains(kv._1)).sortBy(_._1) ++
-        medByName.filterNot(kv => BenchHeadline.names.contains(kv._1)).sortBy(-_._2)
-    def stdoutLine(entries: Seq[(String, Double)], elided: Int): String = {
-      val qj = entries.sortBy(_._1).map { case (k, v) => "\"" + k + "\":" + fmtMs(v) }
+      medians.filter(kv => BenchHeadline.names.contains(kv._1)).sortBy(_._1) ++
+        medians.filterNot(kv => BenchHeadline.names.contains(kv._1)).sortBy(-_._2)
+    def line(n: Int): String = {
+      val qj = prioritized.take(n).sortBy(_._1).map { case (k, v) => "\"" + k + "\":" + fmtMs(v) }
         .mkString("{", ",", "}")
-      s"""{"metric":"total","value":$total,"unit":"sec","queries":$qj,"queries_elided":$elided,"n_queries":${results.size},"runs":$nRuns,"degraded":${degraded.size},"headline_degraded":${headlineDegraded.size},"budget_sec":$budgetSec,"window_unaudited":${unaudited.size},"sf":"$sfDir","detail":"$outPath"}"""
+      s"""{"metric":"total","value":$total,"unit":"sec","queries":$qj,"queries_elided":${prioritized.size - n},"n_queries":${medians.size},"runs":$runs,"degraded":$degraded,"headline_degraded":$headlineDegraded,"budget_sec":$budgetSec,"window_unaudited":$unaudited,"sf":"$sfDir","detail":"$detail"}"""
     }
     // line length is monotonic in the prefix size: take the largest fit
-    val fitN = (prioritized.size to 0 by -1)
-      .find(n => stdoutLine(prioritized.take(n), prioritized.size - n).length <= lineBudget)
-      .getOrElse(0)
-    println(stdoutLine(prioritized.take(fitN), prioritized.size - fitN))
+    line((prioritized.size to 0 by -1).find(n => line(n).length <= LineCap).getOrElse(0))
   }
 }

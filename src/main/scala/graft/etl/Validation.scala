@@ -61,20 +61,27 @@ object Validation {
       () => profile(dimUbicacion, "dim_ubicacion", Seq("Provincia", "Region"))
     ), spark = Some(dimTiempo.sparkSession))
 
-    val factAgg = fact.agg(
+    // One pass over the fact answers both the profile and the referential
+    // integrity star join (ref :735-746): each dim's distinct keys are
+    // broadcast and left-joined with a match marker, so a fact row is
+    // integral iff all four markers are set. Surrogate keys are unique per
+    // dim, so this equals the reference's 4-way inner join count; the
+    // distinct keeps a duplicated dim key from inflating the fact counts,
+    // and runs in one partition (dims are broadcast-sized) so it needs no
+    // shuffle.
+    val keys = Seq(dimTiempo -> "ID_Tiempo", dimVehiculo -> "ID_Vehiculo",
+      dimTransaccion -> "ID_Transaccion", dimUbicacion -> "ID_Ubicacion")
+    val marked = keys.foldLeft(fact) { case (df, (dim, k)) =>
+      val dimKeys = dim.select(k).coalesce(1).distinct().withColumn(s"__m_$k", lit(true))
+      df.join(broadcast(dimKeys), Seq(k), "left")
+    }
+    val factAgg = marked.agg(
       count(lit(1)).as("rows"),
       count(when(col("ID_Tiempo").isNull, 1)).as("null_t"),
-      count(when(col("ID_Ubicacion").isNull, 1)).as("null_u")
+      count(when(col("ID_Ubicacion").isNull, 1)).as("null_u"),
+      count(when(keys.map { case (_, k) => col(s"__m_$k").isNotNull }.reduce(_ && _), 1))
+        .as("integrity")
     ).collect()(0)
-
-    // Referential integrity: 4-way inner star join count (ref :735-746).
-    // All dims broadcast; the fact is scanned once with zero shuffles.
-    val joined = fact
-      .join(broadcast(dimTiempo.select("ID_Tiempo")), Seq("ID_Tiempo"))
-      .join(broadcast(dimVehiculo.select("ID_Vehiculo").distinct()), Seq("ID_Vehiculo"))
-      .join(broadcast(dimTransaccion.select("ID_Transaccion")), Seq("ID_Transaccion"))
-      .join(broadcast(dimUbicacion.select("ID_Ubicacion")), Seq("ID_Ubicacion"))
-      .count()
 
     val violations = scala.collection.mutable.ArrayBuffer.empty[String]
     val factRows = factAgg.getAs[Long]("rows")
@@ -90,6 +97,6 @@ object Validation {
 
     Report(profiles, factRows,
       factAgg.getAs[Long]("null_t"), factAgg.getAs[Long]("null_u"),
-      joined, violations.toSeq)
+      factAgg.getAs[Long]("integrity"), violations.toSeq)
   }
 }

@@ -20,7 +20,8 @@ import org.apache.spark.storage.StorageLevel
   * Training is built-in HOFs (zip_with / aggregate / slice). NOTE on
   * execution mode: Spark evaluates HOF lambdas INTERPRETED
   * (CodegenFallback), not codegen'd — ~60× slower than a codegen'd
-  * expression per element (measured in ShingleBench). That is acceptable
+  * expression per element (shingling plans measured in docs/PLANS.md,
+  * q106_decontaminate). That is acceptable
   * here, and ONLY here, because every fold runs over the distinct-WORD
   * table (vocabulary cardinality, short arrays), never the corpus; do
   * not copy the aggregate-fold pattern into a corpus-cardinality path.

@@ -75,9 +75,10 @@ object Dedup {
       numHashes: Int = 64, shingleK: Int = 5): DataFrame = {
     // Shingles via TextAnalysis.explodedShingles (the native WordShingles
     // generator: one compiled pass per doc, narrow rows, no exchange —
-    // ShingleBench measures it 1.7× the windowed form and ~20× the
-    // interpreted-HOF / kept-array forms). MinHash over the shingle
-    // MULTISET equals MinHash over the set, so no distinct pass is needed.
+    // measured 1.7× the windowed form and ~20× the interpreted-HOF /
+    // kept-array forms, docs/PLANS.md q106_decontaminate). MinHash over
+    // the shingle MULTISET equals MinHash over the set, so no distinct
+    // pass is needed.
     val exploded = TextAnalysis.explodedShingles(df, textCol, idCol, shingleK)
       .withColumn("__h", xxhash64(col("__sh")))
     val aggs = (0 until numHashes).map { i =>

@@ -189,8 +189,8 @@ object TextAnalysis {
     * a single shingle exists, 13.1 s; explode-beside-the-array
     * serializes the whole word array into every generated row, O(words²)
     * per doc, 141.8 s; the transform-HOF form runs interpreted lambdas,
-    * 148.3 s; this generator: 7.5 s — ShingleBench, 12M shingles,
-    * identical sink hashes). Documents with NULL
+    * 148.3 s; this generator: 7.5 s — 12M shingles, identical sink
+    * hashes; docs/PLANS.md q106_decontaminate). Documents with NULL
     * text are EXCLUDED (a null document has no shingles); the DuckDB
     * oracles filter `text IS NOT NULL` to pin the same contract.
     */

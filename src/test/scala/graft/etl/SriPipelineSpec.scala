@@ -155,6 +155,29 @@ class SriPipelineSpec extends SparkTestBase {
     val ids = res.fact.select("ID_Registro").collect().map(_.getLong(0)).sorted
     assert(ids.length > 300, "the J3 fan-out multiplies source rows")
     assert(ids.toSeq === (1L to ids.length.toLong))
+
+    // the one-pass validation equals the reference's 4-way inner star-join
+    // count, also on a fact carrying a dangling key on each dim and a null
+    // ID_Tiempo
+    val dangling = Seq("ID_Tiempo" -> 1L, "ID_Vehiculo" -> 3L, "ID_Transaccion" -> 4L,
+      "ID_Ubicacion" -> 5L)
+    val probe = dangling.foldLeft(res.fact.orderBy("ID_Registro").limit(5)) { case (df, (k, id)) =>
+      df.withColumn(k, when(col("ID_Registro") === id, -col(k)).otherwise(col(k)))
+    }.withColumn("ID_Tiempo", when(col("ID_Registro") =!= 2L, col("ID_Tiempo")))
+    val fact2 = res.fact.union(probe)
+    val v = Validation.validate(res.dimTiempo, res.dimVehiculo, res.dimTransaccion,
+      res.dimUbicacion, fact2, minRecords = 1L)
+    val inner = fact2
+      .join(res.dimTiempo.select("ID_Tiempo"), "ID_Tiempo")
+      .join(res.dimVehiculo.select("ID_Vehiculo").distinct(), "ID_Vehiculo")
+      .join(res.dimTransaccion.select("ID_Transaccion"), "ID_Transaccion")
+      .join(res.dimUbicacion.select("ID_Ubicacion"), "ID_Ubicacion")
+      .count()
+    assert(v.factRows === ids.length + 5L)
+    assert(v.factNullTiempo === 1L)
+    assert(v.integrityJoinCount === inner)
+    assert(v.integrityJoinCount === ids.length.toLong)
+    assert(res.validation.integrityJoinCount === ids.length.toLong)
   }
 
   test("year-partitioned fact: a year-filtered metrics query SKIPS files at read time") {

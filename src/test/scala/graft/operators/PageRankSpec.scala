@@ -38,6 +38,17 @@ class PageRankSpec extends SparkTestBase {
     // the triangle is regular (deg 2 all) -> ranks exactly 1.0; the
     // isolated pair is regular too
     a.foreach { case (_, r) => assert(r === 1.0) }
+
+    // disjoint copies never interact: every vertex of an id-shifted copy
+    // of a non-regular graph carries its base vertex's rank exactly
+    val star = Seq((1L, 2L), (1L, 3L), (1L, 4L), (4L, 5L)).toDF("a", "b")
+    def ranks(g: org.apache.spark.sql.DataFrame): Map[Long, Double] =
+      PageRank.pageRank(g, "a", "b", iterations = 3)
+        .collect().map(r => (r.getLong(0), r.getDouble(1))).toMap
+    val base = ranks(star)
+    assert(base.values.toSet.size > 1, "the base graph must not be regular")
+    assert(ranks(star.union(star.select($"a" + 100L, $"b" + 100L))) ===
+      base ++ base.map { case (v, r) => (v + 100L) -> r })
   }
 
   test("hand-stepped path graph matches the decimal-quantized arithmetic") {
