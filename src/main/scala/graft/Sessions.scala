@@ -27,9 +27,6 @@ object Sessions {
     SparkSession.getActiveSession.orElse(SparkSession.getDefaultSession)
       .filter(s => !s.sparkContext.isStopped)
 
-  /** True iff some session is already live in this JVM. */
-  def sessionIsLive: Boolean = liveSession.isDefined
-
   /** Acquire a session: returns `(session, owned)`. If a session is live,
     * it is returned AS IS — not stopped later, and not reconfigured (the
     * builder's configs are deliberately ignored; a guest does not edit

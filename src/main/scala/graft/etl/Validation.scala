@@ -1,6 +1,6 @@
 package graft.etl
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.functions._
 
 /** Data-quality validation (ref dags/sri_vehiculos_etl_dag.py:647-760):
@@ -51,16 +51,6 @@ object Validation {
       dimUbicacion: DataFrame, fact: DataFrame,
       maxNullPct: Double = 10.0, minRecords: Long = 1000L): Report = {
 
-    // the four dim profiles are independent single-agg jobs: submit them
-    // concurrently — on small inputs per-job latency, not compute,
-    // dominates the validation step
-    val profiles = Concurrency.inParallel(Seq(
-      () => profile(dimTiempo, "dim_tiempo", Seq("Anio")),
-      () => profile(dimVehiculo, "dim_vehiculo", Seq("Marca", "Clase")),
-      () => profile(dimTransaccion, "dim_transaccion", Seq("TipoTransaccion")),
-      () => profile(dimUbicacion, "dim_ubicacion", Seq("Provincia", "Region"))
-    ), spark = Some(dimTiempo.sparkSession))
-
     // One pass over the fact answers both the profile and the referential
     // integrity star join (ref :735-746): each dim's distinct keys are
     // broadcast and left-joined with a match marker, so a fact row is
@@ -75,13 +65,24 @@ object Validation {
       val dimKeys = dim.select(k).coalesce(1).distinct().withColumn(s"__m_$k", lit(true))
       df.join(broadcast(dimKeys), Seq(k), "left")
     }
-    val factAgg = marked.agg(
-      count(lit(1)).as("rows"),
-      count(when(col("ID_Tiempo").isNull, 1)).as("null_t"),
-      count(when(col("ID_Ubicacion").isNull, 1)).as("null_u"),
-      count(when(keys.map { case (_, k) => col(s"__m_$k").isNotNull }.reduce(_ && _), 1))
-        .as("integrity")
-    ).collect()(0)
+
+    // the four dim profiles and the fact aggregate are independent
+    // single-agg jobs: submit them concurrently — on small inputs per-job
+    // latency, not compute, dominates the validation step
+    val (profiles, factAggs) = Concurrency.inParallel[Either[TableProfile, Row]](Seq(
+      () => Left(profile(dimTiempo, "dim_tiempo", Seq("Anio"))),
+      () => Left(profile(dimVehiculo, "dim_vehiculo", Seq("Marca", "Clase"))),
+      () => Left(profile(dimTransaccion, "dim_transaccion", Seq("TipoTransaccion"))),
+      () => Left(profile(dimUbicacion, "dim_ubicacion", Seq("Provincia", "Region"))),
+      () => Right(marked.agg(
+        count(lit(1)).as("rows"),
+        count(when(col("ID_Tiempo").isNull, 1)).as("null_t"),
+        count(when(col("ID_Ubicacion").isNull, 1)).as("null_u"),
+        count(when(keys.map { case (_, k) => col(s"__m_$k").isNotNull }.reduce(_ && _), 1))
+          .as("integrity")
+      ).collect()(0))
+    ), spark = Some(dimTiempo.sparkSession)).partitionMap(identity)
+    val factAgg = factAggs.head
 
     val violations = scala.collection.mutable.ArrayBuffer.empty[String]
     val factRows = factAgg.getAs[Long]("rows")

@@ -2,7 +2,6 @@ package graft.operators
 
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
-import org.apache.spark.storage.StorageLevel
 
 /** Connected components over an undirected edge list — the final stage of
   * every near-dup dedup pipeline: LSH/SimHash/embedding passes emit PAIRS,
@@ -22,7 +21,8 @@ import org.apache.spark.storage.StorageLevel
   *     corpus.
   *   - large graphs: iterative min-label propagation with pointer jumping
   *     (lbl := lbl(lbl) each round), converging in O(log diameter) rounds;
-  *     labels are localCheckpoint'ed per round so the plan stays shallow.
+  *     each round's labels are an [[Iterate]] generation, so the plan
+  *     stays shallow and superseded rounds are freed.
   *     Per round: one edges⋈labels shuffle + map-side-combinable min-agg +
   *     a label-forest self-join. For adversarial diameters the same round
   *     structure admits the large-star/small-star variant ("Connected
@@ -33,12 +33,6 @@ import org.apache.spark.storage.StorageLevel
   */
 object Components {
 
-  /** Execution evidence from a components run: measured edge count, which
-    * path ran, and (distributed path only) the propagation rounds to reach
-    * the fixpoint. `rounds` is 0 on the driver path.
-    */
-  case class CCStats(nEdges: Long, path: String, rounds: Int)
-
   /** Components of the undirected graph given by `pairs` (srcCol, dstCol).
     * Returns (id LONG, component LONG): one row per distinct endpoint,
     * `component` = the smallest node id reachable from `id`. Deterministic
@@ -47,31 +41,17 @@ object Components {
     */
   def connectedComponents(pairs: DataFrame, srcCol: String, dstCol: String,
                           maxIter: Int = 25,
-                          driverThreshold: Long = 1L << 22): DataFrame =
-    connectedComponentsWithStats(pairs, srcCol, dstCol, maxIter, driverThreshold)._1
-
-  /** [[connectedComponents]] plus [[CCStats]] execution evidence — the
-    * scale-proof harness uses it to record which path ran and how many
-    * rounds the distributed fixpoint took.
-    */
-  def connectedComponentsWithStats(pairs: DataFrame, srcCol: String, dstCol: String,
-                                   maxIter: Int = 25,
-                                   driverThreshold: Long = 1L << 22): (DataFrame, CCStats) = {
+                          driverThreshold: Long = 1L << 22): DataFrame = Iterate { it =>
     val spark = pairs.sparkSession
-    val fwd = pairs
+    // the path-deciding count below is the action that materializes the
+    // edge checkpoint, so it costs no separate job
+    val fwd = it.checkpoint(pairs
       .select(col(srcCol).cast("long").as("src"), col(dstCol).cast("long").as("dst"))
       // a null endpoint is not an edge: drop up front so both paths agree
       // (the distributed equi-join would drop it silently; the driver
       // union-find would NPE on unboxing)
-      .where(col("src").isNotNull && col("dst").isNotNull)
-      // LAZY checkpoint (r17, the r16 LSA/HITS fusion): the path-deciding
-      // count below is itself the action that materializes the edge list,
-      // so the checkpoint costs no separate job — same bytes, same
-      // one-step lineage, one scheduler round-trip instead of two. Safe:
-      // nothing unpersists fwd before the count has materialized it.
-      .localCheckpoint(false, StorageLevel.MEMORY_AND_DISK)
-    val nEdges = fwd.count()
-    if (nEdges <= driverThreshold) {
+      .where(col("src").isNotNull && col("dst").isNotNull))
+    if (fwd.count() <= driverThreshold) {
       // driver union-find (union by min root + path compression)
       val parent = new java.util.HashMap[Long, Long]()
       def find(x0: Long): Long = {
@@ -92,43 +72,26 @@ object Components {
       }
       import scala.jdk.CollectionConverters._
       import spark.implicits._
-      val out = nodes.asScala.toSeq.sorted.map(id => (id, find(id)))
-        .toDF("id", "component")
-      (out, CCStats(nEdges, "driver-union-find", 0))
-    } else {
-      val (labels, rounds) = distributedComponents(fwd, maxIter)
-      (labels, CCStats(nEdges, "distributed-min-label", rounds))
-    }
+      nodes.asScala.toSeq.sorted.map(id => (id, find(id))).toDF("id", "component")
+    } else distributedComponents(it, fwd, maxIter)
   }
 
   /** The large-graph path: min-label propagation + pointer jumping.
-    *
-    * All per-round materializations (the doubled edge list and each round's
-    * labels) use MEMORY_AND_DISK, not the default memory-pinned local
-    * checkpoint: an adversarial edge count must spill, not OOM. Superseded
-    * rounds become unreferenced when `labels` rebinds and the
-    * ContextCleaner unpersists their blocks asynchronously.
+    * MEMORY_AND_DISK generations ([[Iterate]]): an adversarial edge count
+    * must spill, not OOM.
     */
-  private[operators] def distributedComponents(fwd: DataFrame, maxIter: Int): (DataFrame, Int) = {
-    // LAZY checkpoints throughout (r17, the r16 LSA/HITS fusion): each
-    // round's lblSum scalar collect is the action that materializes that
-    // round's checkpoint — half the scheduler round-trips per round, same
-    // bytes, same one-step lineage. `edges` and the initial `labels` both
-    // materialize inside the first lblSum job (labels derives from edges,
-    // and fwd below them is already materialized by the entry count).
-    // Safe: no unpersist runs in this loop — superseded generations are
-    // freed by the ContextCleaner when their frames become unreachable,
-    // never while a pending plan still reads them.
-    val edges = fwd.union(fwd.select(col("dst").as("src"), col("src").as("dst")))
-      .localCheckpoint(false, StorageLevel.MEMORY_AND_DISK)
-    var labels = edges.select(col("src").as("id")).distinct()
-      .select(col("id"), col("id").as("lbl"))
-      .localCheckpoint(false, StorageLevel.MEMORY_AND_DISK)
+  private def distributedComponents(it: Iterate, fwd: DataFrame, maxIter: Int): DataFrame = {
+    // `edges` and the initial `labels` both materialize inside the first
+    // label-sum job (labels derives from edges)
+    val edges = it.checkpoint(fwd.union(fwd.select(col("dst").as("src"), col("src").as("dst"))))
+    var labels = it.generation(edges.select(col("src").as("id")).distinct()
+      .select(col("id"), col("id").as("lbl")))
     // decimal(38,0) keeps the sum exact for any realistic node count even
     // with 60-bit hash ids — a wrapped long sum could (astronomically
-    // rarely) alias across an iteration and stop one round early
+    // rarely) alias across an iteration and stop one round early. Each
+    // round's sum is the action that materializes its generation.
     def lblSum(df: DataFrame): java.math.BigDecimal =
-      Option(df.agg(sum(col("lbl").cast("decimal(38,0)"))).head.getDecimal(0))
+      Option(it.scalar(df, sum(col("lbl").cast("decimal(38,0)"))).getDecimal(0))
         .getOrElse(java.math.BigDecimal.ZERO) // empty graph: sum is null
     var prevSum = lblSum(labels)
     var iter = 0
@@ -137,11 +100,8 @@ object Components {
       // propagate: each node also receives every neighbor's current label
       val received = edges.join(labels, edges("src") === labels("id"))
         .select(col("dst").as("id"), col("lbl"))
-      val stepped = labels.union(received)
-        .groupBy("id").agg(min("lbl").as("lbl"))
-        // the round's one materialization point — disk-backed (see above),
-        // lazily: the lblSum(next) collect below materializes it
-        .localCheckpoint(false, StorageLevel.MEMORY_AND_DISK)
+      val stepped = it.generation(labels.union(received)
+        .groupBy("id").agg(min("lbl").as("lbl")))
       // pointer jumping: follow one extra hop through the label forest
       // (lbl := lbl(lbl)). Every lbl value is itself a node id, so the
       // inner self-join is total; lbl(lbl) <= lbl by monotonicity. Left
@@ -164,7 +124,7 @@ object Components {
       iter += 1
     }
     require(converged, s"connectedComponents did not converge in $maxIter rounds")
-    (labels.select(col("id"), col("lbl").as("component")), iter)
+    labels.select(col("id"), col("lbl").as("component"))
   }
 
   /** Cluster-level dedup summary: one row per component with its canonical

@@ -2,7 +2,6 @@ package graft.operators
 
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
-import org.apache.spark.storage.StorageLevel
 
 /** HITS (hubs & authorities, Kleinberg JACM 1999) over a DIRECTED edge
   * list — the centrality pair PageRank's single score can't express: a
@@ -29,9 +28,9 @@ import org.apache.spark.storage.StorageLevel
   *
   * Scale shape (the PageRank contract): one edge-keyed equi-join + one
   * map-side-combinable exact-decimal aggregation per half-iteration —
-  * shuffle ∝ edges, never vertices²; the normalizer is a broadcast
-  * 1-row frame; each generation localCheckpoints (lineage one step
-  * deep) and the edge list is checkpointed once up front.
+  * shuffle ∝ edges, never vertices²; the normalizer is one fetched
+  * scalar per half-iteration; the edge list and the generations follow
+  * the [[Iterate]] policy, each L1 fetch materializing its raw iterate.
   */
 object Hits {
 
@@ -43,63 +42,40 @@ object Hits {
   def hits(edges: DataFrame, srcCol: String, dstCol: String,
            iterations: Int = 2): DataFrame = {
     require(iterations >= 1, s"iterations must be >= 1, got $iterations")
-    // LAZY checkpoints throughout (r16 opt): the first half-step's l1
-    // collect materializes edge table, init vector and first raw iterate
-    // in ONE job instead of three — same checkpointed bytes, same
-    // truncated lineage, fewer scheduler round-trips. Each later raw
-    // iterate is materialized by its own l1 collect; no unpersist below
-    // ever frees blocks a still-pending plan reads (every lazy plan is a
-    // projection over the PREVIOUS, already-materialized checkpoint).
-    val e = edges.select(col(srcCol).as("__s"), col(dstCol).as("__d"))
-      .distinct()
-      .localCheckpoint(false, StorageLevel.MEMORY_AND_DISK)
-    var h = e.select(col("__s")).distinct().withColumn("__h", lit(1.0))
-      .localCheckpoint(false)
-    // each half-step's edge-join aggregation runs exactly ONCE: the raw
-    // vertex table (O(|vertices|), tiny beside the edge join that builds
-    // it) is eagerly checkpointed and its L1 normalizer read back as a
-    // 1-row scalar; the previous crossJoin(broadcast(norm-agg)) form
-    // recomputed the matvec twice — the broadcast subtree and the
-    // consuming plan are separate exchanges and Spark never CSEs across
-    // them (the round-10 Lsa doctrine). The cast-to-double happens in
-    // the collected plan, so the scalar is bit-identical to the old
-    // in-plan cast.
-    def l1(vec: DataFrame, c: String): Double = {
-      val r = vec.agg(sum(col(c)).cast("double")).head()
-      if (r.isNullAt(0)) 0.0 else r.getDouble(0)
-    }
-    // The normalized vector is a scalar-division PROJECTION of the
-    // checkpointed raw table — it stays LAZY (each consumer re-applies
-    // one narrow map over the checkpoint) instead of paying a second
-    // full materialization per half-step; unpersist tracks the raw
-    // frames, the only ones actually holding blocks.
-    var aRawPrev: DataFrame = null
-    var hRawPrev: DataFrame = null
-    var a: DataFrame = null
-    var i = 0
-    while (i < iterations) {
-      val aRaw = e.join(h, Seq("__s"))
-        .groupBy(col("__d"))
-        .agg(sum(col("__h").cast("decimal(20,9)")).as("__ar"))
-        .localCheckpoint(false)
-      if (aRawPrev != null) aRawPrev.unpersist()
-      aRawPrev = aRaw
-      a = aRaw
-        .select(col("__d"),
+    Iterate { it =>
+      val e = it.checkpoint(edges.select(col(srcCol).as("__s"), col(dstCol).as("__d")).distinct())
+      // Each half-step's edge-join aggregation runs exactly ONCE: the raw
+      // vertex table (O(|vertices|), tiny beside the edge join that builds
+      // it) is a checkpointed generation and its L1 normalizer is read back
+      // as a 1-row scalar, which materializes it. A crossJoin(broadcast(
+      // norm-agg)) form would recompute the matvec twice — the broadcast
+      // subtree and the consuming plan are separate exchanges and Spark
+      // never CSEs across them (the round-10 Lsa doctrine). The
+      // cast-to-double happens in the collected plan, so the scalar is
+      // bit-identical to an in-plan cast. The normalized vector is a
+      // scalar-division PROJECTION of the raw generation and stays lazy.
+      def l1(raw: DataFrame, c: String, keep: DataFrame*): Double = {
+        val r = it.scalar(raw, sum(col(c)).cast("double"), keep: _*)
+        if (r.isNullAt(0)) 0.0 else r.getDouble(0)
+      }
+      var h = it.generation(e.select(col("__s")).distinct().withColumn("__h", lit(1.0)))
+      var a: DataFrame = null
+      (1 to iterations).foreach { _ =>
+        val aRaw = it.generation(e.join(h, Seq("__s"))
+          .groupBy(col("__d"))
+          .agg(sum(col("__h").cast("decimal(20,9)")).as("__ar")))
+        a = aRaw.select(col("__d"),
           round(col("__ar").cast("double") / lit(l1(aRaw, "__ar")), 9).as("__a"))
-      val hRaw = e.join(a, Seq("__d"))
-        .groupBy(col("__s"))
-        .agg(sum(col("__a").cast("decimal(20,9)")).as("__hr"))
-        .localCheckpoint(false)
-      if (i == 0) h.unpersist() else if (hRawPrev != null) hRawPrev.unpersist()
-      hRawPrev = hRaw
-      h = hRaw
-        .select(col("__s"),
-          round(col("__hr").cast("double") / lit(l1(hRaw, "__hr")), 9).as("__h"))
-      i += 1
+        val hRaw = it.generation(e.join(a, Seq("__d"))
+          .groupBy(col("__s"))
+          .agg(sum(col("__a").cast("decimal(20,9)")).as("__hr")))
+        // `a` stays live past hRaw's fetch: the result reads the last one
+        h = hRaw.select(col("__s"),
+          round(col("__hr").cast("double") / lit(l1(hRaw, "__hr", a)), 9).as("__h"))
+      }
+      h.select(lit("hub").as("kind"), col("__s").as("id"), col("__h").as("score"))
+        .unionByName(
+          a.select(lit("authority").as("kind"), col("__d").as("id"), col("__a").as("score")))
     }
-    h.select(lit("hub").as("kind"), col("__s").as("id"), col("__h").as("score"))
-      .unionByName(
-        a.select(lit("authority").as("kind"), col("__d").as("id"), col("__a").as("score")))
   }
 }

@@ -3,7 +3,6 @@ package graft.operators
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import org.apache.spark.storage.StorageLevel
 
 /** Semi-supervised label propagation over an undirected graph — the
   * label-spreading primitive of a curation pipeline: a small audited
@@ -28,9 +27,9 @@ import org.apache.spark.storage.StorageLevel
   *
   * Scale shape: per round ONE edge-keyed equi-join (labeled frontier ⋈
   * edges, shuffle ∝ edges) + one (node, label)-bounded aggregation +
-  * one node-partitioned, label-bounded window for the argmax; each
-  * generation localCheckpoints so lineage stays one round deep. Seeds
-  * are usually tiny — the seed anti-join broadcasts under AQE.
+  * one node-partitioned, label-bounded window for the argmax. Each
+  * generation carries its node's seed label, so clamping needs no
+  * per-round seed join; generations follow the [[Iterate]] policy.
   */
 object LabelProp {
 
@@ -43,49 +42,37 @@ object LabelProp {
                 seeds: DataFrame, idCol: String, labelCol: String,
                 iterations: Int): DataFrame = {
     require(iterations >= 1, s"iterations must be >= 1, got $iterations")
-    val base = edges.select(col(aCol).as("__src"), col(bCol).as("__dst")).distinct()
-      .localCheckpoint(true, StorageLevel.MEMORY_AND_DISK)
-    val directed = base
-      .union(base.select(col("__dst").as("__src"), col("__src").as("__dst")))
-      .persist(StorageLevel.MEMORY_AND_DISK)
-    val nodes = directed.select(col("__src").as("id")).distinct()
-    val seedTbl = seeds
-      .select(col(idCol).as("id"), col(labelCol).cast("string").as("__seed_label"))
-      .where(col("__seed_label").isNotNull)
-      .groupBy(col("id")).agg(min(col("__seed_label")).as("__seed_label"))
-      .localCheckpoint(true)
-    var labels = nodes.join(seedTbl, Seq("id"), "left")
-      .select(col("id"), col("__seed_label").as("label"))
-      .localCheckpoint(true)
-    var i = 0
-    while (i < iterations) {
-      val neighborVotes = directed
-        .join(labels.where(col("label").isNotNull)
-          .select(col("id").as("__src"), col("label")), Seq("__src"))
-        .groupBy(col("__dst").as("id"), col("label"))
-        .agg(count(lit(1)).as("__votes"))
-      val winner = neighborVotes
-        .withColumn("__rn", row_number().over(
-          Window.partitionBy(col("id"))
-            .orderBy(col("__votes").desc, col("label"))))
-        .where(col("__rn") === 1)
-        .select(col("id"), col("label").as("__win"))
-      val next = labels
-        .join(winner, Seq("id"), "left")
+    Iterate { it =>
+      val base = it.checkpoint(
+        edges.select(col(aCol).as("__src"), col(bCol).as("__dst")).distinct())
+      val directed = base
+        .union(base.select(col("__dst").as("__src"), col("__src").as("__dst")))
+      val seedTbl = seeds
+        .select(col(idCol).as("id"), col(labelCol).cast("string").as("__seed_label"))
+        .where(col("__seed_label").isNotNull)
+        .groupBy(col("id")).agg(min(col("__seed_label")).as("__seed_label"))
+      val init = it.generation(directed.select(col("__src").as("id")).distinct()
         .join(seedTbl, Seq("id"), "left")
-        .select(col("id"),
-          coalesce(col("__seed_label"), col("__win"), col("label")).as("label"))
-        .localCheckpoint(true)
-      labels.unpersist()
-      labels = next
-      i += 1
-    }
-    // every generation was eagerly checkpointed, so nothing downstream
-    // reads the edge cache any more — drop it before returning so a
-    // long-lived driver doesn't accumulate one edge cache per call
-    directed.unpersist()
-    labels.join(seedTbl, Seq("id"), "left")
-      .select(col("id"), col("label"),
+        .select(col("id"), col("__seed_label").as("label"), col("__seed_label")))
+      it.rounds(init, iterations) { labels =>
+        val neighborVotes = directed
+          .join(labels.where(col("label").isNotNull)
+            .select(col("id").as("__src"), col("label")), Seq("__src"))
+          .groupBy(col("__dst").as("id"), col("label"))
+          .agg(count(lit(1)).as("__votes"))
+        val winner = neighborVotes
+          .withColumn("__rn", row_number().over(
+            Window.partitionBy(col("id"))
+              .orderBy(col("__votes").desc, col("label"))))
+          .where(col("__rn") === 1)
+          .select(col("id"), col("label").as("__win"))
+        labels
+          .join(winner, Seq("id"), "left")
+          .select(col("id"),
+            coalesce(col("__seed_label"), col("__win"), col("label")).as("label"),
+            col("__seed_label"))
+      }.select(col("id"), col("label"),
         when(col("__seed_label").isNotNull, 1L).otherwise(0L).as("is_seed"))
+    }
   }
 }

@@ -50,8 +50,8 @@ import org.apache.spark.storage.StorageLevel
   * could overflow at ~9.2e18) fall back to the identical-result
   * exact-decimal path — the choice is invisible in the output.
   *
-  * Runs AT CALL TIME (the fit contract): per-iteration generations
-  * persist and the previous unpersists, lineage stays one step deep.
+  * Runs AT CALL TIME (the fit contract): each iterate is a local
+  * checkpoint and the previous one is freed, lineage stays one step deep.
   * Starting vector: all-ones over the columns (deterministic; for a
   * non-negative matrix like TF-IDF the iterate stays non-negative and
   * converges to the dominant component for generic spectra).
@@ -162,7 +162,7 @@ object Lsa {
     // unlike termVector/topicVectors, where the persisted iterate IS the
     // return contract, here it is purely internal — release its
     // checkpoint blocks once the fold-in has materialized
-    v.unpersist()
+    Iterate.free(v)
     m.unpersist()
     scores
   }
@@ -302,12 +302,12 @@ object Lsa {
       // lazy: the next iteration's norm collect (or the caller's first
       // action) materializes it — its lineage is one projection over the
       // already-checkpointed wDef, so the deferred compute never re-runs
-      // a matvec, and the unpersist of the PREVIOUS iterate below is safe
-      // (this plan does not read it)
+      // a matvec, and freeing the PREVIOUS iterate below is safe (this
+      // plan does not read it)
       val next = wDef.select(col("__c"),
           round(col("__w") / lit(norm2(wDef, "__w")), 9).as("__x"))
         .localCheckpoint(false)
-      v.unpersist()
+      Iterate.free(v)
       v = next
       i += 1
     }

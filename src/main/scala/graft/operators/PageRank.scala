@@ -2,7 +2,6 @@ package graft.operators
 
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
-import org.apache.spark.storage.StorageLevel
 
 /** PageRank centrality over an undirected candidate-pair graph — the
   * canonicalization signal of a dedup pipeline: inside a near-duplicate
@@ -16,15 +15,15 @@ import org.apache.spark.storage.StorageLevel
   * dangling nodes and the iteration is total.
   *
   * Scale shape: one edge-keyed equi-join + one map-side-combinable
-  * aggregation PER ITERATION — shuffle ∝ edges, never vertices²; the rank
-  * table persists MEMORY_AND_DISK each generation and the previous
-  * generation unpersists (the Components handover), so the lineage stays
-  * one iteration deep no matter how many iterations run.
+  * aggregation PER ITERATION — shuffle ∝ edges, never vertices². The
+  * generations follow the [[Iterate]] policy: lazy local checkpoints,
+  * materialized every few rounds and on return, superseded ones freed.
   *
   * Determinism / engine parity: each edge contribution `r(u)/deg(u)`
   * quantizes to DECIMAL(28,9) BEFORE the sum (partition-order-invariant
   * exact addition — the q71/q75 rule), the damping arithmetic is written
-  * as `(1.0 - d) + d · s` so another engine computing the same expression
+  * as `(1.0 - d)·t + d · s` with teleport t = 1.0 (bit-identical to
+  * `(1.0 - d) + d · s`) so another engine computing the same expression
   * gets the same doubles, and each generation rounds to 9 decimals. The
   * DuckDB oracle replays 3 unrolled iterations hash-exactly.
   */
@@ -35,58 +34,8 @@ object PageRank {
     * Returns (id, rank) for every vertex that appears in an edge.
     */
   def pageRank(edges: DataFrame, aCol: String, bCol: String,
-               iterations: Int, damping: Double = 0.85): DataFrame = {
-    require(iterations >= 1, s"iterations must be >= 1, got $iterations")
-    require(damping > 0 && damping < 1, s"damping must be in (0,1), got $damping")
-    // Eagerly cut the input lineage (same pattern as Components): the
-    // driver re-analyzes the full input plan for every job the iteration
-    // generates, so a deep upstream chain (a 64-hash minhash pipeline,
-    // say) costs seconds of PLANNING per iteration even when the data is
-    // cached — and the union below would execute an uncached input twice.
-    // After the cut, per-iteration driver work is O(1) in input plan depth.
-    val base = edges.select(col(aCol).as("__src"), col(bCol).as("__dst"))
-      .localCheckpoint(true, StorageLevel.MEMORY_AND_DISK)
-    val directed = base
-      .union(base.select(col("__dst").as("__src"), col("__src").as("__dst")))
-      .persist(StorageLevel.MEMORY_AND_DISK)
-    val degrees = directed.groupBy(col("__src")).agg(count(lit(1)).as("__deg"))
-    val withDeg = directed.join(degrees, Seq("__src"))
-      .persist(StorageLevel.MEMORY_AND_DISK)
-    var ranks = directed.select(col("__src").as("id")).distinct()
-      .withColumn("rank", lit(1.0))
-      .persist(StorageLevel.MEMORY_AND_DISK)
-    // FULLY LAZY iteration (r17, VERDICT r16 #5 — the LSA/HITS job-fusion
-    // lesson): each generation persists lazily and NOTHING materializes
-    // inside the loop, so the consumer's single action executes the whole
-    // bounded iteration as ONE scheduled job (every persisted frame still
-    // computes exactly once inside it — later generations read the
-    // earlier generations' freshly-cached blocks). The old shape paid one
-    // count() job per iteration purely to unpersist the previous
-    // generation early; the price of laziness is that all `iterations`+2
-    // small (id, rank)-shaped cache entries stay live until the caller's
-    // cache hygiene or the ContextCleaner frees them — vertices × ~16 B
-    // per generation, and every in-repo caller runs 3 iterations. A
-    // caller looping hundreds of iterations should re-introduce a
-    // materialization every N rounds to cap the cache footprint.
-    var i = 0
-    while (i < iterations) {
-      val contrib = withDeg
-        .join(ranks.withColumnRenamed("id", "__src"), Seq("__src"))
-        .select(col("__dst").as("id"),
-          (col("rank") / col("__deg")).cast("decimal(28,9)").as("__c"))
-        .groupBy(col("id"))
-        .agg(sum(col("__c")).cast("double").as("__s"))
-      val next = ranks.select(col("id"))
-        .join(contrib, Seq("id"), "left")
-        .select(col("id"),
-          round(lit(1.0 - damping) + lit(damping) * coalesce(col("__s"), lit(0.0)), 9)
-            .as("rank"))
-        .persist(StorageLevel.MEMORY_AND_DISK)
-      ranks = next
-      i += 1
-    }
-    ranks
-  }
+               iterations: Int, damping: Double = 0.85): DataFrame =
+    ranked(edges, aCol, bCol, None, iterations, damping)
 
   /** Personalized PageRank: teleport mass goes ONLY to the seed set —
     * `r'(v) = (1-d)·t(v) + d · Σ r(u)/deg(u)` with t(v) = 1 for seeds,
@@ -97,58 +46,52 @@ object PageRank {
     * pipeline ("find everything that clusters near this vetted corpus"),
     * the graph-side analogue of q109's embedding hard-negative mining.
     *
-    * Same per-iteration shape and determinism doctrine as [[pageRank]]
-    * (edge join + decimal-quantized aggregation, one-generation lineage);
+    * Same per-iteration shape and determinism doctrine as [[pageRank]];
     * the seed table joins the vertex set once, broadcast-sized.
     */
   def personalizedPageRank(edges: DataFrame, aCol: String, bCol: String,
                            seeds: DataFrame, seedIdCol: String,
-                           iterations: Int, damping: Double = 0.85): DataFrame = {
+                           iterations: Int, damping: Double = 0.85): DataFrame =
+    ranked(edges, aCol, bCol, Some(seeds.select(col(seedIdCol).as("id"))), iterations, damping)
+
+  /** The one loop behind both: [[pageRank]] is the personalized form with
+    * every vertex a seed, since `(1-d)·1.0 + d·s` is bit-identical to
+    * `(1-d) + d·s`.
+    */
+  private def ranked(edges: DataFrame, aCol: String, bCol: String, seeds: Option[DataFrame],
+                     iterations: Int, damping: Double): DataFrame = {
     require(iterations >= 1, s"iterations must be >= 1, got $iterations")
     require(damping > 0 && damping < 1, s"damping must be in (0,1), got $damping")
-    val base = edges.select(col(aCol).as("__src"), col(bCol).as("__dst"))
-      .localCheckpoint(true, StorageLevel.MEMORY_AND_DISK)
-    val directed = base
-      .union(base.select(col("__dst").as("__src"), col("__src").as("__dst")))
-      .persist(StorageLevel.MEMORY_AND_DISK)
-    val degrees = directed.groupBy(col("__src")).agg(count(lit(1)).as("__deg"))
-    val withDeg = directed.join(degrees, Seq("__src"))
-      .persist(StorageLevel.MEMORY_AND_DISK)
-    val teleport = directed.select(col("__src").as("id")).distinct()
-      .join(broadcast(seeds.select(col(seedIdCol).as("id")).distinct()
-        .withColumn("__t", lit(1.0))), Seq("id"), "left")
-      .select(col("id"), coalesce(col("__t"), lit(0.0)).as("t"))
-      .persist(StorageLevel.MEMORY_AND_DISK)
-    // The initial rank vector is an alias-only projection of the CACHED
-    // teleport table, and Spark's cache lookup strips cosmetic aliases —
-    // persisting it would map to teleport's own cache entry ("already
-    // cached" warning), and worse, the generation handover's unpersist
-    // would then EVICT teleport while later iterations still read it.
-    // So generation handover tracks only the frames this loop itself
-    // persisted; iteration 1 reads ranks straight through teleport's
-    // existing cache.
-    var ranks = teleport.select(col("id"), col("t").as("rank"))
-    // fully lazy iteration — see [[pageRank]]'s note: no per-iteration
-    // count() job, no mid-loop unpersists; the consumer's single action
-    // runs the whole bounded iteration, each generation computing once
-    // into its lazily-registered cache entry
-    var i = 0
-    while (i < iterations) {
-      val contrib = withDeg
-        .join(ranks.withColumnRenamed("id", "__src"), Seq("__src"))
-        .select(col("__dst").as("id"),
-          (col("rank") / col("__deg")).cast("decimal(28,9)").as("__c"))
-        .groupBy(col("id"))
-        .agg(sum(col("__c")).cast("double").as("__s"))
-      val next = teleport
-        .join(contrib, Seq("id"), "left")
-        .select(col("id"),
-          round(lit(1.0 - damping) * col("t")
-            + lit(damping) * coalesce(col("__s"), lit(0.0)), 9).as("rank"))
-        .persist(StorageLevel.MEMORY_AND_DISK)
-      ranks = next
-      i += 1
+    Iterate { it =>
+      // The checkpoint cuts the input lineage: the driver re-analyzes the
+      // full input plan for every job the iteration generates, so a deep
+      // upstream chain (a 64-hash minhash pipeline, say) would cost seconds
+      // of PLANNING per iteration even when the data is cached.
+      val base = it.checkpoint(edges.select(col(aCol).as("__src"), col(bCol).as("__dst")))
+      val directed = base
+        .union(base.select(col("__dst").as("__src"), col("__src").as("__dst")))
+      val degrees = directed.groupBy(col("__src")).agg(count(lit(1)).as("__deg"))
+      val withDeg = it.checkpoint(directed.join(degrees, Seq("__src")))
+      val vertices = directed.select(col("__src").as("id")).distinct()
+      val teleport = it.checkpoint(seeds match {
+        case None => vertices.withColumn("t", lit(1.0))
+        case Some(s) => vertices
+          .join(broadcast(s.distinct().withColumn("__t", lit(1.0))), Seq("id"), "left")
+          .select(col("id"), coalesce(col("__t"), lit(0.0)).as("t"))
+      })
+      it.rounds(teleport.select(col("id"), col("t").as("rank")), iterations) { ranks =>
+        val contrib = withDeg
+          .join(ranks.withColumnRenamed("id", "__src"), Seq("__src"))
+          .select(col("__dst").as("id"),
+            (col("rank") / col("__deg")).cast("decimal(28,9)").as("__c"))
+          .groupBy(col("id"))
+          .agg(sum(col("__c")).cast("double").as("__s"))
+        teleport
+          .join(contrib, Seq("id"), "left")
+          .select(col("id"),
+            round(lit(1.0 - damping) * col("t")
+              + lit(damping) * coalesce(col("__s"), lit(0.0)), 9).as("rank"))
+      }
     }
-    ranks
   }
 }

@@ -73,13 +73,12 @@ object ScaleUp {
     val (src, out) = (args(0), args(1))
     val n = if (args.length > 2) args(2).toInt else 10
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "16")
-    val spark = SparkSession.builder()
+    val (spark, owned) = graft.Sessions.acquire(SparkSession.builder()
       .master(s"local[$cpus]")
       .config("spark.sql.shuffle.partitions", cpus)
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.ui.enabled", "false")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .getOrCreate()
+      .config("spark.sql.legacy.parquet.nanosAsLong", "true"))
     spark.sparkContext.setLogLevel("WARN")
     def read(t: String) = spark.read.parquet(s"$src/$t.parquet")
     def write(df: DataFrame, t: String): Unit = {
@@ -133,6 +132,6 @@ object ScaleUp {
             * (pmod(j.cast("long") * 7919L + col("vec_id"), lit(13L)) - 6L).cast("float"))))
     write(emb, "embeddings")
 
-    spark.stop()
+    graft.Sessions.release(spark, owned)
   }
 }

@@ -10,6 +10,8 @@ package graft
   */
 class MainSessionSafetySpec extends SparkTestBase {
 
+  private val sf0001 = "/root/testdata/sf0.001"
+
   private def assertSessionUsable(label: String): Unit = {
     assert(!spark.sparkContext.isStopped, s"$label stopped the host session")
     assert(spark.range(3).count() === 3L, s"host session unusable after $label")
@@ -24,7 +26,7 @@ class MainSessionSafetySpec extends SparkTestBase {
   }
 
   test("CurateMain.main twice leaves the host session usable") {
-    val docs = "/root/testdata/sf0.001/documents.parquet"
+    val docs = s"$sf0001/documents.parquet"
     val out1 = java.nio.file.Files.createTempDirectory("curate-safety-a").toString
     val out2 = java.nio.file.Files.createTempDirectory("curate-safety-b").toString
     CurateMain.main(Array(docs, out1, "2"))
@@ -42,9 +44,17 @@ class MainSessionSafetySpec extends SparkTestBase {
   }
 
   test("StreamMain.main twice leaves the host session usable") {
-    graft.streaming.StreamMain.main(Array("/root/testdata/sf0.001"))
-    graft.streaming.StreamMain.main(Array("/root/testdata/sf0.001"))
+    graft.streaming.StreamMain.main(Array(sf0001))
+    graft.streaming.StreamMain.main(Array(sf0001))
     assertSessionUsable("StreamMain.main")
+  }
+
+  test("ScaleUp.main twice leaves the host session usable") {
+    val out1 = java.nio.file.Files.createTempDirectory("scaleup-safety-a").toString
+    val out2 = java.nio.file.Files.createTempDirectory("scaleup-safety-b").toString
+    graft.tools.ScaleUp.main(Array(sf0001, out1, "2"))
+    graft.tools.ScaleUp.main(Array(sf0001, out2, "2"))
+    assertSessionUsable("ScaleUp.main")
   }
 
   test("Explain.main twice leaves the host session usable") {

@@ -7,10 +7,16 @@ class ComponentsSpec extends SparkTestBase {
   import spark.implicits._
 
   private def runBoth(pairs: org.apache.spark.sql.DataFrame): (Map[Long, Long], Map[Long, Long]) = {
+    def cached = spark.sparkContext.getPersistentRDDs.size
+    val before = cached
     val fast = Components.connectedComponents(pairs, "id_a", "id_b")
       .as[(Long, Long)].collect().toMap
+    // the driver path's result is a local frame: its edge checkpoint is freed
+    assert(cached <= before)
     val dist = Components.connectedComponents(pairs, "id_a", "id_b", driverThreshold = 0)
       .as[(Long, Long)].collect().toMap
+    // the distributed result reads only the last round's generation
+    assert(cached <= before + 1)
     (fast, dist)
   }
 
@@ -53,8 +59,11 @@ class ComponentsSpec extends SparkTestBase {
 
   test("distributed path: maxIter too small fails loudly, not a partial fixpoint") {
     val chain = (1L until 40L).map(i => (i, i + 1)).toDF("id_a", "id_b")
+    val before = spark.sparkContext.getPersistentRDDs.size
     intercept[IllegalArgumentException] {
       Components.connectedComponents(chain, "id_a", "id_b", maxIter = 2, driverThreshold = 0)
     }
+    // the failed call frees every generation it made
+    assert(spark.sparkContext.getPersistentRDDs.size <= before)
   }
 }

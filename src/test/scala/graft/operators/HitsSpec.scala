@@ -11,8 +11,12 @@ class HitsSpec extends SparkTestBase {
   private val edges = Seq(1L -> 10L, 1L -> 11L, 2L -> 10L).toDF("s", "d")
 
   test("two unrolled iterations land on the hand-computed 9-decimal grid") {
+    val cachedBefore = spark.sparkContext.getPersistentRDDs.size
     val out = Hits.hits(edges, "s", "d", iterations = 2)
       .collect().map(r => (r.getString(0), r.getLong(1)) -> r.getDouble(2)).toMap
+    // the result reads the last hub and authority generations; the edge
+    // table and every superseded generation are freed
+    assert(spark.sparkContext.getPersistentRDDs.size <= cachedBefore + 2)
     // iter 1: a_raw=(2,1) S=3 → a=(0.666666667, 0.333333333);
     //         h_raw=(1.0, 0.666666667) S=1.666666667 → h=(0.6, 0.4)
     // iter 2: a_raw=(1.0, 0.6) S=1.6 → a=(0.625, 0.375);

@@ -10,10 +10,15 @@ class LabelPropSpec extends SparkTestBase {
     .toDF("a", "b")
   private val seeds = Seq(1L -> "A", 4L -> "B", 5L -> "A").toDF("id", "lbl")
 
-  private def run(iters: Int) =
-    LabelProp.propagate(edges, "a", "b", seeds, "id", "lbl", iters)
+  private def run(iters: Int) = {
+    val cachedBefore = spark.sparkContext.getPersistentRDDs.size
+    val out = LabelProp.propagate(edges, "a", "b", seeds, "id", "lbl", iters)
       .collect().map(r => r.getLong(0) ->
         ((Option(r.getString(1)), r.getLong(2)))).toMap
+    // the result reads only the last generation
+    assert(spark.sparkContext.getPersistentRDDs.size <= cachedBefore + 1)
+    out
+  }
 
   test("hand-traced rounds: spread, carry, clamping, and the min-label tiebreak") {
     // round 1: 2←{1:A}→A; 3←{4:B}→B (synchronous: 2 was null LAST round);

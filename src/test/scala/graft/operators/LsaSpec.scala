@@ -151,4 +151,20 @@ class LsaSpec extends SparkTestBase {
       .collect().map(r => if (r.isNullAt(0)) None else Some(r.getLong(0))).toSeq
     assert(got === Seq(None, None, Some(500000000L), Some(-1000000000L)))
   }
+
+  test("Iterate.free drops a local checkpoint that Dataset.unpersist leaves cached") {
+    // Spark 4.1: the cache manager never registers a local checkpoint, so
+    // Dataset.unpersist() is a no-op on it — the releases in docScores and
+    // the power iteration go through Iterate.free instead
+    val ckpt = spark.range(10).toDF("x")
+      .localCheckpoint(true, org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    val id = ckpt.queryExecution.analyzed
+      .asInstanceOf[org.apache.spark.sql.execution.LogicalRDD].rdd.id
+    def cached = spark.sparkContext.getPersistentRDDs.contains(id)
+    assert(cached)
+    ckpt.unpersist()
+    assert(cached, "Dataset.unpersist() freed a local checkpoint")
+    Iterate.free(ckpt)
+    assert(!cached)
+  }
 }

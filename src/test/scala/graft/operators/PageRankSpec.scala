@@ -64,13 +64,19 @@ class PageRankSpec extends SparkTestBase {
       val n3 = rnd((1.0 - 0.85) + 0.85 * q(r2 / 2).toDouble)
       (n1, n2, n3)
     }
-    var state = (1.0, 1.0, 1.0)
-    (1 to 3).foreach(_ => state = step(state._1, state._2, state._3))
-    val got = PageRank.pageRank(path, "a", "b", iterations = 3)
-      .collect().map(r => r.getLong(0) -> r.getDouble(1)).toMap
-    assert(got(1L) === state._1)
-    assert(got(2L) === state._2)
-    assert(got(3L) === state._3)
+    // 50 iterations: the generations are materialized and freed along the
+    // way, the result is one checkpoint leaf, and it is the only cache
+    // entry the call leaves behind
+    Seq(3, 50).foreach { n =>
+      var state = (1.0, 1.0, 1.0)
+      (1 to n).foreach(_ => state = step(state._1, state._2, state._3))
+      val cachedBefore = spark.sparkContext.getPersistentRDDs.size
+      val ranks = PageRank.pageRank(path, "a", "b", iterations = n)
+      assert(ranks.queryExecution.analyzed.children.isEmpty, s"$n iterations")
+      val got = ranks.collect().map(r => r.getLong(0) -> r.getDouble(1)).toMap
+      assert(got === Map(1L -> state._1, 2L -> state._2, 3L -> state._3), s"$n iterations")
+      assert(spark.sparkContext.getPersistentRDDs.size <= cachedBefore + 1, s"$n iterations")
+    }
   }
 
   test("personalized: hand-computed path graph, teleport pinned to seed 1") {
@@ -79,9 +85,12 @@ class PageRankSpec extends SparkTestBase {
     //   r2 = [0.51125, 0.1275, 0.36125]
     //   r3 = [0.2041875, 0.741625, 0.0541875]
     val path = Seq((1L, 2L), (2L, 3L)).toDF("a", "b")
+    val cachedBefore = spark.sparkContext.getPersistentRDDs.size
     val got = PageRank.personalizedPageRank(path, "a", "b",
         Seq(1L).toDF("doc_id"), "doc_id", iterations = 3)
       .collect().map(r => r.getLong(0) -> r.getDouble(1)).toMap
+    // the result reads one generation; every other cache entry is freed
+    assert(spark.sparkContext.getPersistentRDDs.size <= cachedBefore + 1)
     assert(got(1L) === 0.2041875)
     assert(got(2L) === 0.741625)
     assert(got(3L) === 0.0541875)
