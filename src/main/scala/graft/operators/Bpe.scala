@@ -2,7 +2,6 @@ package graft.operators
 
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
-import org.apache.spark.storage.StorageLevel
 
 /** Byte-pair-encoding tokenizer TRAINING as a distributed program — the
   * step that turns a curated corpus into the merge table a tokenizer
@@ -28,8 +27,8 @@ import org.apache.spark.storage.StorageLevel
   * The pair explosion is row-local, the per-iteration merge is a left
   * fold over each symbol array, and the only shuffle per iteration is
   * the map-side-combinable pair-count aggregation. The driver collects
-  * exactly ONE row per iteration (the winning pair) — the [[Components]]
-  * iterative pattern with persist/unpersist generation handover.
+  * exactly ONE row per iteration (the winning pair); the word table of
+  * each round is an [[Iterate]] generation.
   */
 object Bpe {
 
@@ -96,7 +95,6 @@ object Bpe {
     require(nMerges >= 1, s"nMerges must be >= 1, got $nMerges")
     val spark = df.sparkSession
     import spark.implicits._
-    var words = wordTable(df, textCol).persist(StorageLevel.MEMORY_AND_DISK)
     // Adaptive driver path (r17 opt, the [[Components]] driverThreshold
     // philosophy): BPE statistics live on the DISTINCT-WORD table (object
     // doc), and the driver already coordinates every round (one argmax
@@ -104,67 +102,56 @@ object Bpe {
     // driver memory — vocabulary cardinality, NOT corpus cardinality; the
     // collect ships (cnt, symbols) rows, ~100 bytes/word — the
     // nMerges-round job cascade (each round: a full-table aggregation job
-    // + a persisted full-table rewrite) collapses into ONE count + ONE
-    // collect, and the merge loop runs as local compute in milliseconds.
-    // Above the threshold the distributed loop below runs unchanged (the
-    // 100-TB escape hatch for vocabularies past ~2M words).
+    // + a full-table rewrite) collapses into ONE count + ONE collect, and
+    // the merge loop runs as local compute in milliseconds. Above the
+    // threshold the distributed loop below runs unchanged (the 100-TB
+    // escape hatch for vocabularies past ~2M words).
     // [[BpeSpec]] pins the two paths' merge tables identical, including
     // the count-desc/lhs/rhs tie-break (UTF8-binary string order, exactly
     // Spark's binary string collation) and multibyte symbols.
-    val nWords = words.count()
-    if (nWords <= driverThreshold) {
-      val rows = words.select(col("cnt").cast("long"), col("symbols"))
-        .as[(Long, Seq[String])].collect()
-      words.unpersist()
-      val merges = trainDriver(rows, nMerges)
-      return merges.toDF("merge_rank", "lhs", "rhs", "merged", "pair_count")
-    }
-    // ONE pass per round: the argmax collect is itself the action that
-    // materializes the current generation's cache, so no separate
-    // count() job runs. The unpersist is DELAYED one generation — the
-    // previous generation stays cached until the argmax has fully
-    // materialized the current one (evicting it earlier would cascade a
-    // recompute through the whole merge lineage).
-    var prev: Option[DataFrame] = None
-    val merges = scala.collection.mutable.ArrayBuffer.empty[(Int, String, String, String, Long)]
-    var exhausted = false
-    for (i <- 1 to nMerges if !exhausted) {
-      val top = pairCounts(words)
-        .orderBy(col("pair_count").desc, col("lhs"), col("rhs"))
-        .limit(1).collect()
-      // `words` is materialized now; its predecessor can go
-      prev.foreach(_.unpersist())
-      prev = Some(words)
-      if (top.isEmpty) exhausted = true
-      else {
-        val (a, b, c) = (top.head.getAs[String]("lhs"),
-          top.head.getAs[String]("rhs"), top.head.getAs[Long]("pair_count"))
-        merges += ((i, a, b, a + b, c))
-        // r16 opt: apply the merge with the Scala kernel ([[applyMerge]],
-        // the replayMerges inner loop — spec-pinned identical to the
-        // mergePair fold) instead of the interpreted `aggregate` HOF;
-        // same greedy-leftmost rewrite, vocabulary-cardinality rows
-        val prevWords = words
-        words = {
-          val (ma, mb) = (a, b)
-          prevWords.select(col("word"), col("cnt").cast("long"), col("symbols"))
-            .as[(String, Long, Seq[String])]
-            .map { case (w, cnt, syms) =>
-              // the hasAdjacentPair gate skips the ArrayBuffer rebuild for
-              // the (vast) majority of words the winning pair never
-              // touches; applyMerge is the identity on those
-              (w, cnt,
-                if (syms == null) null
-                else if (hasAdjacentPair(syms, ma, mb)) applyMerge(syms, ma, mb)
-                else syms) }
-            .toDF("word", "cnt", "symbols")
-            .persist(StorageLevel.MEMORY_AND_DISK)
+    Iterate { it =>
+      // a generation, not a checkpoint: the distributed loop frees it once
+      // the first rewrite has materialized
+      var words = it.generation(wordTable(df, textCol))
+      if (words.count() <= driverThreshold) {
+        val rows = words.select(col("cnt").cast("long"), col("symbols"))
+          .as[(Long, Seq[String])].collect()
+        trainDriver(rows, nMerges).toDF("merge_rank", "lhs", "rhs", "merged", "pair_count")
+      } else {
+        val merges = scala.collection.mutable.ArrayBuffer.empty[(Int, String, String, String, Long)]
+        var exhausted = false
+        for (i <- 1 to nMerges if !exhausted) {
+          // ONE pass per round: the argmax scalar materializes the current
+          // generation. The minimum of (-count, lhs, rhs) is the pair with
+          // the highest count, then the lowest lhs and rhs: structs compare
+          // field by field, strings in UTF-8 binary order.
+          val top = it.scalar(pairCounts(words),
+            min(struct((-col("pair_count")).as("c"), col("lhs"), col("rhs"))))
+          if (top.isNullAt(0)) exhausted = true
+          else {
+            val t = top.getStruct(0)
+            val (a, b) = (t.getString(1), t.getString(2))
+            merges += ((i, a, b, a + b, -t.getLong(0)))
+            // r16 opt: apply the merge with the Scala kernel ([[applyMerge]],
+            // the replayMerges inner loop — spec-pinned identical to the
+            // mergePair fold) instead of the interpreted `aggregate` HOF;
+            // same greedy-leftmost rewrite, vocabulary-cardinality rows
+            words = it.generation(words.select(col("word"), col("cnt").cast("long"), col("symbols"))
+              .as[(String, Long, Seq[String])]
+              .map { case (w, cnt, syms) =>
+                // the hasAdjacentPair gate skips the ArrayBuffer rebuild for
+                // the (vast) majority of words the winning pair never
+                // touches; applyMerge is the identity on those
+                (w, cnt,
+                  if (syms == null) null
+                  else if (hasAdjacentPair(syms, a, b)) applyMerge(syms, a, b)
+                  else syms) }
+              .toDF("word", "cnt", "symbols"))
+          }
         }
+        merges.toSeq.toDF("merge_rank", "lhs", "rhs", "merged", "pair_count")
       }
     }
-    prev.foreach(_.unpersist())
-    words.unpersist()
-    merges.toSeq.toDF("merge_rank", "lhs", "rhs", "merged", "pair_count")
   }
 
   /** [[train]] on a deterministic md5-bucket document sample — the

@@ -147,41 +147,37 @@ object GraphStats {
                 k: Int, rounds: Int): DataFrame = {
     require(k >= 1, s"k must be >= 1, got $k")
     require(rounds >= 1, s"rounds must be >= 1, got $rounds")
-    val base = pairs.select(col(aCol).as("__a"), col(bCol).as("__b"))
-      .where(col("__a") =!= col("__b"))
-      .select(least(col("__a"), col("__b")).as("__a"),
-        greatest(col("__a"), col("__b")).as("__b"))
-      .distinct()
-      .localCheckpoint(true, org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    var edges = base
-    var deg: DataFrame = null
-    var prevCount = -1L
-    var lastCount = -1L
-    var i = 0
-    while (i < rounds) {
-      val und = edges.select(col("__a").as("__v"))
+    Iterate { it =>
+      var edges = it.checkpoint(pairs.select(col(aCol).as("__a"), col(bCol).as("__b"))
+        .where(col("__a") =!= col("__b"))
+        .select(least(col("__a"), col("__b")).as("__a"),
+          greatest(col("__a"), col("__b")).as("__b"))
+        .distinct())
+      var survivors: DataFrame = null
+      var prevCount = -1L
+      var lastCount = -1L
+      (1 to rounds).foreach { _ =>
+        survivors = it.generation(edges.select(col("__a").as("__v"))
+          .unionAll(edges.select(col("__b").as("__v")))
+          .groupBy(col("__v")).agg(count(lit(1)).as("degree"))
+          .where(col("degree") >= k))
+        prevCount = lastCount
+        // the count materializes `survivors` and, through it, `edges`;
+        // `edges` stays cached because the next generation reads it
+        lastCount = it.scalar(survivors, count(lit(1)), edges).getLong(0)
+        edges = it.generation(edges
+          .join(survivors.select(col("__v").as("__a")), Seq("__a"), "left_semi")
+          .join(survivors.select(col("__v").as("__b")), Seq("__b"), "left_semi"))
+      }
+      // degrees restricted to the FINAL surviving subgraph (round R's edge
+      // set), not the degrees that justified survival — re-derive once
+      val finalDeg = edges.select(col("__a").as("__v"))
         .unionAll(edges.select(col("__b").as("__v")))
-      val d = und.groupBy(col("__v")).agg(count(lit(1)).as("degree"))
-      val survivors = d.where(col("degree") >= k)
-        .localCheckpoint(true)
-      prevCount = lastCount
-      lastCount = survivors.count()
-      deg = survivors
-      val sa = survivors.select(col("__v").as("__a"))
-      val sb = survivors.select(col("__v").as("__b"))
-      edges = edges.join(sa, Seq("__a"), "left_semi")
-        .join(sb, Seq("__b"), "left_semi")
-        .localCheckpoint(true)
-      i += 1
+        .groupBy(col("__v")).agg(count(lit(1)).as("degree"))
+      survivors.select(col("__v").as("id"))
+        .join(finalDeg.withColumnRenamed("__v", "id"), Seq("id"), "left")
+        .select(col("id"), coalesce(col("degree"), lit(0L)).as("degree"),
+          lit(if (prevCount == lastCount) 1L else 0L).as("converged"))
     }
-    // degrees restricted to the FINAL surviving subgraph (round R's edge
-    // set), not the degrees that justified survival — re-derive once
-    val finalDeg = edges.select(col("__a").as("__v"))
-      .unionAll(edges.select(col("__b").as("__v")))
-      .groupBy(col("__v")).agg(count(lit(1)).as("degree"))
-    deg.select(col("__v").as("id"))
-      .join(finalDeg.withColumnRenamed("__v", "id"), Seq("id"), "left")
-      .select(col("id"), coalesce(col("degree"), lit(0L)).as("degree"),
-        lit(if (prevCount == lastCount) 1L else 0L).as("converged"))
   }
 }

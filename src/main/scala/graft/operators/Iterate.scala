@@ -7,8 +7,10 @@ import org.apache.spark.storage.StorageLevel
 
 import scala.collection.mutable.ArrayBuffer
 
-/** The generation policy of the iterative graph operators (PageRank and
-  * personalized PageRank, HITS, LabelProp, distributed Components). One
+/** The generation policy of every operator that carries a frame across
+  * rounds: PageRank and personalized PageRank, HITS, LabelProp,
+  * distributed Components, the LSA power iteration (termVector,
+  * docScores, topicVectors), the k-core peel and BPE training. One
   * operator call runs as `Iterate { it => ... }` and makes every cache
   * entry through `it`:
   *
@@ -21,7 +23,8 @@ import scala.collection.mutable.ArrayBuffer
   *     cache manager never registered it); only `rdd.unpersist` on the
   *     leaf drops its blocks ([[free]]).
   *   - A round that needs a scalar (HITS's L1 normalizer, Components'
-  *     label sum) fetches it with [[scalar]]: that one action per round
+  *     label sum, LSA's norm, the k-core survivor count, BPE's winning
+  *     pair) fetches it with [[scalar]]: that one action per round
   *     materializes the generation. A round with no scalar ([[rounds]])
   *     stays lazy and one count job materializes it every
   *     `MaterializeEvery` rounds, which bounds the live generations.

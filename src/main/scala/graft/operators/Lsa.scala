@@ -2,7 +2,6 @@ package graft.operators
 
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
-import org.apache.spark.storage.StorageLevel
 
 /** Latent semantic analysis without a linear-algebra library: the top
   * right-singular vector of a SPARSE (row, col, value) matrix — e.g. the
@@ -18,7 +17,7 @@ import org.apache.spark.storage.StorageLevel
   * [[Pca]]'s covariance accumulation and PageRank's rank push, here on
   * an arbitrary rectangular sparse matrix. Each half-step normalizes
   * (keeping magnitudes O(1) so the decimal accumulators never
-  * overflow), with the norm held in-plan as a broadcast 1-row frame.
+  * overflow), dividing by a norm fetched as a 1-row scalar.
   *
   * Determinism doctrine (PageRank/q71, hardened round 9): matrix values
   * quantize to a 4-decimal grid on ingest (DECIMAL(18,4) — ≤5e-5
@@ -50,8 +49,8 @@ import org.apache.spark.storage.StorageLevel
   * could overflow at ~9.2e18) fall back to the identical-result
   * exact-decimal path — the choice is invisible in the output.
   *
-  * Runs AT CALL TIME (the fit contract): each iterate is a local
-  * checkpoint and the previous one is freed, lineage stays one step deep.
+  * Runs AT CALL TIME (the fit contract) inside one [[Iterate]] call,
+  * which owns every checkpoint the matrix and the iterates make.
   * Starting vector: all-ones over the columns (deterministic; for a
   * non-negative matrix like TF-IDF the iterate stays non-negative and
   * converges to the dominant component for generic spectra).
@@ -60,21 +59,18 @@ object Lsa {
   import org.apache.spark.sql.Column
 
   /** The prepped sparse matrix: (__r, __c, __v double, __vl unscaled
-    * long of the decimal(18,4) quantization), persisted, plus whether
+    * long of the decimal(18,4) quantization), checkpointed, plus whether
     * every |__vl| is small enough (≤ 8e9, i.e. |value| ≤ 8e5) that
     * unscaled-long products cannot overflow (8e9 × 1.1e9 < 2^63).
     */
-  private case class Mat(df: DataFrame, scaledLongSafe: Boolean) {
-    def unpersist(): Unit = { df.unpersist(); () }
-  }
+  private case class Mat(df: DataFrame, scaledLongSafe: Boolean)
 
-  private def prep(matrix: DataFrame, rowCol: String, colCol: String,
+  private def prep(it: Iterate, matrix: DataFrame, rowCol: String, colCol: String,
                    valCol: String): Mat = {
-    val a = matrix.select(col(rowCol).as("__r"), col(colCol).as("__c"),
+    val a = it.checkpoint(matrix.select(col(rowCol).as("__r"), col(colCol).as("__c"),
         col(valCol).cast("double").as("__v"))
       .where(col("__v").isNotNull)
-      .withColumn("__vl", unscaled4(col("__v")))
-      .persist(StorageLevel.MEMORY_AND_DISK)
+      .withColumn("__vl", unscaled4(col("__v"))))
     // one cheap agg decides the arithmetic path (and warms the cache the
     // first iteration would have warmed anyway); an empty or
     // out-of-range matrix takes the exact-decimal path — same results
@@ -121,18 +117,20 @@ object Lsa {
       .cast("double")
 
   /** One relational matvec against the prepped matrix: join on
-    * `keyCol`, Σ value·x per `outKey`, on whichever exact arithmetic
-    * path the matrix admits. `vec` must carry (keyCol, __x) with __x on
-    * the 9-grid.
+    * `keyCol`, Σ value·x per `outKey`. `vec` must carry (keyCol, __x)
+    * with __x on the 9-grid.
     */
   private def matvec(m: Mat, vec: DataFrame, keyCol: String,
-                     outKey: String, outVal: String): DataFrame = {
-    val vl = vec.select(col(keyCol), col("__x"), unscaled9(col("__x")).as("__xl"))
-    m.df.join(vl, Seq(keyCol))
-      .groupBy(col(outKey))
-      .agg((if (m.scaledLongSafe) matvecSum9Long(col("__vl"), col("__xl"))
+                     outKey: String, outVal: String): DataFrame =
+    sums(m, m.df.join(vec.select(col(keyCol), col("__x")), Seq(keyCol)), outKey, outVal)
+
+  /** Σ value·x per `outKey` over matrix entries that carry their vector
+    * component __x, on whichever exact arithmetic path the matrix admits.
+    */
+  private def sums(m: Mat, entries: DataFrame, outKey: String, outVal: String): DataFrame =
+    entries.groupBy(col(outKey))
+      .agg((if (m.scaledLongSafe) matvecSum9Long(col("__vl"), unscaled9(col("__x")))
             else matvecSum9Dec(col("__v"), col("__x"))).as(outVal))
-  }
 
   /** Top-k columns of the leading right-singular direction after
     * `iterations` power steps: (term, loading), loading descending with
@@ -153,18 +151,14 @@ object Lsa {
   def docScores(matrix: DataFrame, rowCol: String, colCol: String,
                 valCol: String, iterations: Int = 2, k: Int = 20): DataFrame = {
     require(k >= 1, s"k must be >= 1, got $k")
-    val m = prep(matrix, rowCol, colCol, valCol)
-    val v = powerIterate(m, iterations, Nil)
-    val scores = matvec(m, v, "__c", "__r", "topic_score")
-      .select(col("__r").as(rowCol), col("topic_score"))
-      .orderBy(col("topic_score").desc, col(rowCol)).limit(k)
-      .localCheckpoint(true)
-    // unlike termVector/topicVectors, where the persisted iterate IS the
-    // return contract, here it is purely internal — release its
-    // checkpoint blocks once the fold-in has materialized
-    Iterate.free(v)
-    m.unpersist()
-    scores
+    Iterate { it =>
+      val m = prep(it, matrix, rowCol, colCol, valCol)
+      // the result is its own generation: the matrix and the iterate it
+      // folds in are freed once it has materialized
+      it.generation(matvec(m, powerIterate(it, m, iterations, Nil), "__c", "__r", "topic_score")
+        .select(col("__r").as(rowCol), col("topic_score"))
+        .orderBy(col("topic_score").desc, col(rowCol)).limit(k))
+    }
   }
 
   /** The FULL leading-direction estimate (term, loading) after
@@ -173,19 +167,19 @@ object Lsa {
   def termVector(matrix: DataFrame, rowCol: String, colCol: String,
                  valCol: String, iterations: Int = 2): DataFrame = {
     require(iterations >= 1, s"iterations must be >= 1, got $iterations")
-    val m = prep(matrix, rowCol, colCol, valCol)
-    val v = powerIterate(m, iterations, Nil)
-    m.unpersist()
-    v.select(col("__c").as("term"), col("__x").as("loading"))
+    Iterate { it =>
+      powerIterate(it, prep(it, matrix, rowCol, colCol, valCol), iterations, Nil)
+        .select(col("__c").as("term"), col("__x").as("loading"))
+    }
   }
 
   /** First `nTopics` right-singular directions by DEFLATED power
-    * iteration — the multi-topic LSA. [[Pca.principalComponents]]
-    * deflates by rewriting the (dense, narrow) residual rows; a sparse
-    * term–document matrix cannot afford that (A − σuvᵀ is DENSE), so
-    * deflation moves into the ITERATE instead — Hotelling orthogonal
-    * iteration on AᵀA: after every AᵀA application the column-space
-    * iterate subtracts its projection onto each previously-fitted topic
+    * iteration — the multi-topic LSA. Deflating by rewriting the
+    * residual rows is unaffordable on a sparse term–document matrix
+    * (A − σuvᵀ is DENSE), so deflation moves into the ITERATE instead —
+    * Hotelling orthogonal iteration on AᵀA: after every AᵀA application
+    * the column-space iterate subtracts its projection onto each
+    * previously-fitted topic
     *
     *     w ← w − (w·v_s)·v_s    for s < t, then normalize,
     *
@@ -207,16 +201,16 @@ object Lsa {
   def topicVectors(matrix: DataFrame, rowCol: String, colCol: String,
                    valCol: String, iterations: Int = 2, nTopics: Int = 2): DataFrame = {
     require(nTopics >= 1, s"nTopics must be >= 1, got $nTopics")
-    val m = prep(matrix, rowCol, colCol, valCol)
-    val topics = scala.collection.mutable.ArrayBuffer.empty[DataFrame]
-    (1 to nTopics).foreach { _ =>
-      topics += powerIterate(m, iterations, topics.toSeq)
+    Iterate { it =>
+      val m = prep(it, matrix, rowCol, colCol, valCol)
+      val topics = (1 to nTopics).foldLeft(Seq.empty[DataFrame]) { (prior, _) =>
+        prior :+ powerIterate(it, m, iterations, prior)
+      }
+      topics.zipWithIndex.map { case (t, i) =>
+        t.select(lit((i + 1).toLong).as("topic"),
+          col("__c").as("term"), col("__x").as("loading"))
+      }.reduce(_ unionByName _)
     }
-    m.unpersist()
-    topics.zipWithIndex.map { case (t, i) =>
-      t.select(lit((i + 1).toLong).as("topic"),
-        col("__c").as("term"), col("__x").as("loading"))
-    }.reduce(_ unionByName _)
   }
 
   /** Top-k terms per topic of [[topicVectors]]: (topic, term, loading),
@@ -239,42 +233,32 @@ object Lsa {
   /** `iterations` power steps on AᵀA starting from all-ones over the
     * columns, orthogonalizing each column-space iterate against
     * `deflate` (previously-fitted topic vectors) before normalizing.
-    * Returns the final (__c, __x) PERSISTED (callers building on it —
-    * fold-in, the next deflation round — reuse it without recompute).
+    * Returns the final (__c, __x) as a projection over the last raw
+    * generation, which `it` keeps alive for the caller (fold-in, the
+    * next deflation round). Every scalar keeps `deflate` alive too.
     */
-  private def powerIterate(m: Mat, iterations: Int,
+  private def powerIterate(it: Iterate, m: Mat, iterations: Int,
                            deflate: Seq[DataFrame]): DataFrame = {
     require(iterations >= 1, s"iterations must be >= 1, got $iterations")
-    val a = m.df
     // EVERY matvec executes exactly once: each raw half-step vector —
     // O(|rows|) or O(|columns|), tiny beside the nnz join that builds
-    // it — is LAZILY localCheckpointed and MATERIALIZED BY the norm
-    // collect that immediately follows (r16 opt: the eager checkpoint
-    // spent one job materializing and the norm a second job reading the
-    // cache — the lazy form persists the partitions inside the norm's
-    // own job, halving the scheduler round-trips per half-step; same
-    // checkpointed bytes, same truncated lineage), and the
-    // normalization becomes a cheap projection over the checkpoint.
+    // it — is a generation that the norm scalar right after it
+    // materializes, and the normalization is a cheap projection over it.
     // The round-9 in-plan form (crossJoin(broadcast(norm agg))) paid
     // every matvec TWICE: the norm's broadcast subtree and the
     // consuming plan are separate exchanges and Spark never CSEs across
-    // them, so uRaw/wRaw each recomputed inside the checkpoint job —
-    // and once more per deflation dot. The eager checkpoints also keep
-    // lineage one generation deep (without truncation the deflated
-    // plan grew ~8^iterations; analysis alone OOMed past ~3).
-    // the all-ones INIT is not checkpointed: its plan is one distinct
-    // over the already-persisted matrix — materializing it separately
-    // would just add a job
-    var v = a.select(col("__c")).distinct().withColumn("__x", lit(1.0))
-    var i = 0
-    while (i < iterations) {
+    // them. The all-ones start vector needs no join: every entry with a
+    // column meets x = 1 exactly once.
+    var entries = m.df.where(col("__c").isNotNull).withColumn("__x", lit(1.0))
+    var v: DataFrame = null
+    (1 to iterations).foreach { _ =>
       // EXACT matvec products on the value/iterate grids (scaled-long
       // fast path or exact-decimal fallback — see the arithmetic
       // doctrine above; both are bit-for-bit the same result).
-      val uRaw = matvec(m, v, "__c", "__r", "__u").localCheckpoint(false)
+      val uRaw = it.generation(sums(m, entries, "__r", "__u"))
       val u = uRaw.select(col("__r"),
-        round(col("__u") / lit(norm2(uRaw, "__u")), 9).as("__x"))
-      val wRaw = matvec(m, u, "__r", "__c", "__w").localCheckpoint(false)
+        round(col("__u") / lit(norm2(it, uRaw, "__u", deflate)), 9).as("__x"))
+      val wRaw = it.generation(matvec(m, u, "__r", "__c", "__w"))
       // Hotelling deflation: strip each prior topic's component out of
       // the raw column iterate, one scalar dot per topic. FULLY decimal
       // arithmetic, rounding in DECIMAL, double only at the end: w, d
@@ -285,43 +269,36 @@ object Lsa {
       // decimal(20,9) × decimal(10,9) → decimal(31,18) stays exact in
       // BOTH engines (no precision-loss adjustment below 38); |w|, |d|
       // < 10^11 is the documented magnitude bound. The (w ⋈ p) join is
-      // |columns|-bounded; checkpointing it lets the dot and the
+      // |columns|-bounded; as a generation it lets the dot and the
       // subtraction share one execution.
       val wDef = deflate.foldLeft(wRaw) { (w, p) =>
         val pp = p.select(col("__c"), col("__x").as("__p"))
-        val joined = w.join(pp, Seq("__c")).localCheckpoint(false)
-        val dRow = joined.agg(
+        val joined = it.generation(w.join(pp, Seq("__c")))
+        val dRow = it.scalar(joined,
           round(sum(col("__w").cast("decimal(20,9)") * col("__p").cast("decimal(10,9)")), 9)
-            .cast("double")).head()
+            .cast("double"), deflate: _*)
         val d = if (dRow.isNullAt(0)) 0.0 else dRow.getDouble(0)
         joined.select(col("__c"),
           round(col("__w").cast("decimal(20,9)")
             - lit(d).cast("decimal(20,9)") * col("__p").cast("decimal(10,9)"), 9)
             .cast("double").as("__w"))
       }
-      // lazy: the next iteration's norm collect (or the caller's first
-      // action) materializes it — its lineage is one projection over the
-      // already-checkpointed wDef, so the deferred compute never re-runs
-      // a matvec, and freeing the PREVIOUS iterate below is safe (this
-      // plan does not read it)
-      val next = wDef.select(col("__c"),
-          round(col("__w") / lit(norm2(wDef, "__w")), 9).as("__x"))
-        .localCheckpoint(false)
-      Iterate.free(v)
-      v = next
-      i += 1
+      v = wDef.select(col("__c"),
+        round(col("__w") / lit(norm2(it, wDef, "__w", deflate)), 9).as("__x"))
+      entries = m.df.join(v, Seq("__c"))
     }
     v
   }
 
-  /** √Σ round(x², 6) over the (checkpointed, key-bounded) vector, as the
-    * 1-row scalar the normalization projection divides by — the same
-    * expression the round-9 in-plan broadcast computed, collected once.
+  /** √Σ round(x², 6) over the (generation-backed, key-bounded) vector,
+    * as the 1-row scalar the normalization projection divides by — the
+    * same expression the round-9 in-plan broadcast computed, collected
+    * once. `keep` stays cached past the fetch.
     */
-  private def norm2(vec: DataFrame, c: String): Double = {
-    val r = vec.agg(
+  private def norm2(it: Iterate, vec: DataFrame, c: String, keep: Seq[DataFrame]): Double = {
+    val r = it.scalar(vec,
       sqrt(sum(round(col(c) * col(c), 6).cast("decimal(38,12)"))
-        .cast("double"))).head()
+        .cast("double")), keep: _*)
     if (r.isNullAt(0)) 0.0 // empty vector: the division never sees a row
     else {
       val n = r.getDouble(0)

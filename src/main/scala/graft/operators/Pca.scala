@@ -124,56 +124,6 @@ object Pca {
     (mu, v)
   }
 
-  /** First `nComponents` principal components by sequential deflation:
-    * after each fitted component the corpus projects to its orthogonal
-    * complement (`c' = c − s·v`, one narrow array rebuild — still no
-    * shuffle) and power iteration repeats on the residual. Returns
-    * `(component, dim, loading, explained_var)` rows; component 1 equals
-    * [[topComponent]]'s loadings exactly.
-    */
-  def principalComponents(df: DataFrame, vecCol: String, dim: Int,
-                          nComponents: Int, iters: Int = 3): DataFrame = {
-    val spark = df.sparkSession
-    require(nComponents >= 1 && nComponents <= dim,
-      s"nComponents must be in [1, $dim], got $nComponents")
-    val raw = df
-      .select(col(vecCol).cast("array<double>").as("__v"))
-      .where(size(col("__v")) === dim)
-    val mu = dimMeans(raw.persist(StorageLevel.MEMORY_AND_DISK), dim)
-    // center once; every deflation round works on a zero-mean residual
-    val mArr = array(mu.map(lit): _*)
-    var cur = raw
-      .select(zip_with(col("__v"), mArr, (x, m) => x - m).as("__v"))
-      .persist(StorageLevel.MEMORY_AND_DISK)
-    raw.unpersist()
-    val zero = Array.fill(dim)(0.0)
-    val out = Seq.newBuilder[(Long, Long, Double, Double)]
-    var c = 1
-    while (c <= nComponents) {
-      val v = iterate(cur, zero, Array.fill(dim)(1.0 / math.sqrt(dim.toDouble)), dim, iters)
-      val s = sExpr(zero, v, dim).as("__s")
-      val r = cur.select(s).agg(
-        sum((col("__s") * col("__s")).cast("decimal(28,9)")).as("vp"),
-        count(lit(1)).as("n")).head
-      val varProj = roundHalfAway(decOf(r, 0, "projected-variance").doubleValue / r.getLong(1), 9)
-      (1 to dim).foreach(j => out += ((c.toLong, j.toLong, v(j - 1), varProj)))
-      if (c < nComponents) {
-        val wArr = array(v.map(lit): _*)
-        val next = cur
-          .select(col("__v"), sExpr(zero, v, dim).as("__s"))
-          .select(zip_with(col("__v"), wArr, (x, w) => x - col("__s") * w).as("__v"))
-          .persist(StorageLevel.MEMORY_AND_DISK)
-        next.count() // materialize before dropping the parent generation
-        cur.unpersist()
-        cur = next
-      }
-      c += 1
-    }
-    cur.unpersist()
-    import spark.implicits._
-    out.result().toDF("component", "dim", "loading", "explained_var")
-  }
-
   /** Per-dimension 9-decimal means via one posexplode + dim-keyed
     * aggregation (the q94 dimStats shape). d fused wide sums would save
     * the explode, but 64 decimal aggregates each carrying CheckOverflow

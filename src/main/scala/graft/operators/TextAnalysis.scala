@@ -977,9 +977,9 @@ object TextAnalysis {
           col("n_pair").cast("double") * col("__nt") * col("__nt")
             / (col("__np").cast("double") * col("__na") * col("__nb"))), 9).as("pmi"))
     // materialize the (minPairCount-filtered, pair-bounded) result, then
-    // release the corpus-sized caches before returning
+    // release the corpus-sized caches and the unigram checkpoint
     val result = out.localCheckpoint(true)
-    toks.unpersist(); pairCounts.unpersist()
+    toks.unpersist(); pairCounts.unpersist(); Iterate.free(uni)
     result
   }
 }

@@ -6,6 +6,17 @@ import org.scalatest.funsuite.AnyFunSuite
 /** One shared session per suite; config mirrors Verify/Bench. */
 trait SparkTestBase extends AnyFunSuite {
   lazy val spark: SparkSession = SparkTestBase.session
+
+  /** `f`'s value and how many cache entries made while it ran are still
+    * cached after it. Entries of earlier calls may leave the map
+    * meanwhile (it holds RDDs weakly), so the change in the size of
+    * `getPersistentRDDs` alone would under-count.
+    */
+  def leftCached[T](f: => T): (T, Int) = {
+    val before = spark.sparkContext.getPersistentRDDs.keySet
+    val out = f
+    (out, (spark.sparkContext.getPersistentRDDs.keySet -- before).size)
+  }
 }
 
 object SparkTestBase {

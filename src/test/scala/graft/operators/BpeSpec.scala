@@ -165,8 +165,10 @@ class BpeSpec extends SparkTestBase {
     // (driverThreshold = 0) against the default driver path.
     val d = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
     val viaDriver = Bpe.train(d, "text", nMerges = 6).collect().map(_.toString).toSeq
-    val viaDistributed = Bpe.train(d, "text", nMerges = 6, driverThreshold = 0)
-      .collect().map(_.toString).toSeq
+    val (viaDistributed, cached) = leftCached(
+      Bpe.train(d, "text", nMerges = 6, driverThreshold = 0).collect().map(_.toString).toSeq)
+    // the merge table is a local frame: every word-table generation is freed
+    assert(cached === 0)
     assert(viaDriver.nonEmpty && viaDriver === viaDistributed)
   }
 

@@ -75,8 +75,10 @@ class GraphStatsSpec extends SparkTestBase {
   test("kCorePeel: triangle survives 2-core, pendant peels, convergence flags") {
     import spark.implicits._
     val edges = Seq((1L, 2L), (2L, 3L), (1L, 3L), (3L, 4L)).toDF("a", "b")
-    val out = GraphStats.kCorePeel(edges, "a", "b", k = 2, rounds = 2)
-      .collect().map(r => r.getLong(0) -> ((r.getLong(1), r.getLong(2)))).toMap
+    val (out, cached) = leftCached(GraphStats.kCorePeel(edges, "a", "b", k = 2, rounds = 2)
+      .collect().map(r => r.getLong(0) -> ((r.getLong(1), r.getLong(2)))).toMap)
+    // the result reads the last survivor and edge generations only
+    assert(cached <= 2)
     assert(out === Map(1L -> ((2L, 1L)), 2L -> ((2L, 1L)), 3L -> ((2L, 1L))),
       "the triangle is the 2-core; degree excludes the peeled pendant edge")
   }

@@ -60,6 +60,12 @@ class LsaSpec extends SparkTestBase {
       .collect().map(r => r.getString(0) -> r.getDouble(1)).toMap
     assert(math.abs(top("p") - 0.6) < 1e-6, s"p -> ${top("p")}")
     assert(math.abs(top("q") - 0.8) < 1e-6, s"q -> ${top("q")}")
+    // fold-in: row r scores r·(3·0.6 + 4·0.8) = 5r, and the result is the
+    // only cache entry the call leaves
+    val (best, cached) = leftCached(
+      Lsa.docScores(m, "r", "c", "v", iterations = 2, k = 1).collect().head)
+    assert(cached <= 1)
+    assert(best.getLong(0) === 5L && math.abs(best.getDouble(1) - 25.0) < 1e-5, s"$best")
   }
 
   test("deterministic across repartitioning; k bounds the output") {
@@ -102,10 +108,14 @@ class LsaSpec extends SparkTestBase {
   test("topic 1 of topicVectors equals termVector; topics are orthogonal") {
     val m = (1L to 200L).map(i => (i % 23, s"t${i % 11}", (i % 5) + 1.0))
       .toDF("r", "c", "v")
-    val single = Lsa.termVector(m, "r", "c", "v", iterations = 2)
-      .collect().map(r => r.getString(0) -> r.getDouble(1)).toMap
-    val topics = Lsa.topicVectors(m, "r", "c", "v", iterations = 2, nTopics = 2)
-      .collect().map(r => (r.getLong(0), r.getString(1), r.getDouble(2)))
+    val (single, cached1) = leftCached(Lsa.termVector(m, "r", "c", "v", iterations = 2)
+      .collect().map(r => r.getString(0) -> r.getDouble(1)).toMap)
+    val (topics, cached2) = leftCached(
+      Lsa.topicVectors(m, "r", "c", "v", iterations = 2, nTopics = 2)
+        .collect().map(r => (r.getLong(0), r.getString(1), r.getDouble(2))))
+    // each result reads one generation per topic; the matrix and every
+    // superseded iterate are freed
+    assert(cached1 <= 1 && cached2 <= 2, s"termVector +$cached1, topicVectors +$cached2")
     val t1 = topics.filter(_._1 == 1L).map(t => t._2 -> t._3).toMap
     val t2 = topics.filter(_._1 == 2L).map(t => t._2 -> t._3).toMap
     assert(t1 === single)
@@ -154,8 +164,8 @@ class LsaSpec extends SparkTestBase {
 
   test("Iterate.free drops a local checkpoint that Dataset.unpersist leaves cached") {
     // Spark 4.1: the cache manager never registers a local checkpoint, so
-    // Dataset.unpersist() is a no-op on it — the releases in docScores and
-    // the power iteration go through Iterate.free instead
+    // Dataset.unpersist() is a no-op on it — every release of one goes
+    // through Iterate.free instead
     val ckpt = spark.range(10).toDF("x")
       .localCheckpoint(true, org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     val id = ckpt.queryExecution.analyzed

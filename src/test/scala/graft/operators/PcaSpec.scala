@@ -66,21 +66,6 @@ class PcaSpec extends SparkTestBase {
       "decimal-quantized accumulation must not see partitioning")
   }
 
-  test("principalComponents: component 1 equals topComponent; components are orthogonal with decreasing variance") {
-    val emb = spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet")
-    val top = Pca.topComponent(emb, "embedding", 64).collect()
-      .sortBy(_.getLong(0)).map(_.getAs[Double]("loading"))
-    val pcs = Pca.principalComponents(emb, "embedding", 64, nComponents = 2).collect()
-    val c1 = pcs.filter(_.getLong(0) == 1L).sortBy(_.getLong(1)).map(_.getAs[Double]("loading"))
-    val c2 = pcs.filter(_.getLong(0) == 2L).sortBy(_.getLong(1)).map(_.getAs[Double]("loading"))
-    assert(c1.toSeq == top.toSeq, "first deflation round IS the top component")
-    val dot = c1.zip(c2).map { case (a, b) => a * b }.sum
-    assert(math.abs(dot) < 1e-5, s"components must be orthogonal, dot = $dot")
-    val v1 = pcs.filter(_.getLong(0) == 1L).head.getAs[Double]("explained_var")
-    val v2 = pcs.filter(_.getLong(0) == 2L).head.getAs[Double]("explained_var")
-    assert(v1 >= v2, s"variance must not increase down the spectrum: $v1 < $v2")
-  }
-
   test("scoreTopComponent: projection-only scoring plan whose values recompute from the fitted component") {
     val emb = spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet")
     val scored = Pca.scoreTopComponent(emb, "embedding", "vec_id", 64)

@@ -9,9 +9,11 @@ class PmiSpec extends SparkTestBase {
     // doc: "a b a b" window 1 → positional pairs: (a,b),(a,b),(a,b)
     // n_ab=3, n_p=3, n_a=n_b=2, n_t=4 → pmi = ln(3·16/(3·4)) = ln 4
     val docs = Seq((1L, "a b a b")).toDF("doc_id", "text")
-    val out = TextAnalysis.pmiCooccurrence(docs, "text", "doc_id",
+    val (out, cached) = leftCached(TextAnalysis.pmiCooccurrence(docs, "text", "doc_id",
         window = 1, minPairCount = 1)
-      .collect().map(r => (r.getString(0), r.getString(1), r.getLong(2), r.getDouble(3)))
+      .collect().map(r => (r.getString(0), r.getString(1), r.getLong(2), r.getDouble(3))))
+    // the result checkpoint is the only cache entry the call leaves
+    assert(cached <= 1)
     assert(out.toSeq === Seq(("a", "b", 3L, BigDecimal(math.log(4.0))
       .setScale(9, BigDecimal.RoundingMode.HALF_UP).toDouble)))
   }
