@@ -38,14 +38,4 @@ object Cleaning {
   /** pandas `pd.to_numeric(c, errors='coerce').fillna(0)` (ref :547). */
   def safeNumericFillZero(c: Column): Column =
     coalesce(c.cast("double"), lit(0.0))
-
-  /** Spanish accent folding — normalizes the dirty values the reference
-    * sample actually contains ('PAÍS' data like 'ESPAÑA' vs the mojibake
-    * 'ESPA?A'): accented vowels and Ñ map to their ASCII base letters via
-    * the codegen'd `translate` (character-for-character, no regex).
-    * The reference never does this (a latent data-quality gap its own
-    * thresholds would not catch); exposed as an OPT-IN normalizer.
-    */
-  def foldAccents(c: Column): Column =
-    translate(c, "ÁÉÍÓÚÜÑáéíóúüñ", "AEIOUUNaeioun")
 }

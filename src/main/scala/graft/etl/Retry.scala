@@ -6,8 +6,8 @@ import scala.concurrent.duration.{Duration, DurationInt}
   * `dags/sri_vehiculos_etl_dag.py:26-27`: every Airflow task runs with
   * `retries: 2, retry_delay: 5 minutes`). The reference delegates this to
   * the orchestrator; the engine carries its own executor-side equivalent
-  * so a scheduled run without Airflow (cron + [[SriMain]], a streaming
-  * trigger) gets the same at-most-(1+retries) semantics per STAGE.
+  * so a scheduled run without Airflow (cron + [[SriMain]]) gets the same
+  * at-most-(1+retries) semantics per STAGE.
   *
   * Semantics, matching Airflow's task contract:
   *   - a task is retried only on failure, up to `retries` additional

@@ -101,7 +101,7 @@ final case class ParquetWarehouse(
   * [[ParquetWarehouse]] solves only within one JVM via its schema map).
   *
   * Old generations accumulate until [[vacuum]] — retention is a policy
-  * decision (readers may still be streaming gen N−1), exactly like
+  * decision (readers may still be reading gen N−1), exactly like
   * open-table-format vacuums.
   */
 final case class ManifestWarehouse(
@@ -178,7 +178,7 @@ final case class ManifestWarehouse(
     * below `liveGen − keepLast`, so the newest `keepLast` generations
     * (counting the live one) survive — `keepLast = 1` reclaims everything
     * but the committed generation; `keepLast = 2` is the
-    * reader-may-still-stream-gen-N−1 policy (pick it to match the longest
+    * reader-may-still-read-gen-N−1 policy (pick it to match the longest
     * reader you allow, exactly like open-table-format vacuum horizons).
     *
     * Two prefixes are NEVER collectable regardless of policy: the live
@@ -189,59 +189,6 @@ final case class ManifestWarehouse(
     * passes their number; orphans below live collect by age like any
     * other stale generation.
     */
-  /** Small-file compaction — the open-table-format `OPTIMIZE`: rewrite
-    * the LIVE generation's files into ~`targetFileBytes` outputs as a
-    * brand-new generation, committed by the same atomic manifest flip.
-    * Readers mid-compact observe either the old or the new generation,
-    * never a mixture; the old prefix stays immutable until [[vacuum]].
-    * A streaming ingest that lands thousands of tiny per-batch files
-    * (the [[graft.streaming.IncrementalLoad]] shape) runs this on a
-    * schedule — at 100 TB, scan cost tracks file COUNT as much as bytes
-    * (task scheduling + object-store request overhead), so compaction is
-    * a first-class maintenance op, not housekeeping.
-    *
-    * Output file count = ceil(live bytes / targetFileBytes), applied via
-    * repartition before the standard write path (partitioned tables
-    * compact within each partition directory). Returns
-    * (filesBefore, filesAfter, bytes).
-    */
-  def compact(name: String, targetFileBytes: Long = 128L * 1024 * 1024): (Long, Long, Long) = {
-    require(targetFileBytes > 0, s"targetFileBytes must be positive, got $targetFileBytes")
-    val (_, dir, schema) = currentManifest(name).getOrElse(
-      sys.error(s"table $name has no committed generation under $root"))
-    val src = Paths.get(tableDir(name), dir)
-    import scala.jdk.CollectionConverters._
-    // Files.walk holds directory handles until closed — a long-lived
-    // driver running scheduled compactions would leak descriptors without
-    // the Using wrap.
-    def parquetFiles(p: java.nio.file.Path) =
-      scala.util.Using.resource(Files.walk(p)) { st =>
-        st.iterator().asScala
-          .filter(f => Files.isRegularFile(f) && f.getFileName.toString.endsWith(".parquet"))
-          .toList
-      }
-    val before = parquetFiles(src)
-    val bytes = before.map(Files.size).sum
-    val nFiles = math.max(1L, (bytes + targetFileBytes - 1) / targetFileBytes).toInt
-    val df = spark.read.parquet(src.toString)
-      .select(schema.fields.map(f =>
-        org.apache.spark.sql.functions.col(f.name).cast(f.dataType).as(f.name)): _*)
-    // Partitioned tables must repartition BY the partition columns: a
-    // global repartition(n) gives each task rows of many partition values,
-    // so the partitioned write would emit up to n × nValues files — more
-    // fragmentation than before the compact. Hashing on the partition
-    // columns puts each value wholly in one task → ≤1 file per value.
-    val repartitioned = partitionCols.get(name) match {
-      case Some(cols) if cols.forall(df.columns.contains) =>
-        df.repartition(nFiles, cols.map(org.apache.spark.sql.functions.col): _*)
-      case _ => df.repartition(nFiles)
-    }
-    write(name, repartitioned)
-    val (_, newDir, _) = currentManifest(name).get
-    val after = parquetFiles(Paths.get(tableDir(name), newDir))
-    (before.size.toLong, after.size.toLong, bytes)
-  }
-
   def vacuum(name: String, keepLast: Int = 1): Unit = {
     require(keepLast >= 1, s"keepLast must be >= 1, got $keepLast")
     currentManifest(name).foreach { case (liveGen, _, _) =>

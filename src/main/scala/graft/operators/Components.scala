@@ -126,13 +126,4 @@ object Components {
     require(converged, s"connectedComponents did not converge in $maxIter rounds")
     labels.select(col("id"), col("lbl").as("component"))
   }
-
-  /** Cluster-level dedup summary: one row per component with its canonical
-    * (minimum) id and member count. Singleton nodes never appear in `pairs`
-    * and are implicitly their own clusters — callers keep them untouched.
-    */
-  def dedupClusters(pairs: DataFrame, srcCol: String, dstCol: String): DataFrame =
-    connectedComponents(pairs, srcCol, dstCol)
-      .groupBy(col("component"))
-      .agg(count(lit(1)).as("n_members"))
 }

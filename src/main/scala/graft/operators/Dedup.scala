@@ -58,68 +58,12 @@ object Dedup {
     x ^ (x >>> 31)
   }
 
-  /** MinHash signatures as `numHashes` wide columns (`mh0..mhN-1`).
-    *
-    * Scale design: each document's shingles are EXPLODED, hashed once with
-    * the codegen'd xxhash64, and the i-th hash function is the affine map
-    * `a_i * h + b_i` (mod 2^64 via Java wraparound, a_i odd → bijective).
-    * The `numHashes` `min(...)` aggregates combine map-side, so the shuffle
-    * carries one partial signature per (partition, doc) — never the shingle
-    * stream — and everything stays inside whole-stage codegen. This replaces
-    * the naive per-row 64×string-rehash formulation, which was ~50× slower
-    * (measured at sf0.001) because higher-order-function lambdas are
-    * interpreted per element.
-    */
-  def minhashSignatures(
-      df: DataFrame, textCol: String, idCol: String,
-      numHashes: Int = 64, shingleK: Int = 5): DataFrame = {
-    // Shingles via TextAnalysis.explodedShingles (the native WordShingles
-    // generator: one compiled pass per doc, narrow rows, no exchange —
-    // measured 1.7× the windowed form and ~20× the interpreted-HOF /
-    // kept-array forms, docs/PLANS.md q106_decontaminate). MinHash over
-    // the shingle MULTISET equals MinHash over the set, so no distinct
-    // pass is needed.
-    val exploded = TextAnalysis.explodedShingles(df, textCol, idCol, shingleK)
-      .withColumn("__h", xxhash64(col("__sh")))
-    val aggs = (0 until numHashes).map { i =>
-      val a = splitmix64(i.toLong * 2 + 1) | 1L
-      val b = splitmix64(i.toLong * 2 + 2)
-      min(col("__h") * a + b).as(s"mh$i")
-    }
-    exploded.groupBy(col(idCol)).agg(aggs.head, aggs.tail: _*)
-  }
-
-  /** Near-duplicate candidate pairs via MinHash + LSH banding: ids sharing
-    * at least one (band, bandHash) bucket. Output (id_a, id_b), id_a < id_b,
-    * deduplicated across bands. Band hashes are xxhash64 over that band's
-    * signature columns; candidates come from [[bucketPairs]] — one shuffle
-    * of (band, hash, id) triples, never documents, and the signature
-    * subtree is computed exactly once.
-    */
-  def minhashCandidatePairs(
-      df: DataFrame, textCol: String, idCol: String,
-      numHashes: Int = 64, bands: Int = 16, shingleK: Int = 5): DataFrame = {
-    require(numHashes % bands == 0, "numHashes must be divisible by bands")
-    val rowsPerBand = numHashes / bands
-    val sigs = minhashSignatures(df, textCol, idCol, numHashes, shingleK)
-      .withColumnRenamed(idCol, "__id")
-    val bandHashes = array((0 until bands).map { b =>
-      val bandCols = (b * rowsPerBand until (b + 1) * rowsPerBand).map(i => col(s"mh$i"))
-      xxhash64(lit(b) +: bandCols: _*)
-    }: _*)
-    val banded = sigs.select(col("__id"), posexplode(bandHashes).as(Seq("band", "band_hash")))
-    bucketPairs(banded, "band", "band_hash", "__id")
-  }
-
   /** MinHash signatures over a DuckDB-expressible hash family: the base
     * shingle hash is the first 7 md5 hex chars (28 bits) and the i-th hash
     * function is the affine map `(a_i*h + b_i) mod (2^31-1)` — products stay
     * under 2^59 so the identical arithmetic runs on any engine with 64-bit
     * integers and no wraparound (DuckDB raises on BIGINT overflow, which
-    * rules out [[minhashSignatures]]'s mod-2^64 family there). Same
-    * posexplode+lead shingling and map-side-combining min-agg shape as
-    * [[minhashSignatures]]; use that (xxhash64) family when oracle
-    * replayability is not needed — one xxhash64 beats an md5 per shingle.
+    * rules out a mod-2^64 affine family there).
     *
     * PRECONDITION (since the r16 fused kernel): `idCol` must be unique —
     * the kernel emits ONE signature row per INPUT row, where the previous
@@ -165,8 +109,7 @@ object Dedup {
   /** LSH banding on the md5 MinHash family: candidate pairs sharing at
     * least one band, where the band key is the band's signature values
     * joined with '_' (a plain string both engines build identically — no
-    * engine-specific band hash). Same shuffle shape as
-    * [[minhashCandidatePairs]]: the join carries (band, key, id), never
+    * engine-specific band hash). The join carries (band, key, id), never
     * documents or signatures.
     */
   def minhashCandidatePairsMd5(
@@ -207,16 +150,8 @@ object Dedup {
     */
   def incrementalCandidatePairsMd5(
       newDocs: DataFrame, index: DataFrame, textCol: String, idCol: String,
-      numHashes: Int = 64, bands: Int = 16, shingleK: Int = 5): DataFrame =
-    incrementalCandidatesFromBands(
-      minhashBandIndexMd5(newDocs, textCol, idCol, numHashes, bands, shingleK), index)
-
-  /** [[incrementalCandidatePairsMd5]] from a PRE-COMPUTED increment band
-    * table — for callers that need the increment's bands twice (the
-    * streaming path joins them for pairs AND appends them to the index;
-    * reusing one materialization halves the dominant signature cost).
-    */
-  def incrementalCandidatesFromBands(newBands: DataFrame, index: DataFrame): DataFrame = {
+      numHashes: Int = 64, bands: Int = 16, shingleK: Int = 5): DataFrame = {
+    val newBands = minhashBandIndexMd5(newDocs, textCol, idCol, numHashes, bands, shingleK)
     val cross = newBands
       .join(index.withColumnRenamed("__id", "__cid"), Seq("band", "band_key"))
       .where(col("__id") =!= col("__cid"))
@@ -377,16 +312,6 @@ object Dedup {
     // of forcing an unbounded table through the driver
     withDigs.join(verdicts, Seq("dig_a", "dig_b"))
       .select(col("id_a"), col("id_b"), col("jaccard"))
-  }
-
-  /** Full MinHash-LSH near-dup pipeline: candidates → exact Jaccard →
-    * threshold filter. Returns (id_a, id_b, jaccard) for near-duplicates.
-    */
-  def nearDuplicates(
-      df: DataFrame, textCol: String, idCol: String,
-      threshold: Double = 0.8, numHashes: Int = 64, bands: Int = 16, shingleK: Int = 5): DataFrame = {
-    val cand = minhashCandidatePairs(df, textCol, idCol, numHashes, bands, shingleK)
-    jaccardOnPairs(cand, df, textCol, idCol, shingleK).where(col("jaccard") >= threshold)
   }
 
   /** 64-bit SimHash of the token stream, computed with 64 partially

@@ -52,28 +52,4 @@ object Diff {
           .otherwise("unchanged"))
       .select(keyCols.map(col) :+ col("change"): _*)
   }
-
-  /** Schema drift between two snapshots — the metadata sibling of
-    * [[snapshotDiff]], the first gate a reload audit runs (a silently
-    * retyped or dropped column breaks every consumer downstream before
-    * any VALUE drifts): one row per column name present in either
-    * schema, status ∈ added | removed | retyped | unchanged with both
-    * type strings. Pure schema work — no job, no scan; safe to run
-    * against 100 TB tables because only footers are read.
-    */
-  def schemaDrift(oldDf: DataFrame, newDf: DataFrame): DataFrame = {
-    val spark = oldDf.sparkSession
-    import spark.implicits._
-    val o = oldDf.schema.fields.map(f => f.name -> f.dataType.simpleString).toMap
-    val n = newDf.schema.fields.map(f => f.name -> f.dataType.simpleString).toMap
-    (o.keySet ++ n.keySet).toSeq.sorted.map { c =>
-      val status = (o.get(c), n.get(c)) match {
-        case (None, Some(_)) => "added"
-        case (Some(_), None) => "removed"
-        case (Some(a), Some(b)) if a != b => "retyped"
-        case _ => "unchanged"
-      }
-      (c, status, o.getOrElse(c, ""), n.getOrElse(c, ""))
-    }.toDF("column", "status", "old_type", "new_type")
-  }
 }

@@ -51,9 +51,9 @@ object Drift {
 
   /** Both measures off an already-built `(__v double, cb long, cc long)`
     * value-level per-side count table — the entry point for stored-
-    * histogram state ([[graft.streaming.DriftStream]] keeps exactly this
-    * table per side and never revisits the corpora): measuring cost is
-    * O(distinct values), independent of corpus size.
+    * histogram state (a caller that keeps exactly this table per side
+    * never revisits the corpora): measuring cost is O(distinct values),
+    * independent of corpus size.
     *
     * Runs AT CALL TIME and returns the 1-row report as a local literal
     * (the fit contract): the count table is persisted across its three
@@ -62,7 +62,7 @@ object Drift {
     * poison Spark's plan-equality cache for the NEXT measurement over
     * the same paths (two reads of one root are sameResult even after
     * new files land, so a later call would silently get this call's
-    * data — the DriftStream batch-1 bug this contract fixed).
+    * data).
     */
   def driftFromCounts(counts: DataFrame, buckets: Int = 10): DataFrame = {
     require(buckets >= 2, s"buckets must be >= 2, got $buckets")

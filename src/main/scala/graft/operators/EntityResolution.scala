@@ -65,47 +65,6 @@ object EntityResolution {
   def resolveIncrement(existingAssign: DataFrame, existingVariants: DataFrame,
                        increment: DataFrame, strCol: String, idCol: String,
                        t: Int = 1): DataFrame = {
-    val (delta, touched) = incrementParts(
-      existingAssign, existingVariants, increment, strCol, idCol, t)
-    val untouchedPart = existingAssign
-      .join(broadcast(touched.withColumnRenamed("entity", "__t")),
-        col("entity") === col("__t"), "left_anti")
-    untouchedPart.select(col("id"), col("entity")).unionByName(delta)
-  }
-
-  /** Just the CHANGED rows of [[resolveIncrement]]: assignments for the
-    * increment's ids plus every member of a touched entity — the
-    * O(increment)-sized delta a latest-wins segment store appends per
-    * batch ([[graft.streaming.EntityResolutionStream]]); untouched
-    * entities are not re-emitted (their stored rows stay authoritative).
-    * `resolveIncrement == existingAssign \ touched ∪ this delta` by
-    * construction.
-    */
-  def resolveIncrementDelta(existingAssign: DataFrame, existingVariants: DataFrame,
-                            increment: DataFrame, strCol: String, idCol: String,
-                            t: Int = 1): DataFrame =
-    incrementParts(existingAssign, existingVariants, increment, strCol, idCol, t)._1
-
-  /** Assignment-only resolve: (id, entity) with entity = min id of the
-    * fuzzy-match component, singletons self-labeled — [[resolve]] without
-    * the golden-record election (the seed shape for the streaming twin).
-    */
-  def assignEntities(df: DataFrame, strCol: String, idCol: String,
-                     t: Int = 1): DataFrame = {
-    val pairs = FuzzyJoin.editDistanceKJoin(df, strCol, idCol, t)
-      .select(col("id_a"), col("id_b"))
-    val comps = Components.connectedComponents(pairs, "id_a", "id_b")
-    df.select(col(idCol).cast("long").as("id"))
-      .join(comps, Seq("id"), "left")
-      .select(col("id"), coalesce(col("component"), col("id")).as("entity"))
-  }
-
-  /** (delta assignments, touched entity labels) shared by the full and
-    * delta-only incremental forms.
-    */
-  private def incrementParts(existingAssign: DataFrame, existingVariants: DataFrame,
-                             increment: DataFrame, strCol: String, idCol: String,
-                             t: Int): (DataFrame, DataFrame) = {
     val incVars = FuzzyJoin.deletionVariants(increment, strCol, idCol, t)
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     val allVars = existingVariants.select(col("__id"), col("__s"), col("__vh"))
@@ -145,6 +104,9 @@ object EntityResolution {
       .distinct()
       .join(comps, Seq("id"), "left")
       .select(col("id"), coalesce(col("component"), col("id")).as("entity"))
-    (resolvedPart, touched)
+    val untouchedPart = existingAssign
+      .join(broadcast(touched.withColumnRenamed("entity", "__t")),
+        col("entity") === col("__t"), "left_anti")
+    untouchedPart.select(col("id"), col("entity")).unionByName(resolvedPart)
   }
 }

@@ -110,7 +110,7 @@ object HeavyHitters {
       total, k)
   }
 
-  /** The additive count-state for the incremental/streaming forms: exact
+  /** The additive count-state for the incremental forms: exact
     * (tok, cnt) of one corpus segment — DISTINCT-token cardinality (the
     * same state class as [[WordPiece.substringCounts]] / the unigram
     * word counts), map-side combined, never corpus-cardinality. Exact
@@ -126,7 +126,7 @@ object HeavyHitters {
     tokenCounts(textTokens(df, textCol), "tok")
 
   /** Exact heavy hitters off stored count segments (seg, tok, cnt) —
-    * the O(state) serving read for the incremental/streaming forms, and
+    * the O(state) serving read for the incremental forms, and
     * the SAME pigeonhole theorem lifted from partitions to segments:
     * if a token's global count exceeds n/(k+1) = Σn_i/(k+1), then in at
     * least one segment its count exceeds that segment's n_i/(k+1) — so

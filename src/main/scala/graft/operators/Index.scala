@@ -99,34 +99,6 @@ object Index {
       .where(col("doc_freq") >= minDf)
   }
 
-  /** N-way posting merge: fold any number of full-fidelity PARTIAL
-    * indexes (each an [[invertedIndex]] over a disjoint document subset,
-    * stacked as one DataFrame) into the index of the union corpus — the
-    * merge-on-read half of the LSM-style streaming indexer
-    * ([[graft.streaming.IndexStream]]): segments accumulate append-only,
-    * and this ONE term-keyed aggregation (map-side combinable: sums and
-    * list collection) reconstitutes the queryable index. [[mergeIndex]]
-    * is the 2-way join form (exchange-free over a bucketed base); this is
-    * the N-way aggregation form — same arithmetic, so the two agree
-    * exactly (spec-pinned).
-    */
-  def mergePartials(partials: DataFrame, minDf: Int = 1,
-                    maxPostings: Int = Int.MaxValue): DataFrame = {
-    require(minDf >= 1, s"minDf must be >= 1, got $minDf")
-    require(maxPostings >= 1, s"maxPostings must be >= 1, got $maxPostings")
-    partials
-      .groupBy(col("term"))
-      .agg(sum(col("term_freq")).as("term_freq"),
-        sort_array(flatten(collect_list(
-          transform(split(col("postings"), ","), _.cast("long"))))).as("__ids"))
-      .select(col("term"),
-        size(col("__ids")).cast("long").as("doc_freq"),
-        col("term_freq"),
-        array_join(transform(slice(col("__ids"), 1, maxPostings), _.cast("string")), ",")
-          .as("postings"))
-      .where(col("doc_freq") >= minDf)
-  }
-
   /** BM25 retrieval scoring for a FIXED query-term set (the serving-side
     * consumer of the inverted index, run as one batch program):
     *

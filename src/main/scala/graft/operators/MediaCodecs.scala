@@ -3,10 +3,10 @@ package graft.operators
 /** REAL pure-JVM media codecs — no external codec library:
   *   - PCM WAV (RIFF) audio and binary PPM (P6) images decode with byte
   *     arithmetic alone (sample rate, duration, RMS, zero-crossings;
-  *     dimensions, channel means, luminance; nearest-neighbour resize).
-  *   - PNG and JPEG decode/encode/resize through the JDK's own
+  *     dimensions, channel means, luminance).
+  *   - PNG and JPEG decode/encode through the JDK's own
   *     `javax.imageio` (headless-safe, ships in the standard library) —
-  *     real pixel rasters, real interpolation, not fakes.
+  *     real pixel rasters, not fakes.
   *   - MP4 CONTAINER demux is a byte-walk over the ISO BMFF box tree
   *     (ISO/IEC 14496-12): mvhd timescale/duration, tkhd dimensions,
   *     track count — real metadata from real parsing.
@@ -240,30 +240,6 @@ object MediaCodecs {
       PpmInfo(w, h, mr, mg, mb, 0.299 * mr + 0.587 * mg + 0.114 * mb)
     }
 
-  /** REAL nearest-neighbour resize of a P6 payload — source pixel
-    * (⌊x·w/W⌋, ⌊y·h/H⌋) for each target pixel, re-encoded as a valid P6.
-    */
-  def resizePpmNearest(bytes: Array[Byte], newW: Int, newH: Int): Option[Array[Byte]] = {
-    require(newW > 0 && newH > 0, "target dimensions must be positive")
-    ppmHeader(bytes).map { case (w, h, px) =>
-      val out = new Array[Byte](newW * newH * 3)
-      var y = 0
-      while (y < newH) {
-        val sy = y.toLong * h / newH
-        var x = 0
-        while (x < newW) {
-          val sx = x.toLong * w / newW
-          val src = px + 3 * (sy.toInt * w + sx.toInt)
-          val dst = 3 * (y * newW + x)
-          out(dst) = bytes(src); out(dst + 1) = bytes(src + 1); out(dst + 2) = bytes(src + 2)
-          x += 1
-        }
-        y += 1
-      }
-      encodePpm(newW, newH, out)
-    }
-  }
-
   /** Deterministic REAL WAV synthesis for the testdata corpus: a sine tone
     * whose frequency/length derive from the seed — a genuine decodable
     * asset with analytically known RMS (amp/√2) and zero-cross rate
@@ -457,30 +433,6 @@ object MediaCodecs {
         Some(PpmInfo(w, h, mr, mg, mb, 0.299 * mr + 0.587 * mg + 0.114 * mb))
       }
     }
-
-  /** REAL resize of a PNG/JPEG payload: decode, nearest-neighbour resample
-    * (deterministic — no antialias filter kernels), re-encode in the SAME
-    * sniffed container. Java2D nearest samples at destination pixel
-    * CENTERS (2x2→1x1 picks source (1,1)), a different-but-standard
-    * convention from [[resizePpmNearest]]'s floor map. None for
-    * undecodable payloads.
-    */
-  def resizeCompressedImage(bytes: Array[Byte], newW: Int, newH: Int): Option[Array[Byte]] = {
-    require(newW > 0 && newH > 0, "target dimensions must be positive")
-    for {
-      fmt <- sniffImageFormat(bytes)
-      img <- readImage(bytes)
-    } yield {
-      val out = new java.awt.image.BufferedImage(newW, newH,
-        java.awt.image.BufferedImage.TYPE_INT_RGB)
-      val g2 = out.createGraphics()
-      g2.setRenderingHint(java.awt.RenderingHints.KEY_INTERPOLATION,
-        java.awt.RenderingHints.VALUE_INTERPOLATION_NEAREST_NEIGHBOR)
-      g2.drawImage(img, 0, 0, newW, newH, null)
-      g2.dispose()
-      writeImage(out, fmt)
-    }
-  }
 
   /** Encode interleaved RGB bytes as PNG ("png", lossless) or JPEG
     * ("jpeg"). The PNG roundtrip through [[decodeCompressedImage]] is

@@ -16,21 +16,21 @@ import org.apache.spark.sql.functions._
   *   - REAL, pure-JVM ([[MediaCodecs]]): PCM WAV audio (RIFF chunk walk →
   *     sample rate, duration, RMS, peak, zero-cross rate), binary PPM
   *     (P6) images (header + raster), PNG/JPEG through the JDK's own
-  *     `javax.imageio` — real dimensions, channel means, luminance,
-  *     genuine nearest-neighbour resizes — MP4 CONTAINER demux via the
+  *     `javax.imageio` — real dimensions, channel means, luminance —
+  *     MP4 CONTAINER demux via the
   *     ISO BMFF box walk (duration, dimensions, track count), and
   *     Motion-JPEG video FRAME decode end-to-end (AVI RIFF demux →
-  *     per-frame JPEG decode → frame count, luma, temporal motion,
-  *     sampled thumbnails). No fakes.
+  *     per-frame JPEG decode → frame count, luma, temporal motion).
+  *     No fakes.
   *   - NOT DECODED only for H.264/H.265 FRAME payloads (the codec bytes
   *     inside mdat): frame decode is behind the pluggable [[FrameDecoder]]
   *     seam, and the JDK registers no decoder for those codecs — so they
   *     take the explicit -1 marker plane ("no decoder registered", not a
   *     fake of ours). A deployment with a real codec registers it via
   *     [[FrameDecoder.register]] and these paths light up untouched.
-  *     Byte-window frame sampling still emits fake-but-stable features so
-  *     the surrounding plumbing (schema, batching, partitioning, joins)
-  *     stays testable and is real.
+  *     The stub kernel still emits fake-but-stable features so the
+  *     surrounding plumbing (schema, batching, partitioning, joins) stays
+  *     testable and is real.
   * [[extractFeatures]] dispatches by mime type: decodable payloads get the
   * real kernel, everything else falls back to the stub; a malformed
   * payload of a decodable type yields the stub features too (quarantine
@@ -197,76 +197,6 @@ object Multimodal {
     }
   }
 
-  /** REAL image resize: P6 payloads through [[MediaCodecs.resizePpmNearest]],
-    * PNG/JPEG through [[MediaCodecs.resizeCompressedImage]] (javax.imageio
-    * decode → nearest-neighbour resample → re-encode in the same
-    * container). Width/height metadata updated; non-image and malformed
-    * payloads pass through unchanged (quarantine semantics). Same
-    * mapPartitions shape as [[extractFeatures]].
-    */
-  def resizeImages(media: Dataset[MediaRecord], newW: Int, newH: Int): Dataset[MediaRecord] = {
-    import media.sparkSession.implicits._
-    media.mapPartitions { it =>
-      it.map { m =>
-        val resized = m.mime_type match {
-          case "image/x-portable-pixmap" =>
-            MediaCodecs.resizePpmNearest(m.content, newW, newH)
-          case "image/png" | "image/jpeg" =>
-            MediaCodecs.resizeCompressedImage(m.content, newW, newH)
-          case _ => None
-        }
-        resized match {
-          case Some(bytes) =>
-            m.copy(content = bytes, width = Some(newW), height = Some(newH))
-          case None => m
-        }
-      }
-    }
-  }
-
-  /** STUB resize: real impl would decode, resample pixels, re-encode.
-    * The fake truncates/pads the payload to `targetBytes` deterministically,
-    * keeping the schema and partition behavior of the real operator.
-    */
-  def resize(media: Dataset[MediaRecord], targetBytes: Int): Dataset[MediaRecord] = {
-    import media.sparkSession.implicits._
-    media.mapPartitions { it =>
-      it.map { m =>
-        val resized = java.util.Arrays.copyOf(m.content, targetBytes)
-        m.copy(content = resized, width = m.width.map(_ => targetBytes), height = m.height.map(_ => 1))
-      }
-    }
-  }
-
-  /** REAL video frame sampling for Motion-JPEG assets: demux the AVI,
-    * decode every retained frame through the JPEG kernel, emit one row per
-    * sampled frame with its decoded statistics and a real nearest-
-    * neighbour THUMBNAIL (the frame resized and re-encoded as JPEG).
-    * Non-MJPEG and malformed payloads contribute no rows — quarantine is
-    * the [[extractFeatures]] marker's job; a frame table must only ever
-    * contain genuinely decoded frames. One-to-many flatMap inside
-    * partitions; per-asset fan-out is bounded by frame count / everyNth.
-    */
-  def sampleMjpegFrames(media: Dataset[MediaRecord], everyNth: Int,
-                        thumbW: Int = 16, thumbH: Int = 12): DataFrame = {
-    require(everyNth >= 1, s"everyNth must be >= 1, got $everyNth")
-    import media.sparkSession.implicits._
-    media.filter(_.modality == "video").flatMap { m =>
-      MediaCodecs.demuxAviMjpeg(m.content).toSeq.flatMap { case (_, frames) =>
-        frames.zipWithIndex.collect {
-          case (bytes, idx) if idx % everyNth == 0 =>
-            MediaCodecs.decodeCompressedImage(bytes).flatMap { info =>
-              MediaCodecs.resizeCompressedImage(bytes, thumbW, thumbH).map { thumb =>
-                (m.media_id, idx.toLong, info.width, info.height,
-                  math.rint(info.meanLuma * 1e6) / 1e6, hexDigest(bytes), thumb)
-              }
-            }
-        }.flatten
-      }
-    }.toDF("media_id", "frame_idx", "width", "height", "mean_luma",
-      "frame_digest", "thumbnail")
-  }
-
   /** Oracle-checkable slice of the MJPEG frame decoder: one row per
     * Motion-JPEG asset with the REALLY-demuxed-and-decoded frame count,
     * raster dimensions and fps, plus a quarantine flag (undecodable
@@ -327,47 +257,6 @@ object Multimodal {
             Some(w), Some(h), None, Some(nFrames * 100L))
         }
       }
-  }
-
-  /** STUB video frame sampling for codecs the JVM cannot decode
-    * (H.264/H.265): emits every `everyNth` byte-window as a "frame"
-    * record. MJPEG assets get the REAL [[sampleMjpegFrames]] path.
-    * Preserves the one-to-many explode shape (flatMap inside partitions)
-    * of the real op.
-    */
-  def sampleFrames(media: Dataset[MediaRecord], everyNth: Int, frameBytes: Int = 64): DataFrame = {
-    import media.sparkSession.implicits._
-    media.filter(_.modality == "video").flatMap { m =>
-      m.content.grouped(frameBytes).zipWithIndex.collect {
-        case (chunk, idx) if idx % everyNth == 0 =>
-          (m.media_id, idx.toLong, chunk.length.toLong, hexDigest(chunk))
-      }
-    }.toDF("media_id", "frame_idx", "frame_bytes", "frame_digest")
-  }
-
-  /** URI-referenced assets — the large-asset layout: payloads live as
-    * individual files in object storage and only METADATA rows flow through
-    * the warehouse until decode time. Reads the asset directory with
-    * Spark's `binaryFile` source (one input split per file, listing
-    * parallelized across the cluster, `pathGlobFilter`/recursive lookup
-    * available) and joins payloads to `meta` on the asset file name.
-    *
-    * `meta` must carry (asset_name, media_id, modality, mime_type, width,
-    * height, sample_rate, duration_ms). The join is an equi-join on
-    * asset_name: broadcast when metadata is small, shuffle otherwise —
-    * either way the BYTES move at most once, straight from the file scan
-    * into the consumer. Decode remains the stub kernels above (no codecs
-    * in this container); everything up to them — source, schema, join,
-    * partitioning — is the real operator.
-    */
-  def mediaFromBinaryFiles(spark: SparkSession, assetDir: String, meta: DataFrame): Dataset[MediaRecord] = {
-    import spark.implicits._
-    val assets = spark.read.format("binaryFile").load(assetDir)
-      .select(element_at(split(col("path"), "/"), -1).as("asset_name"), col("content"))
-    meta.join(assets, Seq("asset_name"))
-      .select(col("media_id"), col("modality"), col("content"), col("mime_type"),
-        col("width"), col("height"), col("sample_rate"), col("duration_ms"))
-      .as[MediaRecord]
   }
 
   /** Build a media table of GENUINELY DECODABLE assets from the documents

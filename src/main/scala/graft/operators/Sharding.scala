@@ -49,21 +49,6 @@ object Sharding {
       .drop("__key")
   }
 
-  /** Per-shard balance report: (shard, n_docs, n_tokens) — the check an
-    * export job runs before writing (a skewed shard starves data-parallel
-    * ranks). Token count = whitespace tokens of `textCol`, counted inside
-    * the same single aggregation.
-    */
-  def shardStats(df: DataFrame, idCol: String, textCol: String,
-                 numShards: Int): DataFrame =
-    df.withColumn("shard", (shuffleKey(col(idCol)) % numShards).cast("long"))
-      .groupBy(col("shard"))
-      .agg(
-        count(lit(1)).as("n_docs"),
-        sum(when(col(textCol).isNotNull,
-          size(split(trim(col(textCol)), "\\s+")).cast("long")).otherwise(0L))
-          .as("n_tokens"))
-
   /** GPT-style sequence-packing PLAN: conceptually, each shard's documents
     * are concatenated in their [[assignShards]] shuffle order and the
     * token stream is cut into fixed `seqLen`-token training sequences;

@@ -322,66 +322,6 @@ object Similarity {
       .select(col("query_id"), col("rank"), col("neighbor_id"), col("l2_dist"))
   }
 
-  /** Full IVF-PQ: coarse inverted lists PRUNE the candidate set, PQ codes
-    * price the survivors — the literal FAISS IVFx,PQy index as one
-    * relational program. The corpus is coarse-assigned to `numCoarse`
-    * lists (broadcast centroids + argmin, the [[ivfTopK]] shape) and
-    * PQ-encoded ([[Quantize.pqCodes]]); a query probes only its
-    * `numProbe` nearest lists, and ADC scores just the codes in those
-    * lists — per-query work drops from n·m additions to
-    * ~n·(numProbe/numCoarse)·m.
-    *
-    * Plan shape: centroids, probe table, and per-query distance tables
-    * all BROADCAST; the only corpus-cardinality operations are the scan,
-    * the code assignment, and ONE id-keyed join attaching list ids to
-    * codes. With numProbe == numCoarse the restriction is complete and
-    * the result EQUALS [[pqTopKWithCodes]] exactly (spec-asserted, the
-    * ivfTopK == bruteForce precedent). Output: (query_id, rank,
-    * neighbor_id, adc_dist).
-    */
-  def ivfPqTopK(queries: DataFrame, corpus: DataFrame, vecCol: String, idCol: String,
-                k: Int, numCoarse: Int = 16, numProbe: Int = 4,
-                m: Int = 4, subDim: Int = 16, numCentroids: Int = 8): DataFrame = {
-    import graft.functions.CosineSimilarity.cosineSim
-    val cents = seedCentroids(corpus, vecCol, idCol, numCoarse)
-    val byVec = Window.partitionBy(col("__vid")).orderBy(col("__csim").desc, col("__cid"))
-    val lists = corpus.select(col(idCol).as("__vid"), col(vecCol).as("__nv"))
-      .join(broadcast(cents))
-      .withColumn("__csim", cosineSim(col("__nv"), col("__cv")))
-      .withColumn("__rn", row_number().over(byVec))
-      .where(col("__rn") === 1)
-      .select(col("__vid"), col("__cid").as("__list"))
-    val cb = Quantize.pqCodebooks(corpus, vecCol, idCol, m, subDim, numCentroids)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val codes = Quantize.pqCodes(corpus, vecCol, idCol, cb, m, subDim)
-      .join(lists, col(idCol) === col("__vid"))
-      .drop("__vid")
-    val probes = queries.select(col(idCol).as("query_id"), col(vecCol).as("__pv"))
-      .join(broadcast(cents))
-      .withColumn("__csim", cosineSim(col("__pv"), col("__cv")))
-      .withColumn("__rn", row_number().over(
-        Window.partitionBy(col("query_id")).orderBy(col("__csim").desc, col("__cid"))))
-      .where(col("__rn") <= numProbe)
-      .select(col("query_id"), col("__cid").as("__list"))
-    val dt = Quantize.sliced(queries, vecCol, idCol, m, subDim)
-      .join(broadcast(Quantize.pqCodebookArrays(cb)), Seq("__ss"))
-      .select(col("__vid").as("query_id"),
-        col("__ss").cast("long").as("subspace"),
-        col("__cid").as("code"),
-        Quantize.l2Sq(col("__sv"), col("__cv"), subDim).cast("decimal(28,9)").as("__qd"))
-    val scored = codes
-      .join(broadcast(probes), Seq("__list"))
-      .join(broadcast(dt), Seq("query_id", "subspace", "code"))
-      .where(col("query_id") =!= col(idCol))
-      .groupBy(col("query_id"), col(idCol))
-      .agg(round(sum(col("__qd")).cast("double"), 6).as("adc_dist"))
-    val w = Window.partitionBy(col("query_id")).orderBy(col("adc_dist"), col(idCol))
-    scored
-      .withColumn("rank", row_number().over(w).cast("long"))
-      .where(col("rank") <= k)
-      .select(col("query_id"), col("rank"), col(idCol).as("neighbor_id"), col("adc_dist"))
-  }
-
   /** SRP-LSH ANN top-k: restrict each query to corpus vectors in the same
     * hyperplane bucket, then exact cosine within the bucket. Recall is
     * tunable via `planes` (fewer planes → bigger buckets → higher recall,

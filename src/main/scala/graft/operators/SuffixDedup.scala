@@ -314,22 +314,6 @@ object SuffixDedup {
       .agg(min(struct(col(idCol).as("i"), col("pos").as("p"))).as("__f"))
       .select(col("gram"), col("__f.i").as("first_id"), col("__f.p").as("first_pos"))
 
-  /** Merge an increment's gram-first table into the stored state — the
-    * O(increment ∪ touched-grams) state update: per gram, the smaller
-    * (id, pos) wins. Full-outer on the gram so unseen grams enter and
-    * untouched grams pass through.
-    */
-  def mergeFirsts(stored: DataFrame, incFirsts: DataFrame): DataFrame = {
-    val s = stored.select(col("gram"),
-      struct(col("first_id").as("i"), col("first_pos").as("p")).as("__s"))
-    val n = incFirsts.select(col("gram"),
-      struct(col("first_id").as("i"), col("first_pos").as("p")).as("__n"))
-    s.join(n, Seq("gram"), "full_outer")
-      .select(col("gram"),
-        least(col("__s"), col("__n")).as("__f"))
-      .select(col("gram"), col("__f.i").as("first_id"), col("__f.p").as("first_pos"))
-  }
-
   /** Incremental keep-first substring-dedup STRIP — [[stripAllButFirst]]
     * for a NEW batch against a stored corpus, in O(increment) work: the
     * increment never re-reads yesterday's documents, only the stored
@@ -350,39 +334,12 @@ object SuffixDedup {
     */
   def stripIncrement(storedFirsts: DataFrame, inc: DataFrame,
                      textCol: String, idCol: String,
-                     minLen: Int = 5): DataFrame =
-    stripFromGrams(storedFirsts, inc, textCol, idCol, minLen,
-      gramRows(inc, textCol, idCol, minLen))
-
-  /** [[stripIncrement]] plus the batch's own [[gramFirsts]] table from ONE
-    * materialized gram pass — the streaming-twin form: a micro-batch needs
-    * both the stripped output and its firsts (to append to the stored
-    * state), and computing them separately would explode the batch's
-    * shingles twice. The gram table is localCheckpointed so the two
-    * consumers share it.
-    */
-  def stripIncrementAndFirsts(storedFirsts: DataFrame, inc: DataFrame,
-                              textCol: String, idCol: String,
-                              minLen: Int = 5): (DataFrame, DataFrame) = {
+                     minLen: Int = 5): DataFrame = {
     val grams = gramRows(inc, textCol, idCol, minLen)
-      .localCheckpoint(true, org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val firsts = grams.groupBy(col("__gram").as("gram"))
-      .agg(min(struct(col(idCol).as("i"), col("pos").as("p"))).as("__f"))
-      .select(col("gram"), col("__f.i").as("first_id"), col("__f.p").as("first_pos"))
-    (stripFromGrams(storedFirsts, inc, textCol, idCol, minLen, grams), firsts)
-  }
-
-  /** Shared tail of the two increment forms: strip `inc` against the
-    * merged (stored ∪ increment) per-gram minimum, from an already-built
-    * gram table.
-    */
-  private def stripFromGrams(storedFirsts: DataFrame, inc: DataFrame,
-                             textCol: String, idCol: String, minLen: Int,
-                             grams: DataFrame): DataFrame = {
     val incFirsts = grams.groupBy(col("__gram"))
       .agg(min(struct(col(idCol).as("i"), col("pos").as("p"))).as("__n"))
-    // least() skips nulls (the mergeFirsts contract), so a gram the
-    // stored corpus never saw resolves to the increment's own first
+    // least() skips nulls, so a gram the stored corpus never saw
+    // resolves to the increment's own first
     val combined = incFirsts
       .join(storedFirsts.select(col("gram").as("__gram"),
         struct(col("first_id").as("i"), col("first_pos").as("p")).as("__s")),

@@ -453,22 +453,6 @@ object TextAnalysis {
       .where(col("n_docs") >= minDocs)
       .select(col("__sh").as("span"), col("n_docs"), col("n_occurrences"))
 
-  /** Per-document spans flagged by [[repeatedSpans]] — the "which rows of
-    * MY document are boilerplate" view that an exact-substring dedup pass
-    * removes. An equi-join of the (id, position, span) stream against the
-    * repeated-span inventory: shuffle ∝ span occurrences; at scale the
-    * surviving inventory is far smaller than the corpus and broadcasts.
-    * Returns (idCol, span, n_docs).
-    */
-  def flaggedSpans(df: DataFrame, textCol: String, idCol: String,
-                   k: Int = 8, minDocs: Int = 2): DataFrame = {
-    val inventory = repeatedSpans(df, textCol, idCol, k, minDocs)
-    explodedShingles(df, textCol, idCol, k)
-      .select(col(idCol), col("__sh").as("span")).distinct()
-      .join(inventory, Seq("span"))
-      .select(col(idCol), col("span"), col("n_docs"))
-  }
-
   /** Exact-substring dedup REWRITE — the pass that actually removes the
     * boilerplate [[repeatedSpans]] flags (dedup-train-data style: strip
     * every k-token window that recurs in >= `minDocs` distinct documents,

@@ -76,9 +76,7 @@ object DocQueries {
 
   /** MinHash+LSH near-duplicate candidate pairs, on the md5 mod-prime
     * family so the full pipeline (shingle → 64 minhashes → 16-band LSH →
-    * candidate join) replays exactly in DuckDB. The xxhash64 family
-    * ([[Dedup.minhashCandidatePairs]], faster per shingle) stays the
-    * production default and is pinned by DedupSpec's planted duplicates.
+    * candidate join) replays exactly in DuckDB.
     */
   def q27MinhashPairs(spark: SparkSession, dir: String): DataFrame =
     Dedup.minhashCandidatePairsMd5(Tables(spark, dir).documents, "text", "doc_id",

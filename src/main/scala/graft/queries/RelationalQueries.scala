@@ -195,9 +195,8 @@ object RelationalQueries {
       .orderBy("o_custkey", "rnk")
   }
 
-  /** Streaming-shaped batch aggregation: hourly tumbling window over the
-    * events table (the batch twin of the Structured Streaming job in
-    * graft.streaming.EventsStream — identical date_trunc bucketing).
+  /** Hourly tumbling-window aggregation over the events table
+    * (date_trunc bucketing).
     */
   def q13EventsHourly(spark: SparkSession, dir: String): DataFrame =
     Tables(spark, dir).events

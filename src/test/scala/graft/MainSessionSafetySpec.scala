@@ -43,12 +43,6 @@ class MainSessionSafetySpec extends SparkTestBase {
     assertSessionUsable("SriMain.main")
   }
 
-  test("StreamMain.main twice leaves the host session usable") {
-    graft.streaming.StreamMain.main(Array(sf0001))
-    graft.streaming.StreamMain.main(Array(sf0001))
-    assertSessionUsable("StreamMain.main")
-  }
-
   test("ScaleUp.main twice leaves the host session usable") {
     val out1 = java.nio.file.Files.createTempDirectory("scaleup-safety-a").toString
     val out2 = java.nio.file.Files.createTempDirectory("scaleup-safety-b").toString

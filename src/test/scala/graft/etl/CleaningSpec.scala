@@ -24,10 +24,4 @@ class CleaningSpec extends SparkTestBase {
       .map(r => if (r.isNullAt(0)) null else r.getDate(0).toString)
     assert(out.toSeq === Seq("2024-12-28", "2023-01-05", null, null))
   }
-
-  test("foldAccents normalizes Spanish diacritics only") {
-    val df = Seq("ESPAÑA", "IMPORTACIÓN", "camión útil", "plain").toDF("s")
-    val out = df.select(Cleaning.foldAccents(col("s"))).collect().map(_.getString(0))
-    assert(out.toSeq === Seq("ESPANA", "IMPORTACION", "camion util", "plain"))
-  }
 }

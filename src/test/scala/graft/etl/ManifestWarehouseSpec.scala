@@ -100,51 +100,6 @@ class ManifestWarehouseSpec extends SparkTestBase {
     assert(wh.read("t").select("tag").collect().map(_.getString(0)).toSeq === Seq("v7"))
   }
 
-  test("compact collapses a many-file generation; content identical; old gen immutable until vacuum") {
-    val root = tmp("mwh-compact")
-    val wh = ManifestWarehouse(spark, root)
-    val rows = (1L to 5000L).map(i => (i, s"name_$i", i * 1.5))
-    // land the table deliberately fragmented: 64 tiny files
-    wh.write("t", rows.toDF("id", "name", "v").repartition(64))
-    val before = wh.read("t")
-    val (nBefore, nAfter, bytes) = wh.compact("t", targetFileBytes = 1L << 30)
-    assert(nBefore === 64L, s"expected 64 input files, saw $nBefore")
-    assert(nAfter === 1L, s"one target-sized output expected, saw $nAfter")
-    assert(bytes > 0L)
-    // content identical, schema preserved
-    val after = wh.read("t")
-    assert(after.schema === before.schema)
-    assert(after.orderBy("id").collect().toSeq ===
-      rows.toDF("id", "name", "v").orderBy("id").collect().toSeq)
-    // a reader that resolved the OLD generation before the compact still
-    // reads it completely (immutability), until vacuum reclaims it
-    assert(before.count() === 5000L)
-    wh.vacuum("t", keepLast = 1)
-    assert(wh.read("t").count() === 5000L)
-    // a mid-sized target splits into multiple near-equal files
-    val (_, nSplit, total) = wh.compact("t", targetFileBytes = math.max(1L, bytes / 3))
-    assert(nSplit >= 2L && nSplit <= 5L, s"expected ~3-4 files, saw $nSplit (bytes=$total)")
-    assert(wh.read("t").count() === 5000L)
-  }
-
-  test("compacting a PARTITIONED table lands ≤1 file per partition value, not nFiles × nValues") {
-    val root = tmp("mwh-compact-part")
-    val wh = ManifestWarehouse(spark, root, partitionCols = Map("t" -> Seq("year")))
-    val rows = (1L to 4000L).map(i => (i, 2020 + (i % 4).toInt, s"name_$i"))
-    // fragmented write: every task holds rows of all 4 partition values,
-    // so the initial layout is ~32×4 files
-    wh.write("t", rows.toDF("id", "year", "name").repartition(32))
-    val (nBefore, nAfter, _) = wh.compact("t", targetFileBytes = 1L << 30)
-    assert(nBefore > 100L, s"expected a fragmented starting layout, saw $nBefore")
-    // one target file total → repartition(1, year) still writes one file
-    // per partition DIRECTORY, never nFiles × nValues
-    assert(nAfter === 4L, s"expected exactly 1 file per partition value, saw $nAfter")
-    val after = wh.read("t")
-    assert(after.count() === 4000L)
-    assert(after.orderBy("id").collect().toSeq ===
-      rows.toDF("id", "year", "name").orderBy("id").collect().toSeq)
-  }
-
   test("SriPipeline runs unchanged against the manifest warehouse; golden counts hold") {
     val root = tmp("mwh-sri")
     val wh = ManifestWarehouse(spark, root,

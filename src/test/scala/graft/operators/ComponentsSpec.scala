@@ -42,13 +42,6 @@ class ComponentsSpec extends SparkTestBase {
     assert(fast == want && dist == want)
   }
 
-  test("dedupClusters counts members per component") {
-    val pairs = Seq((1L, 2L), (2L, 3L), (10L, 11L)).toDF("id_a", "id_b")
-    val got = Components.dedupClusters(pairs, "id_a", "id_b")
-      .as[(Long, Long)].collect().toMap
-    assert(got == Map(1L -> 3L, 10L -> 2L))
-  }
-
   test("null endpoints are dropped identically on both paths") {
     val pairs = Seq((Option(1L), Option(2L)), (Option.empty[Long], Option(5L)),
       (Option(7L), Option.empty[Long])).toDF("id_a", "id_b")

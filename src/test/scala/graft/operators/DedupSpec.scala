@@ -19,18 +19,7 @@ class DedupSpec extends SparkTestBase {
     assert(Dedup.exactDedup(d, "text", "doc_id").count() === 2L)
   }
 
-  test("minhash LSH finds planted near-duplicates, not unrelated docs") {
-    val nearDup = base.replace("quick", "swift") // 1-word edit
-    val unrelated = "completely different content about spark catalyst optimizer rules and physical plans for distributed joins at large scale with many executors running"
-    val d = docs(1L -> base, 2L -> nearDup, 3L -> unrelated, 4L -> base)
-    val pairs = Dedup.minhashCandidatePairs(d, "text", "doc_id").collect()
-      .map(r => (r.getLong(0), r.getLong(1))).toSet
-    assert(pairs.contains((1L, 4L)), "exact copies must collide")
-    assert(pairs.contains((1L, 2L)) || pairs.contains((2L, 4L)), "near-dup should collide in some band")
-    assert(!pairs.exists(p => p._1 == 3L || p._2 == 3L), "unrelated doc must not pair")
-  }
-
-  test("md5 minhash LSH (oracle family) matches the xxhash64 family's behavior") {
+  test("md5 minhash LSH finds planted near-duplicates, not unrelated docs") {
     val nearDup = base.replace("quick", "swift")
     val unrelated = "completely different content about spark catalyst optimizer rules and physical plans for distributed joins at large scale with many executors running"
     val d = docs(1L -> base, 2L -> nearDup, 3L -> unrelated, 4L -> base)
@@ -59,17 +48,6 @@ class DedupSpec extends SparkTestBase {
       "exact copies are hamming-0 pairs")
   }
 
-  test("nearDuplicates thresholds candidates by exact Jaccard") {
-    val nearDup = base.replace("quick", "swift")
-    val d = docs(1L -> base, 2L -> nearDup, 3L -> base)
-    val out = Dedup.nearDuplicates(d, "text", "doc_id", threshold = 0.5)
-      .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
-    assert(out.contains((1L, 3L)))
-    val j13 = Dedup.nearDuplicates(d, "text", "doc_id", threshold = 0.999)
-      .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
-    assert(j13 === Set((1L, 3L)), "only the exact pair survives a ~1.0 threshold")
-  }
-
   test("simhash: identical docs equal, near-dups close, unrelated far") {
     val nearDup = base.replace("quick", "swift")
     val unrelated = "alpha beta gamma delta epsilon zeta eta theta iota kappa lambda mu nu xi omicron pi rho sigma tau upsilon"
@@ -90,6 +68,14 @@ class DedupSpec extends SparkTestBase {
     val j = Dedup.jaccardOnPairs(pairs, d, "text", "doc_id", k = 1)
       .collect()(0).getAs[Double]("jaccard")
     assert(j === 0.5)
+    // default 5-shingles: an exact copy scores 1.0, a one-word edit less
+    val nearDup = base.replace("quick", "swift")
+    val d5 = docs(1L -> base, 2L -> nearDup, 3L -> base)
+    val j5 = Dedup.jaccardOnPairs(Seq((1L, 2L), (1L, 3L)).toDF("id_a", "id_b"),
+        d5, "text", "doc_id")
+      .collect().map(r => (r.getLong(0), r.getLong(1)) -> r.getDouble(2)).toMap
+    assert(j5((1L, 3L)) === 1.0)
+    assert(j5((1L, 2L)) >= 0.5 && j5((1L, 2L)) < 0.999, s"near-dup jaccard ${j5((1L, 2L))}")
   }
 
   test("duplicate input ids never emit self-pairs") {
@@ -98,7 +84,7 @@ class DedupSpec extends SparkTestBase {
     // bucket formulation filters it explicitly (ADVICE r02)
     val unrelated = "alpha beta gamma delta epsilon zeta eta theta iota kappa lambda mu nu xi omicron pi rho sigma tau upsilon"
     val d = docs(1L -> base, 2L -> base, 3L -> unrelated, 3L -> unrelated)
-    val mh = Dedup.minhashCandidatePairs(d, "text", "doc_id").collect()
+    val mh = Dedup.minhashCandidatePairsMd5(d, "text", "doc_id").collect()
       .map(r => (r.getLong(0), r.getLong(1)))
     assert(mh.forall { case (a, b) => a != b }, s"self-pair in ${mh.toSeq}")
     assert(mh.contains((1L, 2L)), "distinct exact-copy ids must still pair")

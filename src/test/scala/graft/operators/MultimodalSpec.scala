@@ -30,40 +30,6 @@ class MultimodalSpec extends SparkTestBase {
     assert(r.getAs[String]("content_digest").length === 32)
   }
 
-  test("binaryFile asset path: externally-stored payloads join metadata and match the inline path") {
-    import spark.implicits._
-    // materialize a few docs as individual asset files, the large-asset
-    // layout the binaryFile source exists for
-    val sample = docs.orderBy("doc_id").limit(20)
-      .select(col("doc_id"), col("text")).as[(Long, String)].collect()
-    val dir = java.nio.file.Files.createTempDirectory("assets")
-    sample.foreach { case (id, text) =>
-      java.nio.file.Files.write(dir.resolve(s"asset_$id.bin"), text.getBytes("UTF-8"))
-    }
-    val meta = sample.map { case (id, _) =>
-      (s"asset_$id.bin", id, "image", "image/png", Some(640), Some(480),
-        None: Option[Int], None: Option[Long])
-    }.toSeq.toDF("asset_name", "media_id", "modality", "mime_type",
-      "width", "height", "sample_rate", "duration_ms")
-    val external = Multimodal.mediaFromBinaryFiles(spark, dir.toString, meta)
-    val extFeats = Multimodal.extractFeatures(external).toDF()
-      .select("media_id", "content_digest").collect()
-      .map(r => r.getLong(0) -> r.getString(1)).toMap
-    // the inline (parquet-embedded) path must produce byte-identical payloads
-    val inlineFeats = Multimodal.extractFeatures(
-        Multimodal.mediaFromDocuments(spark, docs.where(col("doc_id").isin(sample.map(_._1): _*))))
-      .toDF().select("media_id", "content_digest").collect()
-      .map(r => r.getLong(0) -> r.getString(1)).toMap
-    assert(extFeats.size === 20)
-    assert(extFeats === inlineFeats)
-  }
-
-  test("resize stub truncates payloads preserving schema") {
-    val resized = Multimodal.resize(media, targetBytes = 32).toDF()
-    val lens = resized.select(octet_length(col("content")).as("l")).distinct().collect()
-    assert(lens.map(_.getInt(0)).toSet === Set(32))
-  }
-
   test("WAV codec: encode/decode roundtrip recovers real signal statistics") {
     val rate = 16000
     val freq = 440.0
@@ -96,7 +62,7 @@ class MultimodalSpec extends SparkTestBase {
     assert(MediaCodecs.decodeWav(evil2) === Some(info))
   }
 
-  test("PPM codec: decode means are exact; nearest resize picks real source pixels") {
+  test("PPM codec: decode means are exact; headers parse; truncation quarantines") {
     // 2x2: red, green / blue, white
     val rgb: Array[Byte] = Array(
       255.toByte, 0, 0, 0, 255.toByte, 0,
@@ -105,14 +71,6 @@ class MultimodalSpec extends SparkTestBase {
     val info = MediaCodecs.decodePpm(ppm).get
     assert(info.width === 2 && info.height === 2)
     assert(info.meanR === 127.5 && info.meanG === 127.5 && info.meanB === 127.5)
-    // upscale 2x2 -> 4x4: each source pixel becomes a 2x2 block (floor map)
-    val up = MediaCodecs.resizePpmNearest(ppm, 4, 4).get
-    val upInfo = MediaCodecs.decodePpm(up).get
-    assert(upInfo.width === 4 && upInfo.height === 4)
-    assert(upInfo.meanR === 127.5 && upInfo.meanG === 127.5 && upInfo.meanB === 127.5)
-    // downscale to 1x1 picks pixel (0,0) = red
-    val down = MediaCodecs.decodePpm(MediaCodecs.resizePpmNearest(ppm, 1, 1).get).get
-    assert(down.meanR === 255.0 && down.meanG === 0.0 && down.meanB === 0.0)
     // comment-bearing headers parse; truncated rasters quarantine
     val commented = ("P6\n# a comment\n2 2\n255\n".getBytes("US-ASCII") ++ rgb)
     assert(MediaCodecs.decodePpm(commented).get.width === 2)
@@ -122,7 +80,7 @@ class MultimodalSpec extends SparkTestBase {
       ("P6\n99999999999 2\n255\n".getBytes("US-ASCII") ++ rgb)).isEmpty)
   }
 
-  test("PNG codec: lossless roundtrip recovers exact means; resize; quarantine") {
+  test("PNG codec: lossless roundtrip recovers exact means; quarantine") {
     // same 2x2 raster as the PPM test: red, green / blue, white
     val rgb: Array[Byte] = Array(
       255.toByte, 0, 0, 0, 255.toByte, 0,
@@ -133,24 +91,9 @@ class MultimodalSpec extends SparkTestBase {
     assert(info.width === 2 && info.height === 2)
     // PNG is lossless: decoded means are EXACT, same as the P6 payload
     assert(info.meanR === 127.5 && info.meanG === 127.5 && info.meanB === 127.5)
-    // upscale 2x2 -> 4x4 nearest keeps the means; downscale 1x1 picks (0,0)=red
-    val up = MediaCodecs.decodeCompressedImage(
-      MediaCodecs.resizeCompressedImage(png, 4, 4).get).get
-    assert(up.width === 4 && up.height === 4)
-    assert(up.meanR === 127.5 && up.meanG === 127.5 && up.meanB === 127.5)
-    // Java2D nearest samples destination pixel CENTERS: 2x2 -> 1x1 maps
-    // (0.5,0.5) back to source (1,1) = white (the floor-map PPM kernel
-    // would pick (0,0) = red — both are standard conventions)
-    val down = MediaCodecs.decodeCompressedImage(
-      MediaCodecs.resizeCompressedImage(png, 1, 1).get).get
-    assert(down.meanR === 255.0 && down.meanG === 255.0 && down.meanB === 255.0)
-    // resize preserves the container format
-    assert(MediaCodecs.sniffImageFormat(
-      MediaCodecs.resizeCompressedImage(png, 4, 4).get) === Some("png"))
     // truncated stream and non-image bytes quarantine as None, never throw
     assert(MediaCodecs.decodeCompressedImage(png.take(20)).isEmpty)
     assert(MediaCodecs.decodeCompressedImage("not an image".getBytes).isEmpty)
-    assert(MediaCodecs.resizeCompressedImage(png.take(20), 4, 4).isEmpty)
   }
 
   test("JPEG codec: real lossy decode — dimensions exact, means approximate") {
@@ -164,9 +107,6 @@ class MultimodalSpec extends SparkTestBase {
     assert(math.abs(info.meanR - 100.0) < 3.0, s"meanR=${info.meanR}")
     assert(math.abs(info.meanG - 100.0) < 3.0)
     assert(math.abs(info.meanB - 100.0) < 3.0)
-    val resized = MediaCodecs.resizeCompressedImage(jpg, 8, 8).get
-    assert(MediaCodecs.sniffImageFormat(resized) === Some("jpeg"))
-    assert(MediaCodecs.decodeCompressedImage(resized).get.width === 8)
     // a PNG mislabeled as JPEG still decodes: dispatch sniffs bytes
     val png = MediaCodecs.encodeImage(2, 2, Array.fill[Byte](12)(7), "png")
     assert(MediaCodecs.decodeCompressedImage(png).get.width === 2)
@@ -237,17 +177,6 @@ class MultimodalSpec extends SparkTestBase {
         assert(math.abs(f.feature(3) - 48 / 4096.0f) < 1e-6)
         assert(f.feature(4) === 1.0f, "one track written, one parsed")
       }
-    }
-    // real resize end-to-end: every image payload becomes a valid 8x6
-    // raster in its own container
-    val resized = Multimodal.resizeImages(assets, 8, 6)
-      .filter(_.modality == "image").collect()
-    assert(resized.nonEmpty)
-    resized.foreach { m =>
-      val info = (if (m.mime_type == "image/png") MediaCodecs.decodeCompressedImage(m.content)
-                  else MediaCodecs.decodePpm(m.content)).get
-      assert(info.width === 8 && info.height === 6)
-      assert(m.width === Some(8) && m.height === Some(6))
     }
   }
 
@@ -355,44 +284,6 @@ class MultimodalSpec extends SparkTestBase {
       if (id % 5 == 4) assert(!decoded && n === -1L && w === -1L && h === -1L && fps === -1.0)
       else assert(decoded && n === 3 + id % 5 && w === 32L && h === 24L && fps === 10.0)
     }
-  }
-
-  test("MJPEG frame sampling: real decoded frames with real thumbnails, stride honored") {
-    import spark.implicits._
-    val docs = spark.read.parquet("/root/testdata/sf0.001/documents.parquet").limit(60)
-    val assets = Multimodal.mediaRealAssets(spark, docs)
-    val frames = Multimodal.sampleMjpegFrames(assets, everyNth = 2).cache()
-    val rows = frames.collect()
-    assert(rows.nonEmpty)
-    // only MJPEG assets contribute; every row is a genuinely decoded frame
-    val mjpegIds = assets.collect()
-      .filter(m => m.modality == "video" && m.mime_type == "video/x-msvideo")
-      .map(m => m.media_id -> (3 + m.media_id % 5).toInt).toMap
-    val byId = rows.groupBy(_.getAs[Long]("media_id"))
-    assert(byId.keySet.subsetOf(mjpegIds.keySet), "mp4 rows must contribute no fake frames")
-    assert(byId.keySet === mjpegIds.keySet)
-    byId.foreach { case (id, rs) =>
-      val expected = (0 until mjpegIds(id)).count(_ % 2 == 0)
-      assert(rs.length === expected, s"stride: every 2nd of ${mjpegIds(id)} frames")
-      assert(rs.forall(_.getAs[Int]("width") === 32))
-      rs.foreach { r =>
-        assert(r.getAs[Long]("frame_idx") % 2 === 0)
-        // the thumbnail is itself a real decodable 16x12 JPEG
-        val t = MediaCodecs.decodeCompressedImage(r.getAs[Array[Byte]]("thumbnail")).get
-        assert(t.width === 16 && t.height === 12)
-      }
-    }
-    frames.unpersist()
-  }
-
-  test("frame sampling explodes video rows only") {
-    val frames = Multimodal.sampleFrames(media, everyNth = 2)
-    val n = frames.count()
-    assert(n > 0)
-    val videoIds = media.toDF().where(col("modality") === "video")
-      .select("media_id").collect().map(_.getLong(0)).toSet
-    val frameIds = frames.select("media_id").distinct().collect().map(_.getLong(0)).toSet
-    assert(frameIds.subsetOf(videoIds))
   }
 
   test("aHash of a planted block image equals the packed plant bits, through the real codec") {

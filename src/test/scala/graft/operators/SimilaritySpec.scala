@@ -207,35 +207,6 @@ class SimilaritySpec extends SparkTestBase {
     assert(pq === again)
   }
 
-  test("IVF-PQ with full probing equals pure PQ exactly; partial probing prunes validly") {
-    val emb = spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet")
-    val queries = emb.where(pmod(col("vec_id"), lit(25)) === 0)
-    def asRows(df: org.apache.spark.sql.DataFrame) = df
-      .orderBy("query_id", "rank").collect().map(_.toString).toSeq
-    // complete restriction: probing every list must reproduce pqTopK
-    val full = asRows(Similarity.ivfPqTopK(queries, emb, "embedding", "vec_id",
-      k = 5, numCoarse = 8, numProbe = 8))
-    val pure = asRows(Similarity.pqTopK(queries, emb, "embedding", "vec_id", k = 5))
-    assert(full.nonEmpty && full === pure)
-    // partial probing: a subset of the full result per query, same ADC
-    // distance for every surviving pair, ranks still dense from 1
-    val part = Similarity.ivfPqTopK(queries, emb, "embedding", "vec_id",
-      k = 5, numCoarse = 8, numProbe = 2)
-    val pureMap = Similarity.pqTopK(queries, emb, "embedding", "vec_id", k = 1000)
-      .collect().map(r => (r.getAs[Long]("query_id"), r.getAs[Long]("neighbor_id")) ->
-        r.getAs[Double]("adc_dist")).toMap
-    val partRows = part.collect()
-    assert(partRows.nonEmpty)
-    partRows.foreach { r =>
-      val key = (r.getAs[Long]("query_id"), r.getAs[Long]("neighbor_id"))
-      assert(pureMap.contains(key), s"pair $key not in the unpruned ADC set")
-      assert(pureMap(key) === r.getAs[Double]("adc_dist"), s"ADC drifted for $key")
-    }
-    val ranks = partRows.groupBy(_.getAs[Long]("query_id"))
-      .values.map(_.map(_.getAs[Long]("rank")).sorted.toSeq)
-    assert(ranks.forall(rs => rs == (1L to rs.length)), "ranks must be dense from 1")
-  }
-
   test("hyperplane bucket is deterministic") {
     val emb = spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet").limit(50)
     val b1 = emb.select(col("vec_id"), Similarity.hyperplaneBucket(col("embedding"), 8).as("b")).collect()

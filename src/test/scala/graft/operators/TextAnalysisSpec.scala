@@ -41,16 +41,6 @@ class TextAnalysisSpec extends SparkTestBase {
     assert(one("a b") === 3L)
   }
 
-  test("flagged spans: per-doc view joins back only inventory spans") {
-    val d = Seq(
-      (1L, "x y z tail one"),
-      (2L, "x y z other tail"),
-      (3L, "nothing shared here at all")).toDF("doc_id", "text")
-    val out = TextAnalysis.flaggedSpans(d, "text", "doc_id", k = 3, minDocs = 2)
-      .collect().map(r => (r.getLong(0), r.getString(1))).toSet
-    assert(out === Set((1L, "x y z"), (2L, "x y z")))
-  }
-
   test("bigram LM: exact conditional probabilities on a known corpus") {
     // bigrams: doc1: (a b), (b a), (a b); doc2: (a c)
     // c(a,b)=2 c(b,a)=1 c(a,c)=1; c(a,·)=3 c(b,·)=1
