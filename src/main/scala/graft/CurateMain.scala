@@ -4,6 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.storage.StorageLevel
 import graft.operators.{Curriculum, Dedup, Multimodal, Sampling, Sharding, TextAnalysis}
+import graft.sources.Parquet
 
 /** End-to-end curation CLI — the product surface of the LLM-data half of
   * the engine, the way [[graft.etl.SriMain]] is for the star-schema ETL
@@ -135,7 +136,7 @@ object CurateMain {
       .config("spark.sql.adaptive.enabled", "true"))
     spark.sparkContext.setLogLevel("WARN")
 
-    val docs = spark.read.parquet(docsPath)
+    val docs = Parquet.read(spark, docsPath)
     val (sharded, textCounts) = curate(spark, docs, numShards)
 
     // one directory per split, shard-partitioned, training-order sort key
@@ -149,7 +150,7 @@ object CurateMain {
     val counts = mediaPath match {
       case Some(path) =>
         import spark.implicits._
-        val media = spark.read.parquet(path).as[Multimodal.MediaRecord]
+        val media = Parquet.read(spark, path).as[Multimodal.MediaRecord]
         val (keptFeats, mediaCounts) = curateMedia(spark, media)
         keptFeats.write.mode("overwrite").parquet(s"$outDir/media_features")
         textCounts ++ mediaCounts

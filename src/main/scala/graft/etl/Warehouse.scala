@@ -1,6 +1,10 @@
 package graft.etl
 
 import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
+import org.apache.spark.sql.functions.col
+import org.apache.spark.sql.types.StructType
+
+import graft.sources.Parquet
 
 /** Warehouse abstraction (ref S2/S3: BigQuery WRITE_TRUNCATE load +
   * SELECT * readback, dags/sri_vehiculos_etl_dag.py:99-114, :421-434).
@@ -13,6 +17,15 @@ import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
 trait Warehouse {
   def write(name: String, df: DataFrame): Unit
   def read(name: String): DataFrame
+}
+
+object Warehouse {
+  /** `df` in the declared column order and types. A parquet read puts
+    * partition columns last, and an inferring read types them from the
+    * directory names (long → int).
+    */
+  private[etl] def asDeclared(df: DataFrame, schema: StructType): DataFrame =
+    df.select(schema.fields.map(f => col(f.name).cast(f.dataType).as(f.name)): _*)
 }
 
 /** Parquet-directory warehouse. `partitionCols` lets large facts be written
@@ -31,7 +44,7 @@ final case class ParquetWarehouse(
     * TrieMap: independent tables may be written concurrently
     * (SriPipeline's parallel dim fan-out).
     */
-  private val writtenSchemas = scala.collection.concurrent.TrieMap.empty[String, org.apache.spark.sql.types.StructType]
+  private val writtenSchemas = scala.collection.concurrent.TrieMap.empty[String, StructType]
 
   override def write(name: String, df: DataFrame): Unit = {
     writtenSchemas(name) = df.schema
@@ -42,14 +55,12 @@ final case class ParquetWarehouse(
     }
   }
 
-  override def read(name: String): DataFrame = {
-    val raw = spark.read.parquet(s"$root/$name")
-    writtenSchemas.get(name) match {
-      case Some(schema) =>
-        raw.select(schema.fields.map(f =>
-          org.apache.spark.sql.functions.col(f.name).cast(f.dataType).as(f.name)): _*)
-      case None => raw
-    }
+  /** Reads back with the schema this warehouse wrote, so no footer is
+    * inferred; a table it did not write goes through the reader's cache.
+    */
+  override def read(name: String): DataFrame = writtenSchemas.get(name) match {
+    case Some(schema) => Warehouse.asDeclared(Parquet.read(spark, s"$root/$name", schema), schema)
+    case None => Parquet.read(spark, s"$root/$name")
   }
 
   /** Bucketed (and optionally sort-ordered) catalog table write: tables
@@ -115,8 +126,7 @@ final case class ManifestWarehouse(
   private def manifestPath(name: String) = Paths.get(tableDir(name), "_MANIFEST.json")
 
   /** (generation, genDir, schema) of the committed generation, if any. */
-  private def currentManifest(name: String):
-      Option[(Long, String, org.apache.spark.sql.types.StructType)] = {
+  private def currentManifest(name: String): Option[(Long, String, StructType)] = {
     val p = manifestPath(name)
     if (!Files.exists(p)) None
     else {
@@ -134,7 +144,7 @@ final case class ManifestWarehouse(
       val schema = org.apache.spark.sql.types.DataType.fromJson(
         org.json4s.jackson.JsonMethods.compact(
           org.json4s.jackson.JsonMethods.render(j \ "schema")))
-        .asInstanceOf[org.apache.spark.sql.types.StructType]
+        .asInstanceOf[StructType]
       Some((gen, dir, schema))
     }
   }
@@ -169,9 +179,7 @@ final case class ManifestWarehouse(
   override def read(name: String): DataFrame = {
     val (_, dir, schema) = currentManifest(name).getOrElse(
       sys.error(s"table $name has no committed generation under $root"))
-    spark.read.parquet(s"${tableDir(name)}/$dir")
-      .select(schema.fields.map(f =>
-        org.apache.spark.sql.functions.col(f.name).cast(f.dataType).as(f.name)): _*)
+    Warehouse.asDeclared(Parquet.read(spark, s"${tableDir(name)}/$dir", schema), schema)
   }
 
   /** Retention-policy vacuum: delete generation prefixes numbered at or

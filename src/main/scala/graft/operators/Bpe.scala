@@ -237,7 +237,7 @@ object Bpe {
     */
   private[operators] def trainDriver(rows: Array[(Long, Seq[String])],
                                      nMerges: Int): Seq[(Int, String, String, String, Long)] = {
-    var syms: Array[Seq[String]] = rows.map(_._2)
+    val syms: Array[Seq[String]] = rows.map(_._2)
     val cnts: Array[Long] = rows.map(_._1)
     val merges = scala.collection.mutable.ArrayBuffer.empty[(Int, String, String, String, Long)]
     var exhausted = false

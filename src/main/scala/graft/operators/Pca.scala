@@ -118,7 +118,7 @@ object Pca {
     * unless profiling says otherwise.
     */
   private def fitOn(base: DataFrame, dim: Int, iters: Int,
-                    exact: Boolean = true): (Array[Double], Array[Double]) = {
+                    exact: Boolean): (Array[Double], Array[Double]) = {
     val mu = dimMeans(base, dim, exact)
     val v = iterate(base, mu, Array.fill(dim)(1.0 / math.sqrt(dim.toDouble)), dim, iters, exact)
     (mu, v)
@@ -154,7 +154,7 @@ object Pca {
     * not change the totals the oracle replays); normalize, round to 9.
     */
   private def iterate(base: DataFrame, mu: Array[Double], v0: Array[Double],
-                      dim: Int, iters: Int, exact: Boolean = true): Array[Double] = {
+                      dim: Int, iters: Int, exact: Boolean): Array[Double] = {
     val muArr = array(mu.map(lit): _*)
     var v = v0
     var i = 0

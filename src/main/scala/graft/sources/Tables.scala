@@ -7,12 +7,13 @@ import org.apache.spark.sql.types.{LongType, TimestampNTZType, TimestampType}
 /** Loader for the driver-provided parquet testdata (see /root/repo/TESTDATA.md).
   *
   * One parquet file per table; schemas are stable across scale factors, so the
-  * engine reads them with schema inference from the footer (cheap — parquet
-  * metadata only, no data scan). All downstream operators rely on Catalyst
-  * pushing filters/column pruning into these scans.
+  * engine infers each from its footer. That inference is one Spark job, so
+  * [[Parquet.read]] runs it once per file and parquet settings and
+  * reuses the schema after. All downstream operators rely on Catalyst pushing
+  * filters/column pruning into these scans.
   */
 final case class Tables(spark: SparkSession, dir: String) {
-  def table(name: String): DataFrame = spark.read.parquet(s"$dir/$name.parquet")
+  def table(name: String): DataFrame = Parquet.read(spark, s"$dir/$name.parquet")
 
   def region: DataFrame     = table("region")
   def nation: DataFrame     = table("nation")

@@ -3,6 +3,8 @@ package graft.tools
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
+import graft.sources.Parquet
+
 /** Deterministic ×N scale-up of a driver testdata dir — the 100× REHEARSAL
   * input: `runMain graft.tools.ScaleUp <srcDir> <outDir> [factor=10]`.
   *
@@ -80,10 +82,10 @@ object ScaleUp {
       .config("spark.ui.enabled", "false")
       .config("spark.sql.legacy.parquet.nanosAsLong", "true"))
     spark.sparkContext.setLogLevel("WARN")
-    def read(t: String) = spark.read.parquet(s"$src/$t.parquet")
+    def read(t: String) = Parquet.read(spark, s"$src/$t.parquet")
     def write(df: DataFrame, t: String): Unit = {
       df.drop("__rep").write.mode("overwrite").parquet(s"$out/$t.parquet")
-      println(s"[scaleup] $t: ${spark.read.parquet(s"$out/$t.parquet").count()} rows")
+      println(s"[scaleup] $t: ${Parquet.read(spark, s"$out/$t.parquet").count()} rows")
     }
 
     // key-family spans from the OWNING tables, shared by both join sides
