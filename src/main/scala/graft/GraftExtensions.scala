@@ -32,12 +32,6 @@ import graft.operators.{Layout, Sharding, TextAnalysis}
   * API builds (via the graftbridge converters), so they stay fully inside
   * whole-stage codegen.
   *
-  * Also registers the [[GraftTableFunctions]] TABLE functions
-  * (`graft_dedup_exact`, `graft_weighted_sample`, `graft_quota_per_group`,
-  * `graft_snapshot_diff`), so the curation operator library is reachable
-  * from pure SQL — `SELECT * FROM graft_dedup_exact('docs', 'text',
-  * 'doc_id')` plans identically to the Scala Column path.
-  *
   * Install with `SparkSession.builder().withExtensions(new GraftExtensions)`
   * or `spark.sql.extensions=graft.GraftExtensions`.
   */
@@ -68,7 +62,6 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
     e.injectFunction(GraftExtensions.shuffleKeyFn)
     e.injectFunction(GraftExtensions.wordShinglesFn)
     e.injectFunction(GraftExtensions.redactPiiFn)
-    GraftTableFunctions.all.foreach(e.injectTableFunction)
   }
 }
 

@@ -24,7 +24,7 @@ import org.apache.spark.sql.functions._
   *
   * Null-safe equality everywhere: a tracked NULL→NULL is unchanged,
   * NULL→value is a change, and NULL natural-key components match
-  * themselves (the suppressBelowK rule).
+  * themselves.
   *
   * Fully discrete (dates, strings, a null-safe compare — no floats), so
   * the DuckDB oracle replays the merge with no rounding doctrine.

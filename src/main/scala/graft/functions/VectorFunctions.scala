@@ -12,9 +12,9 @@ import org.apache.spark.sql.functions._
   * fold order is deterministic — this makes results reproducible against a
   * DuckDB oracle computing the same double-precision fold.
   *
-  * For the 100 TB path a codegen'd Catalyst Expression would shave the
-  * per-element lambda interpretation overhead; the algebra (normalize once,
-  * then a single dot product per candidate pair) already minimizes work.
+  * The query paths use the codegen'd [[CosineSimilarity]] Expression;
+  * [[cosine]] stays as the higher-order-function reference it is checked
+  * against.
   */
 object VectorFunctions {
 
@@ -34,14 +34,5 @@ object VectorFunctions {
     val na = l2Norm(a)
     val nb = l2Norm(b)
     when(na === 0.0 || nb === 0.0, lit(null)).otherwise(d / (na * nb))
-  }
-
-  /** Pre-normalized variant: when one side is reused many times (ANN search),
-    * normalize it once and use plain `dot` per pair — halves the flops.
-    */
-  def normalize(a: Column): Column = {
-    val n = l2Norm(a)
-    when(n === 0.0, a.cast("array<double>"))
-      .otherwise(transform(a.cast("array<double>"), x => x / n))
   }
 }

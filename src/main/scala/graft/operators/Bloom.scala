@@ -12,16 +12,15 @@ import org.apache.spark.sql.functions._
   * small-sample pandas, `dags/sri_vehiculos_etl_dag.py:146-161` just
   * dedups in memory); at 100 TB a "was this URL / doc digest already
   * ingested" check against the full key set is a giant shuffle-join per
-  * batch, while a Bloom probe is a broadcast of m/8 bytes.
+  * batch, while a Bloom probe is a broadcast of at most m bit positions.
   *
   * Representation: the DISTRIBUTED build emits one row per SET BIT
   * (`pos` ∈ [0, mBits)) — at most mBits rows regardless of input size,
   * produced by one map-side-combinable distinct over the k-position
-  * fan-out. That row form is what the oracle replays; for serving, pack
-  * it into `ceil(m/64)` longs with `bitmapPack` (an aggregation, still
-  * bounded) and ship the array. Probing joins the probe fan-out against
-  * the broadcast bit table: a key is a member iff ALL k of its positions
-  * are set — `n_hit = k`. No false negatives by construction; false
+  * fan-out. That row form is what the oracle replays and what a probe
+  * broadcasts: probing joins the probe fan-out against the broadcast bit
+  * table, and a key is a member iff ALL k of its positions are set —
+  * `n_hit = k`. No false negatives by construction; false
   * positives ≈ (1 - e^(-kn/m))^k.
   *
   * Hashing is the engine-independent salted-md5 family (Sketch.cmsBucket's
@@ -53,17 +52,6 @@ object Bloom {
       .select(explode(positions(col(keyCol).cast("string"), k, mBits)).as("pos"))
       .distinct()
   }
-
-  /** Pack the set-bit table into ceil(m/64) little-endian longs — the
-    * constant-size broadcastable artifact. One bounded aggregation
-    * (`bit_or` partials are map-side-combinable); returns
-    * (word_idx, word) rows for words with at least one set bit.
-    */
-  def pack(bits: DataFrame): DataFrame =
-    bits.select((col("pos") / 64).cast("long").as("word_idx"),
-        expr("shiftleft(CAST(1 AS BIGINT), CAST(pos % 64 AS INT))").as("__w"))
-      .groupBy("word_idx")
-      .agg(expr("bit_or(__w)").as("word"))
 
   /** Probe: for each distinct probe key, how many of its k positions are
     * set and the resulting membership verdict. The bit table (≤ mBits

@@ -22,12 +22,6 @@ import org.apache.spark.sql.functions._
   * so the result is partition-order invariant and replayable on any engine
   * with decimal arithmetic — a naive double sum would drift with Spark's
   * combine order and could never hash-match an oracle.
-  *
-  * Relation to [[Similarity.refineCentroids]]: that is the array-form
-  * production twin (VectorMean UDAF, double sums, feeds
-  * [[Similarity.ivfTopKWithCentroids]] directly); this one trades the
-  * array output for decimal-exact reproducibility and per-dimension
-  * auditability. Same assignment subplan, same shuffle bounds.
   */
 object Clustering {
 

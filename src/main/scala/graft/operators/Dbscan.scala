@@ -68,7 +68,7 @@ object Dbscan {
       // self-loops (src = dst) would add 2 to a point's degree and could
       // silently promote it to core — the in-repo pair generators emit
       // id_a < id_b and cannot produce one, but fromPairs accepts ANY
-      // pair table (graft_dbscan SQL), so drop them here (ADVICE r14)
+      // pair table, so drop them here (ADVICE r14)
       .where(col("src").isNotNull && col("dst").isNotNull && col("src") =!= col("dst"))
       .localCheckpoint(true, org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     val directed = e.union(e.select(col("dst").as("src"), col("src").as("dst")))

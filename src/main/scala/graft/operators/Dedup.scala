@@ -381,7 +381,7 @@ object Dedup {
 
   /** Brute-force exact embedding near-dup: all pairs with cosine >=
     * threshold. O(n²) — the verification baseline and oracle target;
-    * [[embeddingNearDups]] (LSH-bucketed) is the scale path.
+    * [[embeddingNearDupsDet]] (LSH-bucketed) is the scale path.
     */
   def embeddingNearDupsExact(df: DataFrame, vecCol: String, idCol: String,
                              threshold: Double): DataFrame = {
@@ -395,15 +395,13 @@ object Dedup {
   }
 
   /** Embedding near-dup: pairs with cosine >= threshold among candidates
-    * sharing a random-hyperplane LSH bucket (see [[Similarity.hyperplaneBucket]]).
-    */
-  /** [[embeddingNearDups]] on the deterministic ±1 sign-plane family
-    * ([[Similarity.signPlaneBucket]]) — identical shuffle shape (single
-    * bucket equi-join, never n²), but the projection matrix regenerates
-    * from md5 on any engine, so the whole LSH pipeline is oracle-
-    * replayable (q68). `dim` is the embedding width, a plan-time constant
-    * for the unrolled dot products. Output (id_a, id_b, cos_sim rounded
-    * to 4) over pairs whose UNROUNDED cosine clears `threshold`.
+    * sharing a deterministic ±1 sign-plane LSH bucket
+    * ([[Similarity.signPlaneBucket]]) — a single bucket equi-join, never
+    * n², and the projection matrix regenerates from md5 on any engine, so
+    * the whole LSH pipeline is oracle-replayable (q68). `dim` is the
+    * embedding width, a plan-time constant for the unrolled dot products.
+    * Output (id_a, id_b, cos_sim rounded to 4) over pairs whose UNROUNDED
+    * cosine clears `threshold`.
     */
   def embeddingNearDupsDet(
       df: DataFrame, vecCol: String, idCol: String,
@@ -504,20 +502,5 @@ object Dedup {
     assigned.join(dups, assigned("__vid") === dups("__idb"), "left")
       .select(col("__vid").as(idCol), col("__cid").cast("long").as("cluster_id"),
         col("__idb").isNotNull.as("is_dup"))
-  }
-
-  def embeddingNearDups(
-      df: DataFrame, vecCol: String, idCol: String,
-      threshold: Double = 0.95, planes: Int = 12): DataFrame = {
-    import graft.functions.CosineSimilarity.cosineSim
-    val withB = df.select(col(idCol).as("__id"), col(vecCol).as("__v"),
-      Similarity.hyperplaneBucket(col(vecCol), planes).as("__bucket"))
-    val l = withB.select(col("__bucket"), col("__id").as("id_a"), col("__v").as("v_a"))
-    val r = withB.select(col("__bucket"), col("__id").as("id_b"), col("__v").as("v_b"))
-    l.join(r, Seq("__bucket")).where(col("id_a") < col("id_b"))
-      .withColumn("cos_sim", cosineSim(col("v_a"), col("v_b")))
-      .where(col("cos_sim") >= threshold)
-      .select("id_a", "id_b", "cos_sim")
-      .distinct()
   }
 }

@@ -6,16 +6,16 @@ package graft.operators
   * frame PAYLOADS depends on an available codec. A decoder advertises the
   * codec names it handles and is looked up through [[FrameDecoder.forCodec]]
   * at plan-build time on the driver, then shipped inside the task closure
-  * (the trait is Serializable — registration is NOT assumed to have
-  * happened on executors).
+  * (the trait is Serializable).
   *
   * MJPEG routes through the built-in ImageIO JPEG kernel
-  * ([[FrameDecoder.Mjpeg]], registered by default). H.264/H.265 have NO
-  * registered decoder — the JDK ships no codec for them — so their assets
-  * take the explicit not-decoded marker ("no decoder registered", not a
-  * stub of ours); a deployment with a real codec (JNI/ffmpeg bridge)
-  * registers it here and every video path lights up without touching
-  * [[Multimodal]] or [[MediaCodecs]].
+  * ([[FrameDecoder.Mjpeg]], the one decoder [[FrameDecoder.forCodec]]
+  * knows). H.264/H.265 have NO decoder — the JDK ships no codec for them —
+  * so their assets take the explicit not-decoded marker ("no decoder
+  * registered", not a stub of ours). A real codec (JNI/ffmpeg bridge)
+  * implements this trait; the AVI frame decode takes one through
+  * [[MediaCodecs.decodeAviMjpeg]]'s `decoder` parameter, and the demux
+  * does not change.
   */
 trait FrameDecoder extends Serializable {
 
@@ -40,16 +40,8 @@ object FrameDecoder {
       MediaCodecs.decodeCompressedImage(payload)
   }
 
-  @volatile private var registered: Map[String, FrameDecoder] =
+  private val registered: Map[String, FrameDecoder] =
     Mjpeg.codecs.map(_ -> (Mjpeg: FrameDecoder)).toMap
-
-  /** Register a decoder for every codec it advertises (later wins). Call
-    * on the driver before building the decode plan — the resolved decoder
-    * travels in the closure.
-    */
-  def register(d: FrameDecoder): Unit = synchronized {
-    registered = registered ++ d.codecs.map(_.toUpperCase -> d)
-  }
 
   /** The decoder for `codec`, if any is registered (case-insensitive).
     * None means "no decoder registered" — the honest unavailability the

@@ -3,15 +3,16 @@ package graft.operators
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
-/** Data-layout operators — multi-dimensional clustering for 100-TB scans.
+/** Data-layout operators for 100-TB scans: the sorted clustering and
+  * file sizing of the SRI fact write, and the Z-order key.
   *
   * A table queried by TWO independent predicates (e.g. order key ranges
   * AND part key ranges) cannot serve both from a single-column sort.
   * Z-ordering interleaves the bits of both keys into one sort key, so a
-  * range-sorted file layout keeps rows close in BOTH dimensions and either
-  * predicate prunes most files via min/max statistics — the same layout
-  * trick Delta/Iceberg `OPTIMIZE ZORDER BY` applies, expressed here as a
-  * plain Catalyst column so it works on any writer.
+  * file layout range-sorted on it keeps rows close in BOTH dimensions and
+  * either predicate prunes most files via min/max statistics — the same
+  * layout trick Delta/Iceberg `OPTIMIZE ZORDER BY` applies, expressed here
+  * as a plain Catalyst column so it works on any writer.
   */
 object Layout {
 
@@ -36,20 +37,6 @@ object Layout {
         .bitwiseOR(shiftleft(shiftright(bl, i).bitwiseAND(1), 2 * i))
     }.reduce(_.bitwiseOR(_)).cast("long")
   }
-
-  /** Size-aware compaction — the small-files rewrite every long-lived
-    * warehouse needs (a daily-partitioned 100-TB table accretes millions
-    * of KB-sized files; scans then pay per-file open/listing costs that
-    * dwarf the reads). Targets ~`targetFileBytes` per output partition
-    * using Catalyst's plan-time size statistic (actual on-disk bytes for
-    * file sources — no action, no sampling pass), so a writer producing
-    * one file per partition lands near the target. Round-robin
-    * repartition, not coalesce: coalesce(n) would also CAP the scan's
-    * parallelism upstream (it removes the exchange), while compaction
-    * must keep reading wide and only narrow at the write.
-    */
-  def compactBySize(df: DataFrame, targetFileBytes: Long): DataFrame =
-    df.repartition(fileCount(df, targetFileBytes))
 
   /** Output file count for ~`targetFileBytes` files: ceil(plan bytes /
     * target) from Catalyst's plan-time size statistic, at least 1. The
@@ -77,22 +64,15 @@ object Layout {
   }
 
   /** BigQuery-style SORTED clustering for a (possibly partitioned)
-    * write: range-partition on the cluster columns (equi-depth via the
-    * range partitioner's sampling, so skew still yields balanced files)
-    * and sort within tasks, so each task — hence each written file —
-    * holds one contiguous lexicographic slice and carries tight min/max
-    * on the cluster columns for row-group pruning. This is the faithful
-    * realization of BigQuery `clustering_fields` (lexicographic block
-    * sort), as distinct from [[zOrderBy]] (interleaved-bit layout for
-    * independent per-column pruning). File count targets
-    * ~`targetFileBytes` via [[fileCount]], as in [[compactBySize]].
+    * write into exactly `numFiles` range partitions: range-partition on
+    * the cluster columns (equi-depth via the range partitioner's
+    * sampling, so skew still yields balanced files) and sort within
+    * tasks, so each task — hence each written file — holds one contiguous
+    * lexicographic slice and carries tight min/max on the cluster columns
+    * for row-group pruning. This is the faithful realization of BigQuery
+    * `clustering_fields` (lexicographic block sort). Size the file count
+    * with [[fileCount]].
     */
-  def clusterBySize(df: DataFrame, clusterCols: Seq[String],
-                    targetFileBytes: Long,
-                    tiebreakCol: Option[String] = None): DataFrame =
-    clusterBy(df, clusterCols, fileCount(df, targetFileBytes), tiebreakCol)
-
-  /** [[clusterBySize]]'s layout into exactly `numFiles` range partitions. */
   def clusterBy(df: DataFrame, clusterCols: Seq[String], numFiles: Int,
                 tiebreakCol: Option[String] = None): DataFrame = {
     require(clusterCols.nonEmpty, "clusterCols must be non-empty")
@@ -108,22 +88,5 @@ object Layout {
     val keyCols = (clusterCols ++ tiebreakCol).map(col)
     df.repartitionByRange(numFiles, keyCols: _*)
       .sortWithinPartitions(keyCols: _*)
-  }
-
-  /** Rewrite `df` into a Z-ordered layout: range-partition on the
-    * interleaved key (equi-depth via Spark's range-partitioner sampling,
-    * so skewed key distributions still yield balanced files) and sort
-    * within partitions. Each output partition then covers a tight
-    * rectangle in (a, b) space — a writer producing one file per
-    * partition gives min/max pruning on BOTH columns. `numFiles` is the
-    * target file count: at 100 TB, input bytes / target file size.
-    */
-  def zOrderBy(df: DataFrame, a: String, b: String, numFiles: Int,
-               bits: Int = 16): DataFrame = {
-    val z = zValue(col(a), col(b), bits)
-    df.withColumn("__z", z)
-      .repartitionByRange(numFiles, col("__z"))
-      .sortWithinPartitions(col("__z"))
-      .drop("__z")
   }
 }

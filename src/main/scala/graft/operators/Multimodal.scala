@@ -26,8 +26,9 @@ import org.apache.spark.sql.functions._
   *     inside mdat): frame decode is behind the pluggable [[FrameDecoder]]
   *     seam, and the JDK registers no decoder for those codecs — so they
   *     take the explicit -1 marker plane ("no decoder registered", not a
-  *     fake of ours). A deployment with a real codec registers it via
-  *     [[FrameDecoder.register]] and these paths light up untouched.
+  *     fake of ours). A real codec implements the [[FrameDecoder]]
+  *     trait; the AVI frame decode takes one through
+  *     [[MediaCodecs.decodeAviMjpeg]]'s `decoder` parameter.
   *     The stub kernel still emits fake-but-stable features so the
   *     surrounding plumbing (schema, batching, partitioning, joins) stays
   *     testable and is real.

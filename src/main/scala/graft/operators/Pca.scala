@@ -110,9 +110,8 @@ object Pca {
     *
     * `exact = true` is the oracle doctrine (DECIMAL(28,9) accumulation:
     * partition-order-invariant, engine-replayable). `exact = false` is
-    * the double-sum twin (the [[Similarity.refineCentroids]] precedent):
-    * same plan shape, loadings agreeing to ~1e-9 on real data but
-    * carrying last-ulp partition-order sensitivity. Post-codegen-fix the
+    * the double-sum twin: same plan shape, loadings agreeing to ~1e-9 on
+    * real data but carrying last-ulp partition-order sensitivity. Post-codegen-fix the
     * decimal contract is a MODEST surcharge, not a regime change
     * (SCALEPROOF_r8c ledgers both at 2M like for like) — prefer exact
     * unless profiling says otherwise.

@@ -3,20 +3,17 @@ package graft.operators
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
-/** k-anonymity audit + suppression — the structured-data privacy gate
-  * beside the text-side PII redaction (q48): a release is k-anonymous
-  * when every combination of quasi-identifier values is shared by at
-  * least k rows, so no combination singles out fewer than k people.
+/** k-anonymity audit — the structured-data privacy gate beside the
+  * text-side PII redaction (q48): a release is k-anonymous when every
+  * combination of quasi-identifier values is shared by at least k rows,
+  * so no combination singles out fewer than k people.
   * Groups below k must be suppressed (or generalized) before export —
   * the standard pre-release check on training-data metadata tables
   * (Sweeney, IJUFKS 2002; the reference has no privacy surface at all).
   *
   * Scale shape: ONE map-side-combinable aggregation over the
   * quasi-identifier key (shuffle bounded by distinct combinations, not
-  * rows); the row-level verdict joins the group table back — at scale
-  * the group table is usually broadcastable (distinct quasi combos ≪
-  * rows), and Catalyst picks that on its own under AQE; nothing here is
-  * row-pairwise.
+  * rows); nothing here is row-pairwise.
   */
 object Privacy {
 
@@ -33,12 +30,6 @@ object Privacy {
       .withColumn("anonymous", when(col("n") >= k, 1L).otherwise(0L))
   }
 
-  /** Row-level suppression verdicts: the input with `__keep` = 1 iff the
-    * row's equivalence class reaches k. Publishing `where(__keep = 1)`
-    * yields the largest k-anonymous subset obtainable by row suppression
-    * alone (every surviving class still has its full ≥ k members, so no
-    * class shrinks below k by the filter itself).
-    */
   /** Distinct l-diversity audit — k-anonymity's necessary complement: a
     * class can hold k rows yet leak the sensitive attribute completely
     * if all k share one value (the homogeneity attack). One row per
@@ -150,14 +141,5 @@ object Privacy {
         when(col("__emd_int").cast("decimal(38,0)").cast("decimal(38,9)")
             <= tDec * (col("__n_c") * col("__n") * (col("m") - 1)).cast("decimal(28,0)"),
           1L).otherwise(0L).as("close")): _*)
-  }
-
-  def suppressBelowK(df: DataFrame, quasiCols: Seq[String], k: Int): DataFrame = {
-    val classes = kAnonymityClasses(df, quasiCols, k)
-      .select(quasiCols.map(c => col(c).as(s"__q_$c")) :+ col("anonymous").as("__keep"): _*)
-    // null-safe equality: a null quasi combo is its own class and must
-    // match itself (a plain equi-join would leave those rows unjudged)
-    val cond = quasiCols.map(c => col(c) <=> col(s"__q_$c")).reduce(_ && _)
-    df.join(classes, cond, "left").drop(quasiCols.map(c => s"__q_$c"): _*)
   }
 }

@@ -160,10 +160,7 @@ object Sampling {
     * partial+final `WindowGroupLimit`, so every MAP task pre-prunes to
     * `quota` rows per group before the exchange — a head group that is
     * half the crawl ships quota·mapTasks rows, not half the corpus
-    * (plan-pinned in SamplingSpec; SCALEPROOF_r5 shows plain ≈ salted on
-    * an 8M-row 50%-skew corpus for exactly this reason).
-    * [[quotaPerGroupSalted]] is the engine-portable fallback for planners
-    * without that rewrite.
+    * (plan-pinned in SamplingSpec).
     */
   def quotaPerGroup(df: DataFrame, groupCol: String, quota: Int,
                     preference: Seq[Column]): DataFrame = {
@@ -172,29 +169,5 @@ object Sampling {
     df.withColumn("__rn", row_number().over(w))
       .where(col("__rn") <= quota)
       .drop("__rn")
-  }
-
-  /** [[quotaPerGroup]] as an EXPLICIT two-phase plan: rows first keep only
-    * their (group, salt)-local top-`quota`, then the survivors — at most
-    * `quota · salts` per group — run the exact final window. Selecting a
-    * global top-q per group is prefix-stable under partitioning, so the
-    * result EQUALS [[quotaPerGroup]] row-for-row (spec-asserted). On
-    * Spark 4 this buys nothing over [[quotaPerGroup]] — Catalyst's
-    * partial `WindowGroupLimit` already does the same pre-prune inside
-    * the map tasks — it exists as the portable spelling of the technique
-    * for planners without that rewrite. Salt is md5-derived, so the plan
-    * stays engine-portable and deterministic.
-    */
-  def quotaPerGroupSalted(df: DataFrame, groupCol: String, quota: Int,
-                          preference: Seq[Column], saltKey: Column,
-                          salts: Int = 16): DataFrame = {
-    require(quota >= 1 && salts >= 1, s"need quota >= 1 and salts >= 1")
-    val salted = Window
-      .partitionBy(col(groupCol), (bucket(saltKey) % salts).cast("int"))
-      .orderBy(preference: _*)
-    val pruned = df.withColumn("__srn", row_number().over(salted))
-      .where(col("__srn") <= quota)
-      .drop("__srn")
-    quotaPerGroup(pruned, groupCol, quota, preference)
   }
 }

@@ -8,8 +8,8 @@ import graft.functions.CosineSimilarity.cosineSim
 /** Approximate-nearest-neighbor search over an embedding column.
   *
   * Baseline: brute-force cosine top-k (broadcast the query set, one pass
-  * over the corpus, per-query top-k via window). Scale path: random
-  * hyperplane LSH bucketing so each query only scans its bucket — the
+  * over the corpus, per-query top-k via window). Scale path: sign-plane
+  * LSH bucketing so each query only scans its bucket — the
   * bucket join is an equi-join (shuffle on bucket id, or broadcast if the
   * query side is small), never an O(n·q) cross product.
   */
@@ -34,36 +34,6 @@ object Similarity {
       .withColumn("rank", row_number().over(w).cast("long"))
       .where(col("rank") <= k)
       .select("query_id", "rank", "neighbor_id", "cos_sim")
-  }
-
-  /** Deterministic pseudo-random hyperplane component for (plane, dim):
-    * xxhash64 folded into [-1, 1). Seeds are structural, so signatures are
-    * reproducible across runs and clusters with no stored model artifact.
-    */
-  private def planeComponent(plane: Column, dim: Column): Column =
-    (pmod(xxhash64(plane, dim), lit(2000001L)).cast("double") - 1000000.0) / 1000000.0
-
-  /** Random-hyperplane (SRP) LSH bucket id: sign bits of `planes` random
-    * projections packed into a LONG. Cosine-similar vectors collide with
-    * high probability (probability 1 - θ/π per plane).
-    */
-  def hyperplaneBucket(vec: Column, planes: Int = 12): Column = {
-    val v = vec.cast("array<double>")
-    val projections = transform(
-      sequence(lit(0), lit(planes - 1)),
-      p =>
-        aggregate(
-          zip_with(v, sequence(lit(0), size(v) - 1), (x, i) => x * planeComponent(p, i)),
-          lit(0.0),
-          (acc, x) => acc + x
-        )
-    )
-    aggregate(
-      zip_with(projections, sequence(lit(0), lit(planes - 1)), (proj, i) =>
-        when(proj >= 0.0, pow(lit(2.0), i).cast("long")).otherwise(0L)),
-      lit(0L),
-      (acc, x) => acc.bitwiseOR(x)
-    )
   }
 
   /** The (plane, dim) component of the deterministic ±1 sign-plane family:
@@ -94,15 +64,32 @@ object Similarity {
     }.reduce(_ + _)
   }
 
-  /** [[lshTopK]] with the deterministic ±1 sign-plane family — identical
-    * shuffle shape (bucket equi-join, never n·q), but replayable on any
-    * md5-capable engine. `dim` is the embedding width (a plan-time
-    * constant: the unrolled dot products need a static term count).
+  /** SRP-LSH ANN top-k on the deterministic ±1 sign-plane family
+    * ([[signPlaneBucket]]): each query scans only the corpus vectors in
+    * its bucket — an equi-join on bucket id, never n·q — with exact cosine
+    * inside the bucket. Recall tunes via `planes` (fewer planes → bigger
+    * buckets → higher recall, more compute). The projection matrix
+    * regenerates from md5, so the search replays on any md5-capable
+    * engine. `dim` is the embedding width (a plan-time constant: the
+    * unrolled dot products need a static term count). Returns
+    * (query_id, rank, neighbor_id, cos_sim).
     */
   def lshTopKDet(queries: DataFrame, corpus: DataFrame, vecCol: String, idCol: String,
-                 k: Int, planes: Int, dim: Int): DataFrame =
-    bucketedTopK(queries, corpus, vecCol, idCol, k,
-      signPlaneBucket(col(vecCol), planes, dim))
+                 k: Int, planes: Int, dim: Int): DataFrame = {
+    val bucket = signPlaneBucket(col(vecCol), planes, dim)
+    val q = queries.select(col(idCol).as("query_id"), col(vecCol).as("__qv"),
+      bucket.as("__bucket"))
+    val c = corpus.select(col(idCol).as("neighbor_id"), col(vecCol).as("__nv"),
+      bucket.as("__bucket"))
+    val scored = c.join(q, Seq("__bucket"))
+      .where(col("query_id") =!= col("neighbor_id"))
+      .withColumn("cos_sim", cosineSim(col("__qv"), col("__nv")))
+    val w = Window.partitionBy(col("query_id")).orderBy(col("cos_sim").desc, col("neighbor_id"))
+    scored
+      .withColumn("rank", row_number().over(w).cast("long"))
+      .where(col("rank") <= k)
+      .select("query_id", "rank", "neighbor_id", "cos_sim")
+  }
 
   /** IVF (inverted-file) ANN top-k: the corpus is coarse-quantized into
     * `numCentroids` inverted lists (each vector assigned to its nearest
@@ -127,18 +114,17 @@ object Similarity {
       seedCentroids(corpus, vecCol, idCol, numCentroids), numProbe)
 
   /** Deterministic untrained centroid seeds: the `numCentroids` lowest-id
-    * corpus vectors as (__cid, __cv) — the input [[refineCentroids]]
-    * expects and [[ivfTopKWithCentroids]] probes.
+    * corpus vectors as (__cid, __cv) — the table [[ivfTopKWithCentroids]]
+    * probes.
     */
   def seedCentroids(corpus: DataFrame, vecCol: String, idCol: String,
                     numCentroids: Int): DataFrame =
     corpus.orderBy(col(idCol)).limit(numCentroids)
       .select(col(idCol).as("__cid"), col(vecCol).as("__cv"))
 
-  /** [[ivfTopK]] against a caller-supplied centroid table (__cid, __cv) —
-    * the trained path: seed with [[seedCentroids]], iterate
-    * [[refineCentroids]], then search. Same plan shape (centroids
-    * broadcast twice, list search an equi-join on centroid id).
+  /** [[ivfTopK]] against a caller-supplied centroid table (__cid, __cv).
+    * Same plan shape (centroids broadcast twice, list search an equi-join
+    * on centroid id).
     */
   def ivfTopKWithCentroids(queries: DataFrame, corpus: DataFrame, vecCol: String,
                            idCol: String, k: Int, centroids: DataFrame,
@@ -203,31 +189,6 @@ object Similarity {
       .withColumn("rank", row_number().over(w).cast("long"))
       .where(col("rank") <= k)
       .select("query_id", "rank", "neighbor_id", "cos_sim")
-  }
-
-  /** One k-means (Lloyd) refinement step for IVF centroids: assign every
-    * corpus vector to its nearest centroid, replace each centroid with its
-    * list's elementwise mean ([[graft.functions.VectorMean]] — map-side
-    * combinable, so the shuffle carries one (sum, count) buffer per
-    * (partition, centroid), never the vectors). Iterate as needed; empty
-    * lists keep their previous centroid.
-    */
-  def refineCentroids(corpus: DataFrame, centroids: DataFrame, vecCol: String,
-                      cidCol: String = "__cid", cvCol: String = "__cv"): DataFrame = {
-    import graft.functions.CosineSimilarity.cosineSim
-    val vm = udaf(graft.functions.VectorMean)
-    val byVec = Window.partitionBy(col("__rid")).orderBy(col("__csim").desc, col(cidCol))
-    val assigned = corpus
-      .select(monotonically_increasing_id().as("__rid"), col(vecCol).as("__v"))
-      .join(broadcast(centroids))
-      .withColumn("__csim", cosineSim(col("__v"), col(cvCol)))
-      .withColumn("__rn", row_number().over(byVec))
-      .where(col("__rn") === 1)
-    val means = assigned.groupBy(col(cidCol))
-      .agg(vm(col("__v")).as("__mean"))
-      .withColumn("__mean", col("__mean").cast("array<float>"))
-    centroids.join(means, Seq(cidCol), "left")
-      .select(col(cidCol), coalesce(col("__mean"), col(cvCol)).as(cvCol))
   }
 
   /** IVF-PQ-style ANN via asymmetric distance computation (ADC): the
@@ -322,22 +283,6 @@ object Similarity {
       .select(col("query_id"), col("rank"), col("neighbor_id"), col("l2_dist"))
   }
 
-  /** SRP-LSH ANN top-k: restrict each query to corpus vectors in the same
-    * hyperplane bucket, then exact cosine within the bucket. Recall is
-    * tunable via `planes` (fewer planes → bigger buckets → higher recall,
-    * more compute). Returns (query_id, rank, neighbor_id, cos_sim).
-    */
-  def lshTopK(queries: DataFrame, corpus: DataFrame, vecCol: String, idCol: String,
-              k: Int, planes: Int = 8): DataFrame =
-    bucketedTopK(queries, corpus, vecCol, idCol, k,
-      hyperplaneBucket(col(vecCol), planes))
-
-  /** Shared tail of the bucketed-LSH ANN paths: bucket both sides with
-    * `bucketExpr`, equi-join on bucket, exact cosine + per-query rank
-    * window. One definition so the top-k contract (tie-break on
-    * neighbor_id, long rank, output columns) cannot drift between hash
-    * families.
-    */
   /** Hard-negative mining for contrastive training: for each anchor, the
     * k most cosine-similar corpus vectors carrying a DIFFERENT label — the
     * negatives a contrastive loss learns most from (the FaceNet/DPR mining
@@ -405,21 +350,5 @@ object Similarity {
       .withColumn("rnk", row_number().over(w).cast("long"))
       .where(col("rnk") <= k)
       .select("anchor_id", "anchor_label", "rnk", "negative_id", "negative_label")
-  }
-
-  private def bucketedTopK(queries: DataFrame, corpus: DataFrame, vecCol: String,
-                           idCol: String, k: Int, bucketExpr: Column): DataFrame = {
-    val q = queries.select(col(idCol).as("query_id"), col(vecCol).as("__qv"),
-      bucketExpr.as("__bucket"))
-    val c = corpus.select(col(idCol).as("neighbor_id"), col(vecCol).as("__nv"),
-      bucketExpr.as("__bucket"))
-    val scored = c.join(q, Seq("__bucket"))
-      .where(col("query_id") =!= col("neighbor_id"))
-      .withColumn("cos_sim", cosineSim(col("__qv"), col("__nv")))
-    val w = Window.partitionBy(col("query_id")).orderBy(col("cos_sim").desc, col("neighbor_id"))
-    scored
-      .withColumn("rank", row_number().over(w).cast("long"))
-      .where(col("rank") <= k)
-      .select("query_id", "rank", "neighbor_id", "cos_sim")
   }
 }

@@ -48,24 +48,18 @@ import org.apache.spark.storage.StorageLevel
   */
 object UnigramLm {
 
-  /** Seed vocabulary with corpus-weighted counts: the top `seedSize`
-    * substrings (length 1..maxPieceLen, multiplicity kept) by
-    * (count desc, piece asc) — [[WordPiece.substringCounts]]'s statistic —
-    * UNIONED with every single-character piece that occurs, so every word
-    * stays segmentable after any amount of EM re-weighting. Bounded by
-    * seedSize + alphabet size; the top-k plans as TakeOrderedAndProject.
+  /** Seed vocabulary with corpus-weighted counts, from (piece, cnt)
+    * substring counts ([[WordPiece.substringCounts]]'s statistic, length
+    * 1..maxPieceLen, multiplicity kept): the top `seedSize` pieces by
+    * (count desc, piece asc) UNIONED with every single-character piece
+    * that occurs, so every word stays segmentable after any amount of EM
+    * re-weighting. Bounded by seedSize + alphabet size; the top-k plans
+    * as TakeOrderedAndProject. Not persisted: [[trainFromCounts]] — the
+    * hot path — persists and frees the counts it passes in.
     */
-  def seedCounts(df: DataFrame, textCol: String, maxPieceLen: Int,
-                 seedSize: Int): DataFrame = {
-    require(seedSize >= 1, s"seedSize must be >= 1, got $seedSize")
-    // deliberately NOT persisted (ADVICE r15): a lazy helper cannot
-    // unpersist after its consumers run, and leaving the cache behind
-    // leaked one RDD per call. [[trainFromCounts]] — the hot path —
-    // persists/unpersists its own copy; here the substring count simply
-    // computes once per branch.
-    val counts = WordPiece.substringCounts(df, textCol, maxPieceLen)
-    val top = counts.orderBy(col("cnt").desc, col("piece")).limit(seedSize)
-    val chars = counts.where(length(col("piece")) === 1)
+  def seedCounts(pieceCounts: DataFrame, seedSize: Int): DataFrame = {
+    val top = pieceCounts.orderBy(col("cnt").desc, col("piece")).limit(seedSize)
+    val chars = pieceCounts.where(length(col("piece")) === 1)
     top.unionByName(chars).groupBy(col("piece")).agg(max(col("cnt")).as("cnt"))
   }
 
@@ -231,10 +225,7 @@ object UnigramLm {
     val spark = pieceCounts.sparkSession
     import spark.implicits._
     val pc = pieceCounts.persist(StorageLevel.MEMORY_AND_DISK)
-    val top = pc.orderBy(col("cnt").desc, col("piece")).limit(seedSize)
-    val chars = pc.where(length(col("piece")) === 1)
-    val seed = top.unionByName(chars)
-      .groupBy(col("piece")).agg(max(col("cnt")).as("cnt"))
+    val seed = seedCounts(pc, seedSize)
       .collect().map(r => r.getString(0) -> r.getLong(1)).toSeq
     pc.unpersist()
     var p3 = initProb3(seed)

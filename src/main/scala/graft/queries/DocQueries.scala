@@ -93,8 +93,7 @@ object DocQueries {
       .orderBy("id_a", "id_b")
 
   /** LSH-bucketed ANN top-k — the scale path of q25, on the deterministic
-    * ±1 sign-plane family (oracle-replayable; the xxhash64-folded family
-    * in [[Similarity.lshTopK]] is spec-pinned for recall vs. brute force).
+    * ±1 sign-plane family (oracle-replayable).
     */
   def q29AnnLsh(spark: SparkSession, dir: String): DataFrame = {
     val emb = Tables(spark, dir).embeddings

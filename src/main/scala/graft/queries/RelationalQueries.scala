@@ -796,9 +796,8 @@ object RelationalQueries {
 
   /** Z-order (Morton) clustering key over lineitem's two independent query
     * dimensions — the multi-dimensional file-clustering primitive. The
-    * layout itself (repartitionByRange on the key) is asserted in
-    * LayoutSpec; here the interleave arithmetic is oracle-checked and the
-    * top-100 by z pins the curve order.
+    * interleave arithmetic is oracle-checked and the top-100 by z pins the
+    * curve order.
     */
   def q78ZOrder(spark: SparkSession, dir: String): DataFrame = {
     val z = graft.operators.Layout.zValue(
@@ -1016,9 +1015,7 @@ object RelationalQueries {
     * (nation, market-segment) equivalence class with its size and
     * verdict at k=10 — the structured-data privacy gate beside q48's
     * text redaction; one map-side-combinable aggregation bounded by
-    * distinct quasi combinations. Row-level suppression
-    * (Privacy.suppressBelowK) is spec-covered including the null-combo
-    * class an equi-join would miss.
+    * distinct quasi combinations.
     */
   def q145KAnonymity(spark: SparkSession, dir: String): DataFrame =
     graft.operators.Privacy.kAnonymityClasses(

@@ -68,275 +68,6 @@ class GraftExtensionsSpec extends SparkTestBase {
     assert(spark.sql("SELECT char_dist_entropy('123 .,!') AS s").collect().head.isNullAt(0))
   }
 
-  test("SQL table functions drive dedup and sampling end-to-end through spark.sql") {
-    import graft.operators.{Dedup, Sampling}
-    // the shared session lacks the extension; register the SAME builders
-    // GraftExtensions injects (the scalar-function test precedent)
-    GraftTableFunctions.all.foreach { case (ident, info, builder) =>
-      spark.sessionState.tableFunctionRegistry.registerFunction(ident, info, builder)
-    }
-    val docs = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
-    docs.createOrReplaceTempView("docs_tf_v")
-
-    val sqlDedup = spark.sql(
-      "SELECT * FROM graft_dedup_exact('docs_tf_v', 'text', 'doc_id') ORDER BY content_hash")
-      .collect().map(_.toString).toSeq
-    val apiDedup = Dedup.exact(docs, "text", "doc_id").orderBy("content_hash")
-      .collect().map(_.toString).toSeq
-    assert(sqlDedup.nonEmpty && sqlDedup === apiDedup)
-
-    val sqlSample = spark.sql(
-      "SELECT doc_id FROM graft_weighted_sample('docs_tf_v', 'doc_id', 'n_chars', 50) ORDER BY doc_id")
-      .collect().map(_.getLong(0)).toSeq
-    val apiSample = Sampling.weightedSample(docs, "doc_id", "n_chars", 50)
-      .select("doc_id").orderBy("doc_id").collect().map(_.getLong(0)).toSeq
-    assert(sqlSample.length === 50 && sqlSample === apiSample)
-
-    // the SQL path must inherit the Scala path's plan shape, not just its rows
-    val quotaPlan = spark.sql(
-      "SELECT * FROM graft_quota_per_group('docs_tf_v', 'source', 10, 'n_chars', 'doc_id')")
-      .queryExecution.executedPlan.toString
-    assert(quotaPlan.contains("WindowGroupLimit"),
-      s"SQL quota lost the WindowGroupLimit pre-prune:\n$quotaPlan")
-
-    val sqlBm = spark.sql(
-      "SELECT * FROM graft_bm25('docs_tf_v', 'text', 'doc_id', 'spark shuffle join', 15)")
-      .collect().map(_.toString).toSeq
-    val apiBm = graft.operators.Index.bm25TopK(docs, "text", "doc_id",
-      Seq("spark", "shuffle", "join"), topK = 15).collect().map(_.toString).toSeq
-    assert(sqlBm.nonEmpty && sqlBm === apiBm)
-
-    docs.where(col("doc_id") % 2 === 0).createOrReplaceTempView("docs_tf_old")
-    docs.where(col("doc_id") % 3 === 0).createOrReplaceTempView("docs_tf_new")
-    val diff = spark.sql(
-      """SELECT change, count(*) AS n
-        |FROM graft_snapshot_diff('docs_tf_old', 'docs_tf_new', 'doc_id', 'text,source')
-        |GROUP BY change""".stripMargin)
-      .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
-    assert(diff.keySet === Set("added", "removed", "unchanged"))
-    assert(diff("unchanged") > 0 && diff("added") > 0 && diff("removed") > 0)
-
-    docs.where(col("doc_id") % 89 === 0).createOrReplaceTempView("docs_tf_bench")
-    val sqlCont = spark.sql(
-      """SELECT * FROM graft_contaminate('docs_tf_v', 'docs_tf_bench', 'text', 'doc_id', 5)
-        |ORDER BY doc_id, bench_id""".stripMargin)
-      .collect().map(_.toString).toSeq
-    val apiCont = graft.operators.TextAnalysis.contamination(docs,
-        docs.where(col("doc_id") % 89 === 0), "text", "doc_id", 5)
-      .orderBy("doc_id", "bench_id").collect().map(_.toString).toSeq
-    assert(sqlCont.nonEmpty && sqlCont === apiCont)
-
-    val sqlBpe = spark.sql(
-      """SELECT * FROM graft_bpe_pairs('docs_tf_v', 'text')
-        |ORDER BY pair_count DESC, lhs, rhs LIMIT 20""".stripMargin)
-      .collect().map(_.toString).toSeq
-    val apiBpe = graft.operators.Bpe.pairCounts(
-        graft.operators.Bpe.wordTable(docs, "text"))
-      .orderBy(col("pair_count").desc, col("lhs"), col("rhs")).limit(20)
-      .collect().map(_.toString).toSeq
-    assert(sqlBpe.nonEmpty && sqlBpe === apiBpe)
-  }
-
-  test("SQL table functions drive the retrieval/eval/split operators through spark.sql") {
-    import graft.operators.{RankEval, Rerank, Sampling, Similarity}
-    GraftTableFunctions.all.foreach { case (ident, info, builder) =>
-      spark.sessionState.tableFunctionRegistry.registerFunction(ident, info, builder)
-    }
-    val emb = spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet")
-    emb.createOrReplaceTempView("emb_tf_v")
-    emb.where(col("vec_id") % 50 === 0).createOrReplaceTempView("emb_tf_anchors")
-
-    val sqlHn = spark.sql(
-      """SELECT * FROM graft_hard_negatives('emb_tf_anchors', 'emb_tf_v',
-        |  'embedding', 'vec_id', 'label', 5) ORDER BY anchor_id, rnk""".stripMargin)
-      .collect().map(_.toString).toSeq
-    val apiHn = Similarity.hardNegativesTopK(emb.where(col("vec_id") % 50 === 0),
-        emb, "embedding", "vec_id", "label", k = 5)
-      .orderBy("anchor_id", "rnk").collect().map(_.toString).toSeq
-    assert(sqlHn.nonEmpty && sqlHn === apiHn)
-
-    val sqlMmr = spark.sql(
-      """SELECT * FROM graft_mmr('emb_tf_anchors', 'emb_tf_v',
-        |  'embedding', 'vec_id', 10, 3, 0.5) ORDER BY query_id, mmr_rank""".stripMargin)
-      .collect().map(_.toString).toSeq
-    val apiMmr = Rerank.mmrDiversifyTopK(emb.where(col("vec_id") % 50 === 0),
-        emb, "embedding", "vec_id", m = 10, k = 3, lambda = 0.5)
-      .orderBy("query_id", "mmr_rank").collect().map(_.toString).toSeq
-    assert(sqlMmr.nonEmpty && sqlMmr === apiMmr)
-
-    val anchors = emb.where(col("vec_id") % 50 === 0)
-    Similarity.bruteForceTopK(anchors, emb, "embedding", "vec_id", 5)
-      .createOrReplaceTempView("emb_tf_exact")
-    Similarity.lshTopKDet(anchors, emb, "embedding", "vec_id", 5, planes = 6, dim = 64)
-      .createOrReplaceTempView("emb_tf_approx")
-    val sqlEval = spark.sql(
-      """SELECT * FROM graft_rank_eval('emb_tf_approx', 'emb_tf_exact',
-        |  'query_id', 'rank', 'neighbor_id')""".stripMargin)
-      .collect().map(_.toString).toSeq
-    val apiEval = RankEval.vsExact(spark.table("emb_tf_approx"),
-        spark.table("emb_tf_exact"), "query_id", "rank", "neighbor_id")
-      .collect().map(_.toString).toSeq
-    assert(sqlEval.nonEmpty && sqlEval === apiEval)
-
-    val docs = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
-    docs.createOrReplaceTempView("docs_tf_split_v")
-    val sqlSplit = spark.sql(
-      """SELECT split, count(*) AS n
-        |FROM graft_assign_splits('docs_tf_split_v', 'doc_id',
-        |                         'train:0.8,validation:0.1,test:0.1')
-        |GROUP BY split ORDER BY split""".stripMargin)
-      .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
-    val apiSplit = Sampling.assignSplits(docs, "doc_id",
-        Seq("train" -> 0.8, "validation" -> 0.1, "test" -> 0.1))
-      .groupBy("split").count()
-      .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
-    assert(sqlSplit === apiSplit && sqlSplit.keySet === Set("train", "validation", "test"))
-  }
-
-  test("SQL table functions drive pagerank, curriculum, and budget select through spark.sql") {
-    import graft.operators.Curriculum
-    import spark.implicits._
-    GraftTableFunctions.all.foreach { case (ident, info, builder) =>
-      spark.sessionState.tableFunctionRegistry.registerFunction(ident, info, builder)
-    }
-    Seq((1L, 2L), (2L, 3L), (3L, 4L), (4L, 1L)).toDF("a", "b")
-      .createOrReplaceTempView("edges_tf_v")
-    val sqlPr = spark.sql(
-      "SELECT * FROM graft_pagerank('edges_tf_v', 'a', 'b', 3) ORDER BY id")
-      .collect().map(r => (r.getLong(0), r.getDouble(1))).toSeq
-    assert(sqlPr === Seq(1L -> 1.0, 2L -> 1.0, 3L -> 1.0, 4L -> 1.0),
-      "4-cycle is an exact fixpoint through the SQL path too")
-
-    val docs = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
-    docs.createOrReplaceTempView("docs_tf_cur_v")
-    val sqlCur = spark.sql(
-      """SELECT * FROM graft_curriculum('docs_tf_cur_v', 'doc_id', 'n_chars', 4)
-        |ORDER BY phase, shuffle_key, doc_id""".stripMargin)
-      .collect().map(_.toString).toSeq
-    val apiCur = Curriculum.curriculumOrder(docs, "doc_id", "n_chars", 4)
-      .orderBy("phase", "shuffle_key", "doc_id").collect().map(_.toString).toSeq
-    assert(sqlCur.nonEmpty && sqlCur === apiCur)
-
-    val sqlBud = spark.sql(
-      """SELECT * FROM graft_budget_select('docs_tf_cur_v', 'doc_id', 'n_chars',
-        |                                  'n_chars', 50000) ORDER BY running_total""".stripMargin)
-      .collect().map(_.toString).toSeq
-    val apiBud = Curriculum.budgetSelect(docs, "doc_id", "n_chars", "n_chars", 50000L)
-      .orderBy("running_total").collect().map(_.toString).toSeq
-    assert(sqlBud.nonEmpty && sqlBud === apiBud)
-  }
-
-  test("SQL table functions drive retention, drift, privacy, and skew through spark.sql") {
-    import graft.operators.{Dedup, Drift, Privacy, Skew}
-    import spark.implicits._
-    GraftTableFunctions.all.foreach { case (ident, info, builder) =>
-      spark.sessionState.tableFunctionRegistry.registerFunction(ident, info, builder)
-    }
-    val docs = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
-    docs.createOrReplaceTempView("docs_tf_rc_v")
-    val pairs = Seq((1L, 2L), (2L, 3L), (10L, 11L)).toDF("id_a", "id_b")
-    pairs.createOrReplaceTempView("pairs_tf_rc_v")
-
-    // identical plan, not just identical rows: the SQL builder returns the
-    // SAME analyzed plan the Column API builds, so sameResult must hold
-    def samePlan(sql: org.apache.spark.sql.DataFrame,
-                 api: org.apache.spark.sql.DataFrame): Boolean =
-      sql.queryExecution.optimizedPlan.sameResult(api.queryExecution.optimizedPlan)
-
-    val sqlRc = spark.sql(
-      "SELECT * FROM graft_retain_canonical('docs_tf_rc_v', 'pairs_tf_rc_v', 'doc_id', 'n_chars')")
-    val apiRc = Dedup.retainCanonical(docs, pairs, "doc_id",
-      Seq(col("n_chars").desc, col("doc_id")))
-    assert(samePlan(sqlRc, apiRc), "SQL retain_canonical must plan as the Column API")
-    val sqlRcRows = sqlRc.orderBy("doc_id").collect().map(_.toString).toSeq
-    val apiRcRows = apiRc.orderBy("doc_id").collect().map(_.toString).toSeq
-    assert(sqlRcRows.nonEmpty && sqlRcRows === apiRcRows)
-    // clusters {1,2,3} and {10,11} each keep exactly one member
-    val kept = sqlRc.select("doc_id").collect().map(_.getLong(0)).toSet
-    assert(Seq(1L, 2L, 3L).count(kept) === 1 && Seq(10L, 11L).count(kept) === 1)
-
-    docs.where(col("doc_id") % 2 === 0).createOrReplaceTempView("docs_tf_drift_base")
-    docs.where(col("doc_id") % 2 === 1).createOrReplaceTempView("docs_tf_drift_cur")
-    val sqlDrift = spark.sql(
-      "SELECT * FROM graft_drift('docs_tf_drift_base', 'docs_tf_drift_cur', 'n_chars', 10)")
-    val apiDrift = Drift.numericDrift(docs.where(col("doc_id") % 2 === 0),
-      docs.where(col("doc_id") % 2 === 1), "n_chars", buckets = 10)
-    assert(samePlan(sqlDrift, apiDrift), "SQL drift must plan as the Column API")
-    assert(sqlDrift.collect().map(_.toString).toSeq ===
-      apiDrift.collect().map(_.toString).toSeq)
-
-    val sqlKa = spark.sql(
-      "SELECT * FROM graft_k_anonymity('docs_tf_rc_v', 'source, lang', 5)")
-    val apiKa = Privacy.kAnonymityClasses(docs, Seq("source", "lang"), 5)
-    assert(samePlan(sqlKa, apiKa), "SQL k_anonymity must plan as the Column API")
-    val sqlKaRows = sqlKa.orderBy("source", "lang").collect().map(_.toString).toSeq
-    assert(sqlKaRows.nonEmpty && sqlKaRows ===
-      apiKa.orderBy("source", "lang").collect().map(_.toString).toSeq)
-
-    // keySkewReport eagerly localCheckpoints its count table at call time,
-    // so two invocations are never sameResult by construction — pin the
-    // plan shape instead: BOTH paths must pre-prune the topK head before
-    // the rank window sees it (the global-order row_number plans as a
-    // TakeOrderedAndProject head; a partitioned one would plan as
-    // WindowGroupLimit), and the rows must be identical
-    val sqlSkew = spark.sql(
-      "SELECT * FROM graft_key_skew('docs_tf_rc_v', 'source', 5)")
-    val apiSkew = Skew.keySkewReport(docs, "source", topK = 5)
-    assert(sqlSkew.orderBy("rank").collect().map(_.toString).toSeq ===
-      apiSkew.orderBy("rank").collect().map(_.toString).toSeq)
-    def prePruned(plan: String): Boolean =
-      plan.contains("WindowGroupLimit") || plan.contains("TakeOrderedAndProject")
-    val skewPlan = sqlSkew.queryExecution.executedPlan.toString
-    assert(prePruned(skewPlan),
-      s"SQL key_skew lost the topK pre-prune:\n$skewPlan")
-    assert(prePruned(apiSkew.queryExecution.executedPlan.toString))
-  }
-
-  test("SQL table functions drive the as-of join and column profile through spark.sql") {
-    import graft.operators.{AsOfJoin, Profile}
-    GraftTableFunctions.all.foreach { case (ident, info, builder) =>
-      spark.sessionState.tableFunctionRegistry.registerFunction(ident, info, builder)
-    }
-    val events = spark.read.parquet("/root/testdata/sf0.001/events.parquet")
-    events.where(col("event_type") === "purchase")
-      .select(col("event_id"), col("user_id"), col("ts"), col("value"))
-      .createOrReplaceTempView("ev_tf_purch")
-    events.where(col("event_type") === "signup")
-      .select(col("user_id"), col("ts"), col("event_id").as("signup_event"))
-      .createOrReplaceTempView("ev_tf_signup")
-    def samePlan(sql: org.apache.spark.sql.DataFrame,
-                 api: org.apache.spark.sql.DataFrame): Boolean =
-      sql.queryExecution.optimizedPlan.sameResult(api.queryExecution.optimizedPlan)
-
-    val sqlAsof = spark.sql(
-      "SELECT * FROM graft_asof_join('ev_tf_purch', 'ev_tf_signup', 'user_id', 'ts', 'signup_event')")
-    val apiAsof = AsOfJoin.asOfLeft(
-      events.where(col("event_type") === "purchase")
-        .select(col("event_id"), col("user_id"), col("ts"), col("value")),
-      events.where(col("event_type") === "signup")
-        .select(col("user_id"), col("ts"), col("event_id").as("signup_event")),
-      "user_id", "ts", Seq("signup_event"))
-    assert(samePlan(sqlAsof, apiAsof), "SQL asof_join must plan as the Column API")
-    val sqlAsofRows = sqlAsof.orderBy("event_id").collect().map(_.toString).toSeq
-    assert(sqlAsofRows.nonEmpty &&
-      sqlAsofRows === apiAsof.orderBy("event_id").collect().map(_.toString).toSeq)
-
-    val docs = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
-    docs.createOrReplaceTempView("docs_tf_prof_v")
-    val sqlProf = spark.sql(
-      "SELECT * FROM graft_profile('docs_tf_prof_v', 'lang, n_chars')")
-    val apiProf = Profile.profile(docs, Seq("lang", "n_chars"))
-    assert(samePlan(sqlProf, apiProf), "SQL profile must plan as the Column API")
-    assert(sqlProf.orderBy("column").collect().map(_.toString).toSeq ===
-      apiProf.orderBy("column").collect().map(_.toString).toSeq)
-    // the approx form swaps in HLL — it must NOT plan an Expand
-    val approxPlan = spark.sql(
-      "SELECT * FROM graft_profile('docs_tf_prof_v', 'lang, n_chars', false)")
-      .queryExecution.executedPlan.toString
-    assert(!approxPlan.contains("Expand"),
-      s"approx profile regressed to the Expand multi-distinct plan:\n$approxPlan")
-  }
-
   test("SQL word_shingles generator equals the kernel through LATERAL VIEW") {
     spark.sessionState.functionRegistry.createOrReplaceTempFunction(
       "word_shingles", GraftExtensions.wordShinglesFn._3, "built-in")

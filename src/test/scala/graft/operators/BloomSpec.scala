@@ -37,20 +37,13 @@ class BloomSpec extends SparkTestBase {
     assert(grazed > 0, "expected partial grazes at n=200/m=8192 load")
   }
 
-  test("build size is bounded by mBits and pack round-trips the bit set") {
+  test("build size is bounded by mBits") {
     val m = 512
     val bits = Bloom.build((1 to 10000).map(_.toString).toDF("k"), "k", k = 4, mBits = m)
     val n = bits.count()
     assert(n <= m, s"bit table $n exceeded mBits=$m")
     // saturated filter at this load: nearly all bits set
     assert(n > m * 0.9)
-    val packed = Bloom.pack(bits).collect()
-      .map(r => r.getLong(0) -> r.getLong(1)).toMap
-    val unpacked = packed.toSeq.flatMap { case (w, word) =>
-      (0 until 64).filter(b => (word >>> b & 1L) == 1L).map(w * 64 + _)
-    }.sorted
-    val original = bits.collect().map(_.getLong(0)).sorted.toSeq
-    assert(unpacked === original)
   }
 
   test("null keys are dropped on both sides, never planted or probed") {

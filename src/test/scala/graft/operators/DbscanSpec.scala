@@ -61,7 +61,7 @@ class DbscanSpec extends SparkTestBase {
 
   test("a planted self-pair cannot promote a border point to core") {
     // 1-2-3 chain at minPts=2: 1 has degree 1 -> border of {2,3}'s
-    // cluster. A self-pair (1,1) from an arbitrary SQL pair table would
+    // cluster. A self-pair (1,1) from an arbitrary pair table would
     // add 2 to 1's doubled-edge degree (3 >= 2) and silently flip it to
     // core; the src =!= dst filter must drop it. Null endpoints are also
     // planted to pin the same defensive filter.
@@ -72,18 +72,6 @@ class DbscanSpec extends SparkTestBase {
     assert(got(1L) == (("border", Some(2L))), s"self-pair inflated a degree: $got")
     assert(got(2L) == (("core", Some(2L))))
     assert(got(3L) == (("border", Some(2L))))
-    // and the SQL table function agrees (mirrored id_a <> id_b filter)
-    import spark.implicits._
-    graft.GraftTableFunctions.all.foreach { case (ident, info, builder) =>
-      spark.sessionState.tableFunctionRegistry.registerFunction(ident, info, builder)
-    }
-    Seq(1L, 2L, 3L).toDF("id").createOrReplaceTempView("dbscan_selfpair_pts")
-    Seq((1L, 2L), (2L, 3L), (1L, 1L)).toDF("id_a", "id_b")
-      .createOrReplaceTempView("dbscan_selfpair_pairs")
-    val viaSql = spark.sql(
-      "SELECT * FROM graft_dbscan('dbscan_selfpair_pts', 'id', 'dbscan_selfpair_pairs', 'id_a', 'id_b', 2)")
-      .as[(Long, String, Option[Long])].collect().map(r => r._1 -> ((r._2, r._3))).toMap
-    assert(viaSql == got)
   }
 
   test("minPts=1 makes every endpoint of any edge core") {
@@ -118,21 +106,6 @@ class DbscanSpec extends SparkTestBase {
       s"stored=$storedEdges new=$newEdges full=$full")
     assert(newEdges.forall { case (a, b) => a % 2 == 1 || b % 2 == 1 },
       "an increment edge must touch the increment")
-  }
-
-  test("graft_dbscan SQL table function equals the Column API") {
-    graft.GraftTableFunctions.all.foreach { case (ident, info, builder) =>
-      spark.sessionState.tableFunctionRegistry.registerFunction(ident, info, builder)
-    }
-    Seq(1L, 2L, 3L, 4L, 9L).toDF("id").createOrReplaceTempView("dbscan_pts_v")
-    Seq((1L, 2L), (2L, 3L), (3L, 4L)).toDF("id_a", "id_b")
-      .createOrReplaceTempView("dbscan_pairs_v")
-    val sqlDf = spark.sql(
-      "SELECT * FROM graft_dbscan('dbscan_pts_v', 'id', 'dbscan_pairs_v', 'id_a', 'id_b', 2)")
-    val apiDf = Dbscan.fromPairs(spark.table("dbscan_pts_v"), "id",
-      spark.table("dbscan_pairs_v"), "id_a", "id_b", 2)
-    assert(sqlDf.orderBy("vid").collect().map(_.toString).toSeq ==
-      apiDf.orderBy("vid").collect().map(_.toString).toSeq)
   }
 
   test("rejects non-positive minPts") {

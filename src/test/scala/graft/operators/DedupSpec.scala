@@ -95,14 +95,18 @@ class DedupSpec extends SparkTestBase {
   }
 
   test("retainCanonical keeps the preferred member per cluster and all singletons") {
-    // clusters: {1,2,3} (chain via pairs), singleton {4}; quality = len
+    // clusters: {1,2,3} (chain via pairs), {10,11}, singleton {4};
+    // quality = len
     val d = Seq((1L, "short", 5L), (2L, "longest text", 12L), (3L, "medium!", 7L),
-      (4L, "alone", 5L)).toDF("doc_id", "text", "n_chars")
-    val pairs = Seq((1L, 2L), (2L, 3L)).toDF("id_a", "id_b")
+      (4L, "alone", 5L), (10L, "twin", 4L), (11L, "twin", 4L))
+      .toDF("doc_id", "text", "n_chars")
+    val pairs = Seq((1L, 2L), (2L, 3L), (10L, 11L)).toDF("id_a", "id_b")
     val kept = Dedup.retainCanonical(d, pairs, "doc_id",
         preference = Seq(col("n_chars").desc, col("doc_id")))
-      .select("doc_id").collect().map(_.getLong(0)).toSet
-    assert(kept === Set(2L, 4L), s"longest member + singleton, got $kept")
+      .select("doc_id").collect().map(_.getLong(0)).toSeq
+    // exactly one row per cluster: the longest member, the lower id on a
+    // quality tie, and the singleton
+    assert(kept.sorted === Seq(2L, 4L, 10L), s"one member per cluster, got $kept")
   }
 
   test("incremental candidates equal full-corpus candidates restricted to the increment") {
@@ -173,7 +177,7 @@ class DedupSpec extends SparkTestBase {
     val vDup = v.map(x => x * 1.001f)
     val vOther = Array.tabulate(16)(i => math.cos(3 * i + 2).toFloat)
     val d = Seq((1L, v.toSeq), (2L, vDup.toSeq), (3L, vOther.toSeq)).toDF("vec_id", "embedding")
-    val out = Dedup.embeddingNearDups(d, "embedding", "vec_id", threshold = 0.99)
+    val out = Dedup.embeddingNearDupsExact(d, "embedding", "vec_id", threshold = 0.99)
       .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
     assert(out === Set((1L, 2L)))
   }

@@ -4,7 +4,8 @@ import org.scalatest.funsuite.AnyFunSuite
 
 /** The pluggable frame-decode seam: MJPEG routes through the registered
   * built-in kernel; absent codecs quarantine as "no decoder registered";
-  * a registered external decoder drops in without touching the demux.
+  * an external decoder passed to the decode drops in without touching the
+  * demux.
   */
 class FrameDecoderSpec extends AnyFunSuite {
 
@@ -33,11 +34,9 @@ class FrameDecoderSpec extends AnyFunSuite {
       def decodeFrame(p: Array[Byte]) =
         Some(MediaCodecs.PpmInfo(1, 1, 128.0, 128.0, 128.0, 128.0))
     }
-    FrameDecoder.register(Gray)
-    assert(FrameDecoder.forCodec("fake").contains(Gray))
-    val via = MediaCodecs.decodeAviMjpeg(sampleAvi, FrameDecoder.forCodec("FAKE"))
+    val via = MediaCodecs.decodeAviMjpeg(sampleAvi, Some(Gray))
     assert(via.isDefined && via.get.nFrames === 4 && via.get.width === 1,
-      "frame payloads must route through the registered decoder")
+      "frame payloads must route through the passed decoder")
     // a decoder rejecting any frame quarantines the whole asset
     object Reject extends FrameDecoder {
       val codecs = Set("REJ")

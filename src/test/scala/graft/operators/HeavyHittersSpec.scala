@@ -151,21 +151,6 @@ class HeavyHittersSpec extends SparkTestBase {
     assert(got == Seq(("de", "der", 2L, 1L), ("en", "the", 4L, 1L)), got.toString)
   }
 
-  test("graft_heavy_hitters SQL table function equals the Column API") {
-    graft.GraftTableFunctions.all.foreach { case (ident, info, builder) =>
-      spark.sessionState.tableFunctionRegistry.registerFunction(ident, info, builder)
-    }
-    Seq((1L, "the the the miss"), (2L, "the quick")).toDF("doc_id", "text")
-      .createOrReplaceTempView("hh_docs_v")
-    // two ofText invocations can never be sameResult (each plants its own
-    // localCheckpoint) — the contract here is output equality
-    val sqlRows = spark.sql("SELECT * FROM graft_heavy_hitters('hh_docs_v', 'text', 2)")
-      .orderBy("rank").collect().map(_.toString).toSeq
-    val apiRows = HeavyHitters.ofText(spark.table("hh_docs_v"), "text", 2)
-      .orderBy("rank").collect().map(_.toString).toSeq
-    assert(sqlRows == apiRows && sqlRows.nonEmpty, s"sql=$sqlRows api=$apiRows")
-  }
-
   test("the per-(seg,tok)-unique input contract is load-bearing") {
     // one segment, alpha 30 of 40 (heavy at k=3): as ONE row the filter
     // sees it; split into 30 unit sub-rows every piece is below the

@@ -63,23 +63,6 @@ class PhraseMatchSpec extends SparkTestBase {
     assert(got == Set(2L, 3L), got.toString)
   }
 
-  test("graft_phrase_match SQL table function equals the Column API") {
-    graft.GraftTableFunctions.all.foreach { case (ident, info, builder) =>
-      spark.sessionState.tableFunctionRegistry.registerFunction(ident, info, builder)
-    }
-    Seq((1L, "scan the table"), (2L, "no hits")).toDF("doc_id", "text")
-      .createOrReplaceTempView("pm_docs_v")
-    // mapPartitions closures are never sameResult across invocations —
-    // the contract here is output equality (csv patterns trimmed)
-    val sqlRows = spark.sql(
-        "SELECT * FROM graft_phrase_match('pm_docs_v', 'text', 'doc_id', 'scan, an')")
-      .orderBy("doc_id", "pat").collect().map(_.toString).toSeq
-    val apiRows = PhraseMatch.matchCounts(spark.table("pm_docs_v"), "text", "doc_id",
-        Seq("scan", "an"))
-      .orderBy("doc_id", "pat").collect().map(_.toString).toSeq
-    assert(sqlRows == apiRows && sqlRows.nonEmpty, s"sql=$sqlRows api=$apiRows")
-  }
-
   test("rejects empty, null, and (case-insensitively) duplicate patterns") {
     intercept[IllegalArgumentException] { PhraseMatch.buildAutomaton(Nil) }
     intercept[IllegalArgumentException] { PhraseMatch.buildAutomaton(Seq("a", "")) }

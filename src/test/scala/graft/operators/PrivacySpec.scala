@@ -21,31 +21,17 @@ class PrivacySpec extends SparkTestBase {
     assert(got(("FR", "A")) === ((3L, 1L)))
   }
 
-  test("suppression keeps exactly the rows of >= k classes; the survivor set is k-anonymous") {
-    val out = Privacy.suppressBelowK(fixture, Seq("country", "segment"), k = 3)
-    assert(out.count() === 10)
-    val kept = out.where(col("__keep") === 1L)
-    assert(kept.count() === 8)
-    assert(kept.where(col("segment") === "B").count() === 0)
-    // re-auditing the survivors finds no below-k class
-    val reaudit = Privacy.kAnonymityClasses(kept.drop("__keep"),
-      Seq("country", "segment"), k = 3)
-    assert(reaudit.where(col("anonymous") === 0L).count() === 0)
-  }
-
-  test("a null quasi combination is its own class and gets judged (null-safe join)") {
+  test("a null quasi combination is its own class and gets judged") {
     val withNulls = fixture.unionByName(
       Seq((11, null.asInstanceOf[String], "A"), (12, null.asInstanceOf[String], "A"))
         .toDF("id", "country", "segment"))
-    val out = Privacy.suppressBelowK(withNulls, Seq("country", "segment"), k = 2)
-    val nullRows = out.where(col("country").isNull).collect()
-    assert(nullRows.length === 2)
-    // the two (null, "A") rows form a size-2 class: kept at k=2, and
-    // crucially NOT left with a null verdict by the join
-    nullRows.foreach(r => assert(r.getAs[Long]("__keep") === 1L))
-    val out3 = Privacy.suppressBelowK(withNulls, Seq("country", "segment"), k = 3)
-    out3.where(col("country").isNull).collect()
-      .foreach(r => assert(r.getAs[Long]("__keep") === 0L))
+    def nullClass(k: Int) = Privacy.kAnonymityClasses(withNulls, Seq("country", "segment"), k)
+      .where(col("country").isNull).collect()
+      .map(r => (r.getString(1), r.getLong(2), r.getLong(3))).toSeq
+    // the two (null, "A") rows form one size-2 class: anonymous at k=2,
+    // not at k=3, and never left without a verdict
+    assert(nullClass(2) === Seq(("A", 2L, 1L)))
+    assert(nullClass(3) === Seq(("A", 2L, 0L)))
   }
 
   test("l-diversity flags the homogeneous class k-anonymity would pass") {

@@ -29,6 +29,12 @@ class ProfileSpec extends SparkTestBase {
     assert(out.getLong(1) === 4L && out.getLong(2) === 1L)
     // HLL on 2 distincts is exact in practice
     assert(out.getLong(3) === 2L)
+    // the approx form swaps in HLL: it must NOT plan the multi-distinct
+    // Expand the exact form needs
+    val plan = Profile.profile(df, Seq("s", "v"), exact = false)
+      .queryExecution.executedPlan.toString
+    assert(!plan.contains("Expand"),
+      s"approx profile regressed to the Expand multi-distinct plan:\n$plan")
   }
 
   test("profile plans a single scan of the input") {

@@ -103,18 +103,6 @@ class SamplingSpec extends SparkTestBase {
       s"expected partial+final WindowGroupLimit pair, plan:\n$plan")
   }
 
-  test("salted quota equals the plain formulation row-for-row") {
-    val pref = Seq(col("n_chars").desc, col("doc_id"))
-    val plain = Sampling.quotaPerGroup(docs, "source", 7, pref)
-    val salted = Sampling.quotaPerGroupSalted(docs, "source", 7, pref,
-      saltKey = col("doc_id"), salts = 5)
-    assert(plain.exceptAll(salted).isEmpty && salted.exceptAll(plain).isEmpty)
-    // also under different input partitioning
-    val salted2 = Sampling.quotaPerGroupSalted(docs.repartition(11), "source", 7, pref,
-      saltKey = col("doc_id"), salts = 5)
-    assert(plain.exceptAll(salted2).isEmpty && salted2.exceptAll(plain).isEmpty)
-  }
-
   test("weightedSample key matches the A-ES formula computed independently") {
     import spark.implicits._
     val d = Seq((1L, 100L), (2L, 200L), (3L, 50L)).toDF("id", "w")

@@ -34,17 +34,6 @@ class SimilaritySpec extends SparkTestBase {
     assert(!top.exists(_.getAs[Long]("neighbor_id") == 0L), "self excluded")
   }
 
-  test("LSH top-k: every returned neighbor's sim matches brute-force's sim for that pair") {
-    val emb = spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet").limit(200)
-    val queries = emb.where(pmod(col("vec_id"), lit(40)) === 0)
-    val lsh = Similarity.lshTopK(queries, emb, "embedding", "vec_id", k = 3, planes = 4)
-    // LSH is approximate: assert structure + that it returns a reasonable
-    // candidate set (some query finds at least one bucket-mate).
-    val rows = lsh.collect()
-    assert(rows.forall(_.getAs[Long]("rank") <= 3L))
-    assert(rows.nonEmpty, "planes=4 → 16 buckets over 200 vecs must produce collisions")
-  }
-
   test("deterministic sign-plane LSH buckets collide and rank correctly") {
     val emb = spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet").limit(200)
     val queries = emb.where(pmod(col("vec_id"), lit(40)) === 0)
@@ -127,43 +116,21 @@ class SimilaritySpec extends SparkTestBase {
     assert(served(incremental) === oneShot)
   }
 
-  test("refineCentroids moves centroids toward list means and preserves count") {
-    val emb = spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet").limit(100)
-    val cents = emb.orderBy("vec_id").limit(4)
-      .select(col("vec_id").as("__cid"), col("embedding").as("__cv"))
-    val refined = Similarity.refineCentroids(emb, cents, "embedding")
-    val rows = refined.collect()
-    assert(rows.length === 4)
-    assert(rows.forall(_.getSeq[Float](1).length === 64))
-    // refinement is deterministic
-    val again = Similarity.refineCentroids(emb, cents, "embedding").collect()
-    assert(rows.map(r => (r.getLong(0), r.getSeq[Float](1))).toMap ===
-      again.map(r => (r.getLong(0), r.getSeq[Float](1))).toMap)
-  }
-
-  test("k-means-refined centroids do not lose IVF recall@5, and training is measured") {
-    // deterministic end to end: seeds are the lowest-id vectors, Lloyd
-    // refinement is a pure function of the corpus — no RNG anywhere
+  test("IVF recall@5 over seeded lists stays above its floor") {
+    // deterministic end to end: seeds are the lowest-id vectors — no RNG
+    // anywhere
     val emb = spark.read.parquet("/root/testdata/sf0.01/embeddings.parquet")
     val queries = emb.where(pmod(col("vec_id"), lit(10)) === 0)
     def asSet(df: org.apache.spark.sql.DataFrame) = df.collect()
       .map(r => (r.getAs[Long]("query_id"), r.getAs[Long]("neighbor_id"))).toSet
     val truth = asSet(Similarity.bruteForceTopK(queries, emb, "embedding", "vec_id", 5))
-    def recall(found: Set[(Long, Long)]) = (found & truth).size.toDouble / truth.size
     val seeds = Similarity.seedCentroids(emb, "embedding", "vec_id", 8)
-    val untrained = recall(asSet(
-      Similarity.ivfTopKWithCentroids(queries, emb, "embedding", "vec_id", 5, seeds, numProbe = 2)))
-    val trained3 = (1 to 3).foldLeft(seeds)((c, _) =>
-      Similarity.refineCentroids(emb, c, "embedding").localCheckpoint(true))
-    val trained = recall(asSet(
-      Similarity.ivfTopKWithCentroids(queries, emb, "embedding", "vec_id", 5, trained3, numProbe = 2)))
-    info(f"recall@5: untrained=$untrained%.3f trained=$trained%.3f")
-    // the whole measurement is deterministic (no RNG), so the strict
-    // improvement is a stable assertion, not a flaky one: measured
-    // 0.436 -> 0.472 at numProbe=2 of 8 lists
-    assert(trained > untrained,
-      f"3 Lloyd iterations must improve recall: $trained%.3f <= $untrained%.3f")
-    assert(trained > 0.4, f"trained recall@5 implausibly low: $trained%.3f")
+    val found = asSet(
+      Similarity.ivfTopKWithCentroids(queries, emb, "embedding", "vec_id", 5, seeds, numProbe = 2))
+    val recall = (found & truth).size.toDouble / truth.size
+    info(f"recall@5 (numProbe=2 of 8 seeded lists): $recall%.3f")
+    // measured 0.436; the measurement has no RNG, so the floor is stable
+    assert(recall > 0.4, f"IVF recall@5 implausibly low: $recall%.3f")
   }
 
   test("pqTopK ADC recall@5 vs exact L2 is deterministic and above floor") {
@@ -205,13 +172,6 @@ class SimilaritySpec extends SparkTestBase {
     val again = Similarity.pqTopK(queries, emb, "embedding", "vec_id", k = 5)
       .collect().map(r => (r.getAs[Long]("query_id"), r.getAs[Long]("neighbor_id"))).toSet
     assert(pq === again)
-  }
-
-  test("hyperplane bucket is deterministic") {
-    val emb = spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet").limit(50)
-    val b1 = emb.select(col("vec_id"), Similarity.hyperplaneBucket(col("embedding"), 8).as("b")).collect()
-    val b2 = emb.select(col("vec_id"), Similarity.hyperplaneBucket(col("embedding"), 8).as("b")).collect()
-    assert(b1.map(r => (r.getLong(0), r.getLong(1))).toSet === b2.map(r => (r.getLong(0), r.getLong(1))).toSet)
   }
 
   test("hard negatives: top-k by similarity strictly among OTHER labels") {

@@ -341,22 +341,6 @@ class SuffixDedupSpec extends SparkTestBase {
     assert(got(11L) === ((2L, 0L, "too short")))
   }
 
-  test("graft_longest_dup SQL table function plans as the Column API") {
-    graft.GraftTableFunctions.all.foreach { case (ident, info, builder) =>
-      spark.sessionState.tableFunctionRegistry.registerFunction(ident, info, builder)
-    }
-    corpus.toDF("doc_id", "text").createOrReplaceTempView("docs_tf_sfx_v")
-    val sqlDf = spark.sql(
-      s"SELECT * FROM graft_longest_dup('docs_tf_sfx_v', 'text', 'doc_id', $minLen, $depth)")
-    val apiDf = SuffixDedup.longestDupPerDoc(
-      spark.table("docs_tf_sfx_v"), "text", "doc_id", minLen, depth)
-    assert(sqlDf.queryExecution.optimizedPlan
-        .sameResult(apiDf.queryExecution.optimizedPlan),
-      "SQL longest_dup must plan as the Column API")
-    assert(sqlDf.orderBy("doc_id").collect().map(_.toString).toSeq ===
-      apiDf.orderBy("doc_id").collect().map(_.toString).toSeq)
-  }
-
   test("suffix rows emit only candidate starts with >= minLen tokens, depth-truncated") {
     val df = Seq((1L, "a b c d e")).toDF("doc_id", "text")
     val rows = SuffixDedup.suffixRows(df, "text", "doc_id", minLen = 2, depth = 3)

@@ -78,7 +78,7 @@ class UnigramLmSpec extends SparkTestBase {
       .toDF("doc_id", "text")
     val t = UnigramLm.train(docs, "text", maxPieceLen = 3, seedSize = 6, iters = 2)
       .collect()
-    val seedPieces = UnigramLm.seedCounts(docs, "text", 3, 6)
+    val seedPieces = UnigramLm.seedCounts(WordPiece.substringCounts(docs, "text", 3), 6)
       .select("piece").as[String].collect().toSet
     assert(t.map(_.getString(0)).toSet == seedPieces)
     assert(t.forall(_.getLong(1) >= 1L))

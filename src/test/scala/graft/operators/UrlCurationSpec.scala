@@ -4,8 +4,8 @@ import graft.SparkTestBase
 import org.apache.spark.sql.functions._
 
 /** UrlCuration semantics pins: normalization on handwritten nasty URLs,
-  * registered-domain extraction across the PSL subset, the quota and
-  * drift compositions, and SQL==Column planning for graft_domain_quota.
+  * registered-domain extraction across the PSL subset, and the quota and
+  * drift compositions.
   */
 class UrlCurationSpec extends SparkTestBase {
   import spark.implicits._
@@ -72,24 +72,5 @@ class UrlCurationSpec extends SparkTestBase {
     assert(same.getAs[Double]("js_divergence") === 0.0)
     val disj = UrlCuration.domainMixDrift(a, b, "url").collect().head
     assert(math.abs(disj.getAs[Double]("js_divergence") - math.log(2)) < 1e-6)
-  }
-
-  test("graft_domain_quota SQL table function plans as the Column API") {
-    graft.GraftTableFunctions.all.foreach { case (ident, info, builder) =>
-      spark.sessionState.tableFunctionRegistry.registerFunction(ident, info, builder)
-    }
-    val rows = (1 to 30).map(i =>
-      (i.toLong, s"http://www.s${i % 3}.example.co.uk/p$i", 500L + i))
-    rows.toDF("doc_id", "url", "n_chars").createOrReplaceTempView("docs_tf_dq_v")
-    val sqlDf = spark.sql(
-      "SELECT * FROM graft_domain_quota('docs_tf_dq_v', 'url', 5, 'n_chars', 'doc_id')")
-    val apiDf = UrlCuration.domainQuota(spark.table("docs_tf_dq_v"), "url", 5,
-      Seq(col("n_chars").desc, col("doc_id")))
-    assert(sqlDf.queryExecution.optimizedPlan
-        .sameResult(apiDf.queryExecution.optimizedPlan),
-      "SQL domain_quota must plan as the Column API")
-    assert(sqlDf.orderBy("doc_id").collect().map(_.toString).toSeq ===
-      apiDf.orderBy("doc_id").collect().map(_.toString).toSeq)
-    assert(sqlDf.count() === 5)
   }
 }

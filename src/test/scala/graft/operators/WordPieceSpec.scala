@@ -150,21 +150,6 @@ class WordPieceSpec extends SparkTestBase {
     assert(got == Map("x" -> 3L, "y" -> 3L, "z" -> 5L))
   }
 
-  test("graft_wordpiece_vocab SQL table function plans as the Column API") {
-    graft.GraftTableFunctions.all.foreach { case (ident, info, builder) =>
-      spark.sessionState.tableFunctionRegistry.registerFunction(ident, info, builder)
-    }
-    Seq((1L, "ab ab cd")).toDF("doc_id", "text").createOrReplaceTempView("wp_docs_v")
-    val sqlDf = spark.sql(
-      "SELECT * FROM graft_wordpiece_vocab('wp_docs_v', 'text', 2, 3)")
-    val apiDf = WordPiece.induceVocab(spark.table("wp_docs_v"), "text", 2, 3)
-    assert(sqlDf.queryExecution.optimizedPlan
-        .sameResult(apiDf.queryExecution.optimizedPlan),
-      "SQL wordpiece_vocab must plan as the Column API")
-    assert(sqlDf.orderBy("rank").collect().map(_.toString).toSeq ==
-      apiDf.orderBy("rank").collect().map(_.toString).toSeq)
-  }
-
   test("rejects non-positive parameters") {
     val df = Seq("x").toDF("text")
     intercept[IllegalArgumentException] { WordPiece.substringCounts(df, "text", 0) }
